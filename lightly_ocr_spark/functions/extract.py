@@ -13,9 +13,10 @@ CRNN.process, chained in `pipeline.py:65-87`), recast for webtext:
   product of member-block densities (`net.py:190`).
 
 The kernel is *batch-at-a-time*: `extract_batch` consumes a pandas Series of
-html byte strings (one Arrow record batch) and returns a pandas DataFrame —
-the contract of a vectorized pandas UDF.  Per-document work happens in
-compiled-regex scans (C speed); there is no per-row Python in the Spark plan.
+page byte strings (one Arrow record batch; PDF rows routed by magic) and
+returns a pandas DataFrame — the contract of a vectorized pandas UDF.
+Per-document work happens in compiled-regex scans (C speed); there is no
+per-row Python in the Spark plan.
 
 Spec constants live in `lightly_ocr_spark.contract`; an independent
 step-by-step implementation of the same spec lives in
@@ -25,7 +26,6 @@ step-by-step implementation of the same spec lives in
 
 from __future__ import annotations
 
-import hashlib
 import html as _html
 import re
 import unicodedata
@@ -58,6 +58,7 @@ from lightly_ocr_spark.contract import (
     decode_page_bytes,
     segment_score,
 )
+from lightly_ocr_spark.functions.pdf import PDF_MAGIC, extract_pdf_text
 
 __all__ = ["Block", "Span", "ExtractResult", "tokenize_blocks", "extract_text", "extract_batch"]
 
@@ -365,8 +366,28 @@ def extract_text(raw_html: bytes | None, subspans: bool = False) -> ExtractResul
     )
 
 
+def _pdf_spans(text: str) -> tuple[list[int], list[int]]:
+    """PDF span (start, end) lists: one span per output line, offsets into
+    the OUTPUT text — a PDF's source offsets are meaningless after
+    FlateDecode inflation, unlike HTML's D9 source remap."""
+    starts: list[int] = []
+    ends: list[int] = []
+    off = 0
+    if text:
+        for line in text.split("\n"):
+            starts.append(off)
+            ends.append(off + len(line))
+            off += len(line) + 1
+    return starts, ends
+
+
 def extract_batch(html: pd.Series) -> pd.DataFrame:
     """Arrow-batch entry point: Series[bytes] -> DataFrame of outputs.
+
+    Each row is routed on its leading bytes: `PDF_MAGIC` payloads go
+    through `extract_pdf_text` (spans per `_pdf_spans`, score 1.0 — the
+    decode is deterministic, there is no density confidence to propagate),
+    everything else through the fused HTML pass.
 
     Spans come back as three parallel arrays so Spark can zip them JVM-side
     into `array<struct<start,end,score>>` without nested-Arrow round-trips.
@@ -376,15 +397,24 @@ def extract_batch(html: pd.Series) -> pd.DataFrame:
     ends: list[list[int]] = []
     scores: list[list[float]] = []
     n_blocks: list[int] = []
-    shas: list[str] = []
     for raw in html:
-        res = extract_text(raw)
-        texts.append(res.text)
-        starts.append([s.start for s in res.spans])
-        ends.append([s.end for s in res.spans])
-        scores.append([s.score for s in res.spans])
-        n_blocks.append(res.n_blocks)
-        shas.append(hashlib.sha256(res.text.encode("utf-8")).hexdigest())
+        if raw is not None and bytes(raw[:5]) == PDF_MAGIC:
+            text = extract_pdf_text(raw)
+            st, en = _pdf_spans(text)
+            sc = [1.0] * len(st)
+            nb = len(st)
+        else:
+            res = extract_text(raw)
+            text = res.text
+            st = [s.start for s in res.spans]
+            en = [s.end for s in res.spans]
+            sc = [s.score for s in res.spans]
+            nb = res.n_blocks
+        texts.append(text)
+        starts.append(st)
+        ends.append(en)
+        scores.append(sc)
+        n_blocks.append(nb)
     return pd.DataFrame(
         {
             "text": pd.Series(texts, dtype="object"),
@@ -392,6 +422,5 @@ def extract_batch(html: pd.Series) -> pd.DataFrame:
             "span_ends": pd.Series(ends, dtype="object"),
             "span_scores": pd.Series(scores, dtype="object"),
             "n_blocks": pd.Series(n_blocks, dtype="int32"),
-            "extract_sha256": pd.Series(shas, dtype="object"),
         }
     )

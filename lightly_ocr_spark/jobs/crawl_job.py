@@ -73,15 +73,16 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lightly_ocr_spark.operators.dedup import (
     incremental_exact_dedup,
+    newest_per_url,
     write_fingerprint_index,
 )
 from lightly_ocr_spark.operators.extract_udf import extract_pages
-from lightly_ocr_spark.schemas import PAGES_SCHEMA
+from lightly_ocr_spark.sources import read_pages
 
 MANIFEST_DIR = "_manifests"
 MIN_TOKENS = 10
@@ -138,15 +139,7 @@ def process_pages_batch(
     extracted = extract_pages(pages, keep_empty=False).select(
         "url", "warc_ts", "text", "n_blocks", "extract_sha256"
     )
-    # url-revisit dedup: a crawl legally re-fetches a url; keeper = newest
-    wu = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").desc_nulls_last(), "extract_sha256"
-    )
-    one_per_url = (
-        extracted.withColumn("_rn", F.row_number().over(wu))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    one_per_url = newest_per_url(extracted)
     # intra-batch + cross-batch exact dedup; commit=False — THIS job owns
     # the append so it can gate it on the corpus commit.  The eager
     # localCheckpoint freezes the survivor rows: both the corpus write and
@@ -263,18 +256,6 @@ def process_pages_batch(
     return manifest
 
 
-def _read_batch(spark: SparkSession, path: str, input_format: str):
-    if input_format == "warc":
-        from lightly_ocr_spark.sources.warc import warc_pages
-
-        return warc_pages(spark, path)
-    if input_format == "jsonl":
-        from lightly_ocr_spark.sources.jsonl import read_jsonl_pages
-
-        return read_jsonl_pages(spark, path)
-    return spark.read.schema(PAGES_SCHEMA).parquet(path)
-
-
 def run_crawl_batch(
     spark: SparkSession,
     input_path: str,
@@ -291,7 +272,7 @@ def run_crawl_batch(
     becomes a new batch."""
     if batch_id is None:
         batch_id = os.path.basename(os.path.normpath(input_path))
-    pages = _read_batch(spark, input_path, input_format)
+    pages = read_pages(spark, input_path, input_format)
     return process_pages_batch(
         spark, pages, out_dir, index_path, batch_id, min_tokens=min_tokens,
         input_desc=f"{input_format}:{os.path.abspath(input_path)}",

@@ -32,10 +32,11 @@ from lightly_ocr_spark.operators.dedup import (
     MINHASH_BANDS as BANDS,
     MINHASH_K,
     minhash_signatures,
+    newest_per_url,
 )
 from lightly_ocr_spark.operators.enrich import enrich_pages
 from lightly_ocr_spark.operators.extract_udf import extract_pages
-from lightly_ocr_spark.schemas import PAGES_SCHEMA
+from lightly_ocr_spark.sources import read_pages
 
 MIN_TOKENS = 10
 NEAR_DUP_MIN_AGREEMENT = 0.5
@@ -184,17 +185,9 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     obs_in = Observation("curate-input")
     obs_ex = Observation("curate-extracted")
     obs_cur = Observation("curate-out")
-    if input_format == "warc":
-        from lightly_ocr_spark.sources.warc import warc_pages
-
-        raw_pages = warc_pages(spark, pages_path)
-    elif input_format == "jsonl":
-        from lightly_ocr_spark.sources.jsonl import read_jsonl_pages
-
-        raw_pages = read_jsonl_pages(spark, pages_path)
-    else:
-        raw_pages = spark.read.schema(PAGES_SCHEMA).parquet(pages_path)
-    pages = raw_pages.observe(obs_in, F.count(F.lit(1)).alias("n"))
+    pages = read_pages(spark, pages_path, input_format).observe(
+        obs_in, F.count(F.lit(1)).alias("n")
+    )
 
     extracted = extract_pages(pages, keep_empty=False).select(
         "url", "warc_ts", "text", "n_blocks", "extract_sha256"
@@ -202,19 +195,10 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
 
     from pyspark import StorageLevel
 
-    # url-revisit dedup FIRST: a crawl legally re-fetches the same url
-    # (WARC revisit records); downstream stages assume url is a key —
+    # url-revisit dedup FIRST: downstream stages assume url is a key —
     # duplicate urls would merge minhash tokens into one bogus signature
-    # and multiply rows through the enrichment join.  Keeper = newest
-    # fetch (warc_ts desc), content hash as the deterministic tiebreak.
-    wu = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").desc_nulls_last(), "extract_sha256"
-    )
-    one_per_url = (
-        extracted.withColumn("rn", F.row_number().over(wu))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    # and multiply rows through the enrichment join
+    one_per_url = newest_per_url(extracted)
 
     # exact dedup: keeper = min(url) per content hash (one shuffle)
     w = Window.partitionBy("extract_sha256").orderBy("url")

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.schemas import PAGES_SCHEMA
+from lightly_ocr_spark.sources import read_pages
 
 MANIFEST_DIR = "_manifests"
 
@@ -127,17 +128,7 @@ def run_extract(
                 )
             return None
         t0 = time.time()
-        if input_format == "warc":
-            # CC front door: archives -> pages rows, file-parallel explode
-            from lightly_ocr_spark.sources.warc import warc_pages
-
-            pages = warc_pages(spark, files)
-        elif input_format == "jsonl":
-            from lightly_ocr_spark.sources.jsonl import read_jsonl_pages
-
-            pages = read_jsonl_pages(spark, files)
-        else:
-            pages = spark.read.schema(PAGES_SCHEMA).parquet(*files)
+        pages = read_pages(spark, files, input_format)
         # skew salting: spread any hot host across all partitions
         # (north_rule).  Extraction itself is row-local (input splits are
         # byte-uniform), so --no-salt skips the shuffle when no downstream

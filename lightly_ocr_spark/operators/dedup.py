@@ -10,12 +10,11 @@ Python row loops):
 * minhash   — k independent min-hashes (xxhash64 salted per seed) banded
               into LSH buckets; candidate pairs only ever materialize within
               a bucket, which is the scale path for 10^12 docs.
-* simhash   — 64-bit sign-vote fingerprint; near-dups differ in few bits.
+* simhash   — 64 sign votes over per-token md5 digit bits (`simhash_md5`);
+              near-dups differ in few bits.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -25,7 +24,6 @@ from lightly_ocr_spark.plans.relational import load, spread
 
 MINHASH_K = 32          # signature length
 MINHASH_BANDS = 8       # 8 bands x 4 rows
-SIM_BITS = 64
 
 
 def lower_words(text_col="text") -> F.Column:
@@ -119,6 +117,20 @@ def exact_dups(spark: SparkSession, sf: str) -> DataFrame:
             F.min("doc_id").alias("keeper"),
         )
         .filter(F.col("n_copies") > 1)
+    )
+
+
+def newest_per_url(df: DataFrame) -> DataFrame:
+    """url-revisit dedup: a crawl legally re-fetches the same url (WARC
+    revisit records).  Keeper = newest fetch (warc_ts desc, nulls last),
+    `extract_sha256` as the deterministic tiebreak."""
+    w = Window.partitionBy("url").orderBy(
+        F.col("warc_ts").desc_nulls_last(), "extract_sha256"
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
     )
 
 
@@ -370,43 +382,16 @@ def minhash_pairs_md5(
     return _pairs_from_stacked(stacked)
 
 
-def simhash(df: DataFrame) -> DataFrame:
-    """doc_id -> 64-bit SimHash: per-bit sign votes over token hashes."""
-    toks = _tokens(df).withColumn("h", F.xxhash64("tok"))
-    votes = [
-        F.sum(
-            (F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) * 2 - 1)
-        ).alias(f"v{i}")
-        for i in range(SIM_BITS)
-    ]
-    per_doc = toks.groupBy("doc_id").agg(*votes)
-    bit_terms = [
-        F.when(F.col(f"v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i))
-        .otherwise(F.lit(0).cast("long"))
-        for i in range(SIM_BITS)
-    ]
-    return per_doc.select(
-        "doc_id", reduce(lambda a, b: a.bitwiseOR(b), bit_terms).alias("simhash")
-    )
-
-
-def simhash_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
-    return simhash(spread(load(spark, sf, "documents")
-                          .select("doc_id", "text")))
-
-
 def simhash_md5(df: DataFrame) -> DataFrame:
     """64-bit SimHash with PORTABLE bit votes: per-token md5, one vote per
     hex digit bit — (doc_id, simhash_hex) where simhash_hex[j] encodes the
     sign votes of md5-digit j's four bits (bit b of digit j = vote of
     token md5 digit j bit b; >0 -> 1, else 0).
 
-    Same locality semantics as `simhash` (xxhash64 bits are uniform and so
-    are md5 bits) but every step — md5, hex-digit extraction, bit shifts,
-    vote sums — is exact integer math DuckDB reproduces verbatim, so the
-    driver gate gets a full value-hash row instead of rows-only evidence.
-    The xxhash64 variant stays the engine fast path (one hash vs sixteen
-    digit extractions per token)."""
+    Near-dups differ in few bits.  Every step — md5, hex-digit extraction,
+    bit shifts, vote sums — is exact integer math DuckDB reproduces
+    verbatim, so the driver gate gets a full value-hash row instead of
+    rows-only evidence."""
     toks = _tokens(df).select("doc_id", F.md5("tok").alias("m"))
     digs = toks.select(
         "doc_id",
@@ -441,10 +426,9 @@ def simhash_md5(df: DataFrame) -> DataFrame:
 
 
 def simhash_md5_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
-    """Driver query: portable-bit SimHash over the documents table (the
-    oracled twin of `simhash_fingerprints`).  Scan `spread` (round 6):
-    sixteen digit extractions per token are per-row heavy and the
-    single-row-group scan otherwise runs them on one core."""
+    """Driver query: portable-bit SimHash over the documents table.  Scan
+    `spread` (round 6): sixteen digit extractions per token are per-row
+    heavy and the single-row-group scan otherwise runs them on one core."""
     return simhash_md5(spread(load(spark, sf, "documents")
                               .select("doc_id", "text")))
 

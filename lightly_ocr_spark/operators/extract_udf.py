@@ -9,7 +9,8 @@ JVM↔Python Arrow round-trip per batch (the CPU↔GPU copy analog,
 
 Span arrays come back as three parallel primitive arrays and are zipped into
 `array<struct<start,end,score>>` JVM-side (`arrays_zip` is codegen'd), so no
-nested structs cross the Arrow boundary.
+nested structs cross the Arrow boundary.  The content hash
+(`extract_sha256`) is likewise computed JVM-side from the returned text.
 """
 
 from __future__ import annotations
@@ -21,67 +22,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lightly_ocr_spark.functions.extract import extract_batch
-from lightly_ocr_spark.functions.pdf import PDF_MAGIC, extract_pdf_text
 from lightly_ocr_spark.schemas import EXTRACT_RAW_SCHEMA
-
-
-def _pdf_batch(payloads: pd.Series) -> pd.DataFrame:
-    """PDF rows -> the same columns extract_batch emits.
-
-    Span semantics for PDFs: one span per extracted text block, offsets
-    into the OUTPUT text (a PDF's source offsets are meaningless after
-    FlateDecode inflation, unlike HTML's D9 source remap); score 1.0 — the
-    decode is deterministic, there is no density confidence to propagate."""
-    import hashlib
-
-    texts, starts, ends, scores, n_blocks, shas = [], [], [], [], [], []
-    for raw in payloads:
-        text = extract_pdf_text(raw)
-        st: list[int] = []
-        en: list[int] = []
-        off = 0
-        if text:
-            for line in text.split("\n"):
-                st.append(off)
-                en.append(off + len(line))
-                off += len(line) + 1
-        texts.append(text)
-        starts.append(st)
-        ends.append(en)
-        scores.append([1.0] * len(st))
-        n_blocks.append(len(st))
-        shas.append(hashlib.sha256(text.encode("utf-8")).hexdigest())
-    return pd.DataFrame(
-        {
-            "text": pd.Series(texts, dtype="object"),
-            "span_starts": pd.Series(starts, dtype="object"),
-            "span_ends": pd.Series(ends, dtype="object"),
-            "span_scores": pd.Series(scores, dtype="object"),
-            "n_blocks": pd.Series(n_blocks, dtype="int32"),
-            "extract_sha256": pd.Series(shas, dtype="object"),
-        }
-    )
 
 
 def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        payloads = pdf["html"]
-        is_pdf = payloads.map(
-            lambda p: p is not None and bytes(p[:5]) == PDF_MAGIC
-        ).to_numpy(dtype=bool)
-        if is_pdf.any():
-            # route by magic, reassemble in input order (positional index)
-            parts = []
-            if (~is_pdf).any():
-                html_out = extract_batch(payloads[~is_pdf].reset_index(drop=True))
-                html_out.index = (~is_pdf).nonzero()[0]
-                parts.append(html_out)
-            pdf_out = _pdf_batch(payloads[is_pdf].reset_index(drop=True))
-            pdf_out.index = is_pdf.nonzero()[0]
-            parts.append(pdf_out)
-            out = pd.concat(parts).sort_index().reset_index(drop=True)
-        else:
-            out = extract_batch(payloads)
+        out = extract_batch(pdf["html"])
         out.insert(0, "url", pdf["url"].to_numpy())
         out.insert(1, "warc_ts", pdf["warc_ts"].to_numpy())
         yield out
@@ -106,7 +52,7 @@ def extract_pages(pages: DataFrame, keep_empty: bool = True) -> DataFrame:
             F.col("span_scores").alias("score"),
         ).alias("spans"),
         "n_blocks",
-        "extract_sha256",
+        F.sha2(F.encode("text", "utf-8"), 256).alias("extract_sha256"),
         F.spark_partition_id().alias("part_id"),
     )
     if not keep_empty:

@@ -75,29 +75,11 @@ def f1_length_filter(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def f2_charset_predicate(spark: SparkSession, sf: str) -> DataFrame:
-    """F2: charset row filter (dataset.py:151-154)."""
-    return (
-        load(spark, sf, "documents")
-        .filter(~F.col("text").rlike("[^a-z ]"))
-        .select("doc_id")
-    )
-
-
-def f3_charset_scrub(spark: SparkSession, sf: str) -> DataFrame:
-    """F3: charset projection scrub (dataset.py:190-191)."""
-    return load(spark, sf, "documents").select(
-        "doc_id",
-        F.regexp_replace("text", "[aeiou]", "").alias("scrubbed"),
-    )
-
-
 def f2_f3_charset_filter_scrub(spark: SparkSession, sf: str) -> DataFrame:
     """F2 + F3 in one plan: the charset row filter (dataset.py:151-154)
     gates the scan and the charset projection scrub (dataset.py:190-191)
     rides the same projection — one scan, both operators evidenced by one
-    driver row.  The standalone `f2_charset_predicate` /
-    `f3_charset_scrub` remain as library surface."""
+    driver row."""
     return (
         load(spark, sf, "documents")
         .filter(~F.col("text").rlike("[^a-z ]"))
@@ -129,15 +111,6 @@ def f7_validity_filter(spark: SparkSession, sf: str) -> DataFrame:
 
 # --- aggregates -------------------------------------------------------------
 
-def a1_streaming_mean(spark: SparkSession, sf: str) -> DataFrame:
-    """A1: Averager (recog_utils.py:122-142) -> avg per group."""
-    return (
-        load(spark, sf, "events")
-        .groupBy("event_type")
-        .agg(F.round(F.avg("value"), 6).alias("avg_value"))
-    )
-
-
 def _ntz_epoch_us(col) -> F.Column:
     """Naive-timestamp epoch micros: pure NTZ arithmetic against an NTZ
     epoch literal, so the value never depends on the session time zone
@@ -156,8 +129,7 @@ def a1_x2_json_event_stats(spark: SparkSession, sf: str) -> DataFrame:
     round 4's A3+A4): each original operator keeps its own output columns
     — avg_value (A1), p25/p50/p75 (X2, Spark `percentile` == DuckDB
     `quantile_cont` linear interpolation), n/sum_k/max_k (from_json over
-    the props payload) — while sharing one shuffle on event_type.  The
-    standalone query functions remain for direct use."""
+    the props payload) — while sharing one shuffle on event_type."""
     e = load(spark, sf, "events")
     k = F.from_json("props", "k INT").getField("k")
     return (
@@ -188,33 +160,11 @@ def a2_exact_match_accuracy(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def a3_running_max(spark: SparkSession, sf: str) -> DataFrame:
-    """A3: best-so-far gate (train/crnn.py:300-303)."""
-    return (
-        load(spark, sf, "events")
-        .groupBy("user_id")
-        .agg(F.round(F.max("value"), 6).alias("best_value"))
-    )
-
-
-def a4_count_sum(spark: SparkSession, sf: str) -> DataFrame:
-    """A4: counters (train/crnn.py:175-176)."""
-    return (
-        load(spark, sf, "events")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
-
-
 def a3_a4_count_sum_max(spark: SparkSession, sf: str) -> DataFrame:
     """A3 + A4 in one aggregation: counters (count/sum,
     train/crnn.py:175-176) and the best-so-far max gate
     (train/crnn.py:300-303) over the same groupBy — one shuffle carries
-    both operators' driver evidence.  The standalone `a3_running_max` /
-    `a4_count_sum` remain as library surface."""
+    both operators' driver evidence."""
     return (
         load(spark, sf, "events")
         .groupBy("event_type")
@@ -311,33 +261,12 @@ def j1_broadcast_join(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def j2_anti_join(spark: SparkSession, sf: str) -> DataFrame:
-    """J2: coverage anti-join (missing urls analog)."""
-    c = load(spark, sf, "customer")
-    o = load(spark, sf, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_mktsegment"
-    )
-
-
-def j3_semi_join(spark: SparkSession, sf: str) -> DataFrame:
-    """J3: EXISTS semi-join, counted per segment."""
-    c = load(spark, sf, "customer")
-    o = load(spark, sf, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_active"))
-    )
-
-
 def w1_window_topk(spark: SparkSession, sf: str) -> DataFrame:
     """W1 + D10 in one window: top-3 earliest events per user
     (reading-order window analog, net.py:108) with the deterministic
-    first-in-order element (D10's reading-order sort, net.py:108 /
-    `d10_reading_order`) carried as first_value columns over the SAME
-    window spec — one shuffle, one sort, both operators evidenced by one
-    driver row."""
+    first-in-order element (D10's reading-order sort, net.py:108)
+    carried as first_value columns over the SAME window spec — one
+    shuffle, one sort, both operators evidenced by one driver row."""
     # first_ts is emitted as epoch MICROS (bigint): timestamp COLLECTION
     # depends on the session time zone, and a query function must not
     # mutate session conf as a side effect (the pin would leak into every
@@ -408,8 +337,7 @@ def t1_u1_sort_union(spark: SparkSession, sf: str) -> DataFrame:
     """T1 + U1 in one tagged frame (round-5 window merge, the J2+J3
     discipline): the deterministic top-10 sort/limit and the
     union-distinct each contribute their rows under a `part` tag —
-    both operators' evidence in one driver row.  The standalone
-    `t1_sort_limit` / `u1_union_distinct` remain as library surface."""
+    both operators' evidence in one driver row."""
     t1 = t1_sort_limit(spark, sf).select(
         F.lit("t1").alias("part"),
         F.col("o_orderkey").cast("long").alias("k1"),
@@ -421,19 +349,6 @@ def t1_u1_sort_union(spark: SparkSession, sf: str) -> DataFrame:
         F.lit(None).cast("double").alias("v"),
     )
     return t1.unionByName(u1)
-
-
-def d10_reading_order(spark: SparkSession, sf: str) -> DataFrame:
-    """D10: deterministic first-in-order element per group.  The
-    timestamp is emitted as epoch micros — time-zone-independent, so the
-    function never mutates session conf (see w1_window_topk)."""
-    w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
-    return (
-        load(spark, sf, "events")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", _ntz_epoch_us(F.col("ts")).alias("ts_us"))
-    )
 
 
 def x1_approx_aggregates(spark: SparkSession, sf: str) -> DataFrame:
@@ -450,20 +365,6 @@ def x1_approx_aggregates(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def x2_exact_quantiles(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact interpolated quantiles per event type — the oracle-able
-    companion to x1 (Spark `percentile` and DuckDB `quantile_cont` share
-    linear-interpolation semantics, so rounded results hash-match).  At
-    scale exact quantiles are a full sort per group; x1's sketches are the
-    10^12-row path and this is the verification/spot-check path."""
-    e = load(spark, sf, "events")
-    return e.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.25)"), 6).alias("p25"),
-        F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-        F.round(F.expr("percentile(value, 0.75)"), 6).alias("p75"),
-    )
-
-
 def p1_pivot(spark: SparkSession, sf: str) -> DataFrame:
     """Pivot: per-user value sums by event type (guide pattern)."""
     types = ["click", "view", "purchase", "signup", "error"]
@@ -475,34 +376,12 @@ def p1_pivot(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def c1_cube(spark: SparkSession, sf: str) -> DataFrame:
-    """CUBE over (returnflag, linestatus) with counts."""
-    return (
-        load(spark, sf, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def r1_rollup(spark: SparkSession, sf: str) -> DataFrame:
-    """ROLLUP over (orderpriority, orderstatus) with sums."""
-    return (
-        load(spark, sf, "orders")
-        .rollup("o_orderpriority", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("o_totalprice"), 2).alias("total"),
-        )
-    )
-
-
 def c1_r1_grouping_sets(spark: SparkSession, sf: str) -> DataFrame:
     """C1 + R1 in one GROUPING SETS aggregation: the four sets of the
     (o_orderpriority, o_orderstatus) cube — a strict superset of the
     rollup's three — computed in one pass with grouping_id()
     disambiguating subtotal rows from real NULL groups.  One Expand +
-    one shuffle instead of two full scans; the standalone `c1_cube` /
-    `r1_rollup` remain as library surface."""
+    one shuffle instead of two full scans."""
     return (
         load(spark, sf, "orders")
         .groupingSets(
@@ -522,8 +401,7 @@ def j2_j3_semi_anti(spark: SparkSession, sf: str) -> DataFrame:
     """J2 + J3 in one plan: per-segment counts of customers WITH orders
     (left-semi / EXISTS) and WITHOUT (left-anti / NOT EXISTS), tagged and
     unioned — both join operators appear in a single driver row's physical
-    plan.  The standalone `j2_anti_join` / `j3_semi_join` remain as
-    library surface."""
+    plan."""
     c = load(spark, sf, "customer")
     o = load(spark, sf, "orders")
     active = (
@@ -628,22 +506,6 @@ def f9_cdc_merge(spark: SparkSession, sf: str) -> DataFrame:
     return merged.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("price2"), 2).alias("total_after"),
-    )
-
-
-def fn_json_extract(spark: SparkSession, sf: str) -> DataFrame:
-    """§2.7 JSON surface: from_json over the events.props payload, grouped
-    stats over the extracted field (manifest-rollup pattern)."""
-    e = load(spark, sf, "events")
-    k = F.from_json("props", "k INT").getField("k")
-    return (
-        e.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").cast("long").alias("sum_k"),
-            F.max("k").cast("int").alias("max_k"),
-        )
     )
 
 

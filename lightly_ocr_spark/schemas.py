@@ -46,6 +46,5 @@ EXTRACT_RAW_SCHEMA = T.StructType(
         T.StructField("span_ends", T.ArrayType(T.LongType(), False), False),
         T.StructField("span_scores", T.ArrayType(T.DoubleType(), False), False),
         T.StructField("n_blocks", T.IntegerType(), False),
-        T.StructField("extract_sha256", T.StringType(), False),
     ]
 )

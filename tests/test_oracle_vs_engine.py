@@ -12,6 +12,7 @@ import hashlib
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from lightly_ocr_spark.functions.extract import extract_batch, extract_text
 from lightly_ocr_spark.oracle import oracle_extract
@@ -34,15 +35,29 @@ class TestCorpusIdentity:
         for row in CORPUS:
             assert_identical(row["html"])
 
-    def test_golden_sha256(self):
-        # pages.text is the oracle golden; engine sha256 must match per url
+    @pytest.mark.spark
+    def test_golden_sha256(self, spark):
+        # pages.text is the oracle golden; engine text and the sha256 that
+        # extract_pages adds must match it per url
         import pandas as pd
 
-        html = pd.Series([r["html"] for r in CORPUS])
-        out = extract_batch(html)
-        for row, text, sha in zip(CORPUS, out["text"], out["extract_sha256"]):
+        from lightly_ocr_spark.operators.extract_udf import extract_pages
+
+        out = extract_batch(pd.Series([r["html"] for r in CORPUS]))
+        for row, text in zip(CORPUS, out["text"], strict=True):
             assert text == row["text"], row["url"]
-            assert sha == hashlib.sha256(row["text"].encode()).hexdigest()
+        pages = spark.createDataFrame(
+            [(r["url"], r["html"]) for r in CORPUS], "url string, html binary"
+        ).withColumn("warc_ts", F.lit(None).cast("timestamp"))
+        got = {
+            r["url"]: r["extract_sha256"]
+            for r in extract_pages(pages).select("url", "extract_sha256")
+            .collect()
+        }
+        assert len(got) == len(CORPUS)
+        for row in CORPUS:
+            want = hashlib.sha256(row["text"].encode()).hexdigest()
+            assert got[row["url"]] == want, row["url"]
 
     def test_corpus_is_deterministic(self):
         again = list(gen_pages(50))

@@ -49,10 +49,11 @@ class TestPlanShape:
         assert "BroadcastHashJoin" not in plan
 
     def test_anti_and_semi_join_strategies(self, spark):
-        from lightly_ocr_spark.plans.relational import j2_anti_join, j3_semi_join
+        from lightly_ocr_spark.plans.relational import j2_j3_semi_anti
 
-        assert "LeftAnti" in plan_of(j2_anti_join(spark, SF))
-        assert "LeftSemi" in plan_of(j3_semi_join(spark, SF))
+        plan = plan_of(j2_j3_semi_anti(spark, SF))
+        assert "LeftAnti" in plan
+        assert "LeftSemi" in plan
 
     def test_extract_is_single_python_stage_no_shuffle(self, spark):
         from lightly_ocr_spark.operators.extract_udf import extract_pages
