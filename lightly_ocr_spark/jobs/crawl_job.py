@@ -82,10 +82,10 @@ from lightly_ocr_spark.operators.dedup import (
     write_fingerprint_index,
 )
 from lightly_ocr_spark.operators.extract_udf import extract_pages
+from lightly_ocr_spark.operators.textstats import MIN_TOKENS, n_tokens
 from lightly_ocr_spark.sources import read_pages
 
 MANIFEST_DIR = "_manifests"
-MIN_TOKENS = 10
 
 
 def _manifest_paths(out_dir: str, batch_id: str) -> tuple[str, str]:
@@ -196,14 +196,11 @@ def process_pages_batch(
             )
         manifest = committed
     else:
-        tokens = F.size(F.filter(
-            F.split(F.trim("text"), r"\s+"), lambda x: F.length(x) > 0
-        ))
         from pyspark.sql import Observation
 
         obs = Observation(f"crawl-{batch_id}-{int(t0)}")
         gated = (
-            survivors.withColumn("n_tokens", tokens.cast("long"))
+            survivors.withColumn("n_tokens", n_tokens().cast("long"))
             .filter(F.col("n_tokens") >= min_tokens)
             .observe(obs, F.count(F.lit(1)).alias("n"),
                      F.sum(F.length("text")).alias("chars"))

@@ -7,16 +7,23 @@ generator->filter->dataset ETL plane, `ocr/tools/generator.py` +
 
     extract (fused UDF)           # stage 1+2 of the engine
     -> drop empty                 # F7 validity
+    -> newest fetch per url       # revisits collapse; url is a key below
     -> exact dedup                # sha256 groups, keeper = min(url)
-    -> near dedup (MinHash-LSH)   # banded buckets; drop the larger url of
-                                  # any candidate pair with >=50% signature
-                                  # agreement
+    -> near dedup (MinHash-LSH)   # banded buckets, pairs with >=50%
+                                  # signature agreement clustered by
+                                  # connected components; keeper = min(url)
+    -> passage dedup (opt-in)     # text rewritten, n_passage_tokens_cut
+    -> host cap (opt-in)          # first K urls per host
     -> quality gate               # >= MIN_TOKENS whitespace tokens
+    -> enrich                     # lang_pred, bigram_logp, top_bigram_frac
+    -> repetition / fluency / NB gates, PII scrub (all opt-in)
     -> write + stage-count manifest
 
-Every stage is a DataFrame transform (shuffles: one per dedup stage, keyed
-by fingerprint/bucket — both near-uniform keys, no skew salting needed on
-top of the content hashes themselves).
+The stages after near dedup add or replace columns on the rows they
+receive, or filter them; only the opt-in NB and media legs join by url.
+Shuffles: one per dedup stage, keyed by fingerprint/bucket — both
+near-uniform keys, no skew salting needed on top of the content hashes
+themselves.
 """
 
 from __future__ import annotations
@@ -29,78 +36,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lightly_ocr_spark.operators.dedup import (
-    MINHASH_BANDS as BANDS,
+    MINHASH_BANDS,
     MINHASH_K,
+    NEAR_DUP_MIN_AGREEMENT,
     minhash_signatures,
+    near_dup_losers,
     newest_per_url,
+    passage_dedup_docs,
 )
 from lightly_ocr_spark.operators.enrich import enrich_pages
 from lightly_ocr_spark.operators.extract_udf import extract_pages
+from lightly_ocr_spark.operators.textstats import MIN_TOKENS, n_tokens
 from lightly_ocr_spark.sources import read_pages
-
-MIN_TOKENS = 10
-NEAR_DUP_MIN_AGREEMENT = 0.5
-# MINHASH_K / BANDS imported from operators.dedup — single source of truth
-
-
-def near_dup_drops(
-    texts: DataFrame, checkpoint_dir: str | None = None,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """(url, text) -> urls to drop: verified near-dup pairs (signature
-    agreement >= NEAR_DUP_MIN_AGREEMENT of the k min-hashes) are clustered
-    with connected components, and every url except each cluster's
-    lexicographic minimum loses.  Per-pair "drop the larger" under-drops
-    transitive chains (in A~B~C with only those edges, B and C both beat A
-    pairwise but C can survive B's removal); component keepers make
-    exactly one survivor per cluster.  Banding math is the shared
-    `band_candidate_pairs` — one implementation for the dd_minhash query
-    and this pipeline."""
-    from pyspark import StorageLevel
-
-    from lightly_ocr_spark.operators.dedup import band_candidate_pairs
-
-    sig = minhash_signatures(
-        texts.select(F.col("url").alias("doc_id"), "text"),
-        k=MINHASH_K,
-        ngram=3,  # order-sensitive shingles: shared vocabulary != near-dup
-    ).persist(StorageLevel.DISK_ONLY)
-    # persist is load-bearing: the signature pipeline (24M-shingle explode
-    # x k hashes at 200k docs — measured 125s) feeds THREE consumers
-    # (banding, and both sides of the agreement verification join); without
-    # it the verified-pairs plan and the components checkpoint each re-run
-    # the whole subtree (measured: near-dedup leg 550s -> ~150s at 200k)
-    cand = band_candidate_pairs(
-        sig, MINHASH_K, BANDS, max_bucket=max_bucket
-    ).select(
-        F.col("id_a").alias("a"), F.col("id_b").alias("b")
-    )
-    sa = sig.alias("sa")
-    sb = sig.alias("sb")
-    agree = sum(
-        (F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}")).cast("int")
-        for i in range(MINHASH_K)
-    )
-    verified = (
-        cand.join(sa, F.col("a") == F.col("sa.doc_id"))
-        .join(sb, F.col("b") == F.col("sb.doc_id"))
-        .filter(agree >= int(NEAR_DUP_MIN_AGREEMENT * MINHASH_K))
-    )
-    from lightly_ocr_spark.operators.dedup import connected_components
-
-    pairs = verified.select(
-        F.col("a").alias("id_a"), F.col("b").alias("id_b")
-    ).distinct()
-    # nodes default = edge endpoints; checkpoint_dir makes the iterative
-    # rounds durably checkpointed (cluster jobs), else localCheckpoint
-    comp = connected_components(pairs, checkpoint_dir=checkpoint_dir)
-    # comp is materialized (checkpointed) by connected_components, so the
-    # signature cache has served all its consumers — release the disk
-    sig.unpersist()
-    return (
-        comp.filter(F.col("id") != F.col("component"))
-        .select(F.col("id").alias("url"))
-    )
 
 
 def media_features_per_url(media: DataFrame) -> DataFrame:
@@ -156,10 +103,12 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     """Stage counts come from `observe()` accumulators riding the actions
     the job runs anyway — never from extra `.count()` materializations or
     re-reads of the output (round-1 judge finding: cache+count of the full
-    corpus spills/evicts at 100 TB).  The only persisted frame is `uniq`
-    (DISK_ONLY — it feeds two branches: near-dup candidates and the
-    anti-join), and its one materialization doubles as the harvest point
-    for the input/extracted counters."""
+    corpus spills/evicts at 100 TB).  Persisted frames: `uniq` (DISK_ONLY
+    — it feeds two branches: near-dup candidates and the anti-join; its
+    one materialization doubles as the harvest point for the
+    input/extracted counters), the near-dup signatures for the length of
+    that leg, and `gated` only when the NB gate reads it a second
+    time."""
     from pyspark.sql import Observation
 
     if chunk is not None and not 0 < chunk[1] <= chunk[0]:
@@ -197,7 +146,7 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
 
     # url-revisit dedup FIRST: downstream stages assume url is a key —
     # duplicate urls would merge minhash tokens into one bogus signature
-    # and multiply rows through the enrichment join
+    # and multiply rows through the NB and media url joins
     one_per_url = newest_per_url(extracted)
 
     # exact dedup: keeper = min(url) per content hash (one shuffle)
@@ -217,10 +166,23 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     tl = time.time()
     legs["extract_exact_dedup"] = round(tl - t0, 3)
 
-    drops = near_dup_drops(
-        uniq.select("url", "text"), checkpoint_dir=checkpoint_dir,
-        max_bucket=near_max_bucket,
-    )
+    sig = minhash_signatures(
+        uniq.select(F.col("url").alias("doc_id"), "text"),
+        k=MINHASH_K,
+        ngram=3,  # order-sensitive shingles: shared vocabulary != near-dup
+    ).persist(StorageLevel.DISK_ONLY)
+    # persist is load-bearing: the signature pipeline (measured 125s at
+    # 200k docs) feeds banding and both verification sides; unpersisted,
+    # each re-runs it (near-dedup leg 550s -> ~150s at 200k).
+    # checkpoint_dir: durable component checkpoints on a cluster
+    drops = near_dup_losers(
+        sig, MINHASH_K, MINHASH_BANDS,
+        need=int(NEAR_DUP_MIN_AGREEMENT * MINHASH_K),
+        checkpoint_dir=checkpoint_dir, max_bucket=near_max_bucket,
+    ).select(F.col("doc_id").alias("url"))
+    # the drops read the components' checkpoint, so the signature cache
+    # has served all its consumers — release the disk
+    sig.unpersist()
     legs["near_dup_components"] = round(time.time() - tl, 3)
     tl = time.time()
     deduped = uniq.join(drops, "url", "left_anti")
@@ -228,32 +190,16 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     if passage_dedup is not None:
         # duplicate-PASSAGE removal after whole-doc dedup: shared
         # boilerplate sentences surviving near-dedup (different docs,
-        # same license block / nav sentence) are cut at every position
-        # and the text column rewritten.  `deduped` feeds FOUR consumers
-        # here (the gram path, the coverage path, the rebuild join, and
-        # the outer rejoin) — persist it for the leg or each consumer
-        # re-runs the uniq-cache scan + near-dup anti-join.
-        from pyspark import StorageLevel
-
-        from lightly_ocr_spark.operators.dedup import passage_dedup_docs
-
-        deduped = deduped.persist(StorageLevel.DISK_ONLY)
-        passage_persisted = deduped
+        # same license block / nav sentence) are cut at every position.
+        # The operator keeps every row and column, so the text swap is
+        # one projection in the original column order.
         pn, pmin = passage_dedup
-        cleaned = passage_dedup_docs(
-            deduped.select("url", "text"), id_col="url",
-            n=pn, min_docs=pmin,
-        )
-        deduped = (
-            deduped.drop("text")
-            .join(
-                cleaned.select(
-                    "url",
-                    F.col("cleaned").alias("text"),
-                    F.col("n_removed_tokens").alias("n_passage_tokens_cut"),
-                ),
-                "url",
-            )
+        deduped = passage_dedup_docs(
+            deduped, id_col="url", n=pn, min_docs=pmin
+        ).select(
+            *[c for c in deduped.columns if c != "text"],
+            F.col("cleaned").alias("text"),
+            F.col("n_removed_tokens").alias("n_passage_tokens_cut"),
         )
 
     if host_cap is not None:
@@ -274,26 +220,17 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         ).drop("host", "host_rank")
 
     # quality gate BEFORE enrichment: no Arrow crossing is spent on rows
-    # the token filter drops, and persisting the gated frame means the
-    # anti-join/host-cap plan runs once, not once per join branch
-    tokens = F.size(F.split(F.trim("text"), r"\s+"))
-    # persist is load-bearing: gated feeds BOTH sides of the final join
-    # (the enrichment Arrow stage reads it, and the join's other side is
-    # gated itself) — unpersisted, each side would recompute the
-    # anti-join/host-cap subtree (near-dup MinHash included)
+    # the token filter drops
     gated = (
-        deduped.withColumn("n_tokens", tokens.cast("long"))
+        deduped.withColumn("n_tokens", n_tokens().cast("long"))
         .filter(F.col("n_tokens") >= MIN_TOKENS)
-    ).persist(StorageLevel.DISK_ONLY)
-    to_unpersist = [gated]
-    if passage_dedup is not None:
-        to_unpersist.append(passage_persisted)
-    # langid + fluency + top-bigram repetition, ONE Arrow crossing: the
-    # repetition fraction is ~free inside the enrichment pass (Counter per
-    # doc), vs ~110 s per 200 k docs as its own JVM pass — same
-    # tokenization contract as textstats.repetition_signals_df
-    enriched = enrich_pages(gated)
-    curated = gated.join(enriched, "url", "left")
+    )
+    # langid + fluency + top-bigram repetition, ONE Arrow crossing of the
+    # text column, appended to the gated rows in place: the repetition
+    # fraction is ~free inside the enrichment pass (Counter per doc), vs
+    # ~110 s per 200 k docs as its own JVM pass — same tokenization
+    # contract as textstats.repetition_signals_df
+    curated = enrich_pages(gated)
     if max_rep is not None:
         # Gopher-style repetition gate: drop docs whose single hottest
         # word-bigram takes more than `max_rep` of all bigrams (boilerplate
@@ -326,16 +263,17 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         # prediction as a column, and (opt-in) drop a predicted class.
         # Runs BEFORE the PII scrub so the model sees the same raw text
         # distribution it was trained on.
-        from pyspark.sql import Observation
-
         from lightly_ocr_spark.operators.classify import nb_load, nb_predict
 
         wm, lm = nb_load(spark, nb_model_path)
-        # score from the PERSISTED gated frame, not `curated`: the latter
-        # would re-run the enrichment Arrow crossing for the prediction
-        # branch (the round-3 multi-consumer-subtree lesson).  Scoring a
-        # few rows the repetition gate later drops is free; the left join
-        # discards them.
+        # score from `gated`, not `curated`: the latter would re-run the
+        # enrichment Arrow crossing for the prediction branch (the
+        # round-3 multi-consumer-subtree lesson).  `gated` is then read
+        # twice (enrichment and scoring), so persist it or each branch
+        # recomputes the anti-join/host-cap subtree.  Scoring a few rows
+        # the repetition gate later drops is free; the left join discards
+        # them.
+        gated.persist(StorageLevel.DISK_ONLY)
         preds = nb_predict(
             gated.select("url", "text"), wm, lm, id_col="url"
         ).select("url", F.col("pred_label").alias("nb_label"))
@@ -375,8 +313,8 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         curated = curated.join(per_url, "url", "left")
     curated = curated.observe(obs_cur, F.count(F.lit(1)).alias("n"))
     curated.write.mode("overwrite").parquet(os.path.join(out_dir, "data"))
-    for frame in to_unpersist:
-        frame.unpersist()
+    if nb_model_path is not None:
+        gated.unpersist()
     # passage dedup / host cap / gates / enrichment / NB / PII all ride
     # this one fused write action — the leg wall covers them jointly
     legs["gates_enrich_write"] = round(time.time() - tl, 3)
@@ -388,8 +326,6 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         # rows — reads the just-written table back (local re-scan of the
         # final, small artifact) rather than re-running the whole curation
         # plan for the explode
-        from pyspark.sql import Observation
-
         from lightly_ocr_spark.operators.textstats import chunk_docs
 
         cw, cs = chunk

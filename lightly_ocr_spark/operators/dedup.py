@@ -24,6 +24,7 @@ from lightly_ocr_spark.plans.relational import load, spread
 
 MINHASH_K = 32          # signature length
 MINHASH_BANDS = 8       # 8 bands x 4 rows
+NEAR_DUP_MIN_AGREEMENT = 0.5  # share of the k min-hashes a near-dup shares
 
 
 def lower_words(text_col="text") -> F.Column:
@@ -309,6 +310,40 @@ def band_candidate_pairs(
     `max_bucket` skips degenerate hot buckets (see `cap_buckets`)."""
     return _pairs_from_stacked(
         cap_buckets(band_buckets(sig, k, bands), max_bucket)
+    )
+
+
+def signature_agreement(k: int) -> F.Column:
+    """Number of equal min-hashes between the signature frames aliased
+    `sa` and `sb`."""
+    return sum(
+        (F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}")).cast("int")
+        for i in range(k)
+    )
+
+
+def near_dup_losers(
+    sig: DataFrame, k: int, bands: int, need: int,
+    checkpoint_dir: str | None = None, max_bucket: int | None = None,
+) -> DataFrame:
+    """Signature frame (doc_id, mh0..mh{k-1}) -> doc_id of every
+    near-dup that is not its cluster's keeper: LSH candidate pairs,
+    verified by >= `need` agreeing min-hashes, clustered by connected
+    components; each cluster keeps its minimum id (per-pair "drop the
+    larger" would under-drop transitive chains A~B~C).  Callers persist
+    `sig` (banding and both verify sides read it); the result reads the
+    components' checkpoint, so `sig` may be released once it is built."""
+    verified = (
+        band_candidate_pairs(sig, k, bands, max_bucket=max_bucket)
+        .join(sig.alias("sa"), F.col("id_a") == F.col("sa.doc_id"))
+        .join(sig.alias("sb"), F.col("id_b") == F.col("sb.doc_id"))
+        .filter(signature_agreement(k) >= need)
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    comp = connected_components(verified, checkpoint_dir=checkpoint_dir)
+    return comp.filter(F.col("id") != F.col("component")).select(
+        F.col("id").alias("doc_id")
     )
 
 
@@ -932,7 +967,7 @@ def incremental_near_dedup(
     spark: SparkSession, new_batch: DataFrame, index_path: str,
     id_col: str = "doc_id", text_col: str = "text",
     k: int = MINHASH_K, bands: int = MINHASH_BANDS, ngram: int = 3,
-    min_agreement: float = 0.5, commit: bool = True,
+    min_agreement: float = NEAR_DUP_MIN_AGREEMENT, commit: bool = True,
     checkpoint_dir: str | None = None,
     with_sigs: bool = False,
     max_bucket: int | None = None,
@@ -953,10 +988,8 @@ def incremental_near_dedup(
          of k minhashes) joining batch sigs with ONLY the candidate
          corpus sigs; any verified match drops the batch doc (the corpus
          copy is the cluster keeper);
-      4. INTRA-batch near-dedup among the remainder: the shared
-         band_candidate_pairs -> agreement verify -> connected components
-         -> keep each cluster's min id (transitive chains collapse to one
-         survivor, same semantics as the curation pipeline);
+      4. INTRA-batch near-dedup among the remainder: `near_dup_losers`,
+         the same clustering the curation pipeline runs;
       5. append survivors' sigs+buckets (idempotent on replay: the
          append itself anti-joins already-indexed doc_ids — see
          `write_minhash_index`; self-match in step 3 cannot be relied on
@@ -997,10 +1030,6 @@ def _near_dedup_core(
     """Body of `incremental_near_dedup` (split out so the signature
     cache's persist/unpersist pairs in a try/finally)."""
     from pyspark import StorageLevel
-    agree = sum(
-        (F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}")).cast("int")
-        for i in range(k)
-    )
 
     # a rebuild (overwrite) crash between the swap renames leaves the old
     # index at <path>.replaced and nothing at <path> — restore it, or the
@@ -1052,7 +1081,7 @@ def _near_dedup_core(
         cross_drops = (
             cand.join(sig_b.alias("sa"), "doc_id")
             .join(idx_sigs.alias("sb"), "corpus_id")
-            .filter(agree >= need)
+            .filter(signature_agreement(k) >= need)
             .select("doc_id")
             .distinct()
         )
@@ -1078,21 +1107,9 @@ def _near_dedup_core(
     # survivor sigs) — persist for the duration of this call
     sig_rem = sig_rem.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # intra-batch: candidate pairs -> verified pairs -> components
-        pairs = band_candidate_pairs(sig_rem, k, bands,
-                                     max_bucket=max_bucket)
-        verified = (
-            pairs.join(
-                sig_rem.alias("sa"), F.col("id_a") == F.col("sa.doc_id")
-            )
-            .join(sig_rem.alias("sb"), F.col("id_b") == F.col("sb.doc_id"))
-            .filter(agree >= need)
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        comp = connected_components(verified, checkpoint_dir=checkpoint_dir)
-        intra_drops = comp.filter(F.col("id") != F.col("component")).select(
-            F.col("id").alias("doc_id")
+        intra_drops = near_dup_losers(
+            sig_rem, k, bands, need, checkpoint_dir=checkpoint_dir,
+            max_bucket=max_bucket,
         )
         # anti-joins, not a semi-join against sig_rem: a doc with no tokens
         # has no signature at all — it cannot near-dup anything and must
@@ -1152,19 +1169,22 @@ def passage_dedup_docs(
     original text byte-for-byte (including newlines/tabs/multi-space —
     only docs a passage was actually cut from are reassembled
     single-spaced); a fully-covered doc yields an empty string (caller
-    gates).  Output: (id, cleaned, n_removed_tokens).
+    gates).  Output: every input row and column, plus `cleaned` and
+    `n_removed_tokens` — a caller swaps the text in one projection
+    instead of joining the result back by id.
 
     Round-6 plan shape (guide §2.4/§2.3; before: 5 Exchanges, the gram
     build evaluated TWICE in two scan branches, and an 8x position
     explode feeding collect_set — 17.7 s single-task at 50k docs):
-      * `spread` fans the unsplittable single-row-group scan out to the
-        core budget, and the round-robin Exchange is REUSED by the gram
-        branch and the rebuild join (one scan, one text shuffle);
-      * the exploded grams are hash-repartitioned on gh ONCE — the
-        document-frequency aggregate (clustered by gh, so the distinct
-        count needs no further Exchange) and the common-gram hit join
-        both read that same reused Exchange, so the gram/md5 build now
-        runs exactly once;
+      * no fan-out of its own: a caller reading a single-row-group scan
+        (the `passage_dedup` query) passes `spread(scan)`, whose Exchange
+        the gram branch and the rebuild join share; probing an arbitrary
+        input's partitioning here would run its shuffles at plan time;
+      * the exploded grams are hash-repartitioned on gh, so the
+        document-frequency aggregate needs no further Exchange.  The
+        executed plan does NOT reuse that Exchange for the hit join:
+        pruning drops `pos` from the frequency branch, the two Exchanges
+        differ, and the gram/md5 build runs twice;
       * hits aggregate as collect_set(pos) — one row per hit instead of
         n exploded cover rows — and each doc's covered-position set is
         expanded JVM-side (flatten of n-long sequences + array_distinct,
@@ -1172,21 +1192,18 @@ def passage_dedup_docs(
     words = F.filter(
         F.split(F.col(text_col), r"\s+"), lambda w: F.length(w) > 0
     )
-    base = spread(d.select(F.col(id_col), F.col(text_col)))
-    w = base.select(
-        F.col(id_col), F.col(text_col).alias("text"), words.alias("w")
-    )
+    w = d.select("*", words.alias("_w"))
     # the short-doc gate lives INSIDE the gram expression (empty array ->
     # posexplode drops the row) instead of a .filter(): a row filter
-    # would be pushed below the spread Exchange, re-serializing the
-    # split/size work on the unsplit scan and forking the scan into
+    # would be pushed below a caller's spread Exchange, re-serializing
+    # the split/size work on the unsplit scan and forking the scan into
     # non-reusable per-branch variants
     gram = F.when(
-        F.size("w") >= n,
+        F.size("_w") >= n,
         F.transform(
-            F.sequence(F.lit(0), F.size("w") - n),
+            F.sequence(F.lit(0), F.size("_w") - n),
             lambda p: F.md5(
-                F.concat_ws(" ", F.slice(F.col("w"), p + 1, n))
+                F.concat_ws(" ", F.slice(F.col("_w"), p + 1, n))
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
@@ -1203,32 +1220,30 @@ def passage_dedup_docs(
     cov = (
         g.join(common, "gh")
         .groupBy(id_col)
-        .agg(F.collect_set("pos").alias("ps"))
+        .agg(F.collect_set("pos").alias("_ps"))
     )
     # distinct covered positions, expanded from the per-hit start set —
     # materialized as its OWN projection (the `_tokens` lesson: an alias
     # referenced twice below must not be re-inlined per reference)
     cps = F.array_distinct(F.flatten(F.transform(
-        "ps", lambda p: F.sequence(p, p + (n - 1))
+        "_ps", lambda p: F.sequence(p, p + (n - 1))
     )))
     covd = w.join(cov, id_col, "left").select(
-        id_col, "text", "w", cps.alias("cps")
+        *d.columns, "_w", cps.alias("_cps")
     )
     keep = F.filter(
-        F.col("w"),
-        lambda x, i: ~F.array_contains("cps", i),
+        F.col("_w"),
+        lambda x, i: ~F.array_contains("_cps", i),
     )
-    return (
-        covd.select(
-            id_col,
-            # untouched docs keep their ORIGINAL text byte-for-byte —
-            # rebuilding them through split+concat_ws would silently
-            # collapse newlines/tabs/multi-spaces corpus-wide
-            F.when(F.col("cps").isNotNull(), F.concat_ws(" ", keep))
-            .otherwise(F.col("text")).alias("cleaned"),
-            F.coalesce(F.size("cps"), F.lit(0)).cast("long")
-            .alias("n_removed_tokens"),
-        )
+    return covd.select(
+        *d.columns,
+        # untouched docs keep their ORIGINAL text byte-for-byte —
+        # rebuilding them through split+concat_ws would silently
+        # collapse newlines/tabs/multi-spaces corpus-wide
+        F.when(F.col("_cps").isNotNull(), F.concat_ws(" ", keep))
+        .otherwise(F.col(text_col)).alias("cleaned"),
+        F.coalesce(F.size("_cps"), F.lit(0)).cast("long")
+        .alias("n_removed_tokens"),
     )
 
 
@@ -1237,5 +1252,7 @@ def passage_dedup(spark: SparkSession, sf: str) -> DataFrame:
     the documents table.  The synthetic corpus shares templated sentences
     across documents, so real passages are removed.  Fully DuckDB-oracled
     (md5 grams are portable; positional math is exact integers)."""
-    d = load(spark, sf, "documents").select("doc_id", "text")
-    return passage_dedup_docs(d)
+    d = spread(load(spark, sf, "documents").select("doc_id", "text"))
+    return passage_dedup_docs(d).select(
+        "doc_id", "cleaned", "n_removed_tokens"
+    )

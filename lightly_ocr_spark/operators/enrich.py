@@ -1,24 +1,22 @@
-"""Combined enrichment stage: language-ID + fluency in ONE Arrow crossing.
+"""Combined enrichment stage: language-ID + fluency + top-bigram repetition
+in ONE Arrow crossing.
 
-Each `mapInPandas` stage costs a JVM↔Python round-trip of the text column;
-running langid and fluency separately would ship the corpus through Arrow
-twice.  This stage fuses them (same principle as the fused segment+decode
-extraction UDF — SURVEY.md §2.9)."""
+Fused like the segment+decode extraction UDF (SURVEY.md §2.9), as one
+scalar Arrow UDF over `text`: only the text crosses into Python, the other
+columns stay in the JVM, and the scores land on the rows they came from."""
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from lightly_ocr_spark.operators.fluency import bigram_logp
 from lightly_ocr_spark.operators.langid import detect_lang
-
-ENRICH_SCHEMA = ("url string, lang_pred string, bigram_logp double, "
-                 "top_bigram_frac double")
 
 _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 _SIX_DP = Decimal("0.000001")
@@ -52,23 +50,22 @@ def _top_bigram_frac(text: str) -> float:
     )
 
 
-def _enrich_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        texts = pdf["text"]
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"].to_numpy(),
-                "lang_pred": texts.map(detect_lang),
-                "bigram_logp": texts.map(bigram_logp).astype("float64"),
-                "top_bigram_frac": texts.map(_top_bigram_frac)
-                .astype("float64"),
-            }
-        )
+# a typed schema, not a DDL string: parsing DDL needs a live session, and
+# this module is imported before one exists
+@pandas_udf(StructType([
+    StructField("lang_pred", StringType()),
+    StructField("bigram_logp", DoubleType()),
+    StructField("top_bigram_frac", DoubleType()),
+]))
+def _enrich(texts: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame({
+        "lang_pred": texts.map(detect_lang),
+        "bigram_logp": texts.map(bigram_logp).astype("float64"),
+        "top_bigram_frac": texts.map(_top_bigram_frac).astype("float64"),
+    })
 
 
-def enrich_pages(extracted: DataFrame) -> DataFrame:
-    """(url, text, ...) -> (url, lang_pred, bigram_logp, top_bigram_frac),
-    one Python stage."""
-    return extracted.select("url", "text").mapInPandas(
-        _enrich_partition, schema=ENRICH_SCHEMA
-    )
+def enrich_pages(df: DataFrame) -> DataFrame:
+    """df -> df with `lang_pred`, `bigram_logp` and `top_bigram_frac`
+    appended, every input row and column kept; one Python stage."""
+    return df.withColumn("_e", _enrich("text")).select(*df.columns, "_e.*")

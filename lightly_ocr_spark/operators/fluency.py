@@ -7,18 +7,14 @@ log-probs, so clean natural-language text scores high while mojibake,
 binary spew, and keyboard mash score low.  Used as the third quality signal
 next to token counts and stopword ratios (`textstats.quality_score`).
 
-Arrow-batched (`fluency_pages`); per-string helper (`bigram_logp`) for
-tests and the oracle-free gate.
+Per-string (`bigram_logp`); the curate pipeline runs it inside the fused
+enrichment stage (`operators/enrich.py:enrich_pages`).
 """
 
 from __future__ import annotations
 
 import math
 from collections import Counter
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
 
 # Frozen seed corpus: plain public-domain-style English prose assembled for
 # this repo (what matters is coverage of common bigrams, not provenance).
@@ -58,19 +54,3 @@ def bigram_logp(text: str) -> float:
         s += get(t[i : i + 2], _FLOOR)
     return s / n
 
-
-def _fluency_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"].to_numpy(),
-                "bigram_logp": pdf["text"].map(bigram_logp).astype("float64"),
-            }
-        )
-
-
-def fluency_pages(extracted: DataFrame) -> DataFrame:
-    """(url, text, ...) -> (url, bigram_logp), Arrow-batched."""
-    return extracted.select("url", "text").mapInPandas(
-        _fluency_partition, schema="url string, bigram_logp double"
-    )

@@ -8,18 +8,15 @@ Deterministic profile scorer — no model download, no randomness:
   n-gram-histogram approach of classic langid tools in a transparent,
   auditable form.
 
-Runs as one Arrow-batched pandas stage (`langid_pages`), or per-string via
-`detect_lang` for tests.  This is the richer engine-side complement to the
-SQL-oracled marker counter in `operators/textstats.py:lang_id`.
+Per-string (`detect_lang`); the curate pipeline runs it inside the fused
+enrichment stage (`operators/enrich.py:enrich_pages`).  This is the richer
+engine-side complement to the SQL-oracled marker counter in
+`operators/textstats.py:lang_id`.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from lightly_ocr_spark.contract import CJK_RE
 
@@ -58,19 +55,3 @@ def detect_lang(text: str) -> str:
             best_lang, best_score = lang, score
     return best_lang if best_score > 0.0 else "und"
 
-
-def _langid_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"].to_numpy(),
-                "lang_pred": pdf["text"].map(detect_lang),
-            }
-        )
-
-
-def langid_pages(extracted: DataFrame) -> DataFrame:
-    """(url, text, ...) -> (url, lang_pred), Arrow-batched."""
-    return extracted.select("url", "text").mapInPandas(
-        _langid_partition, schema="url string, lang_pred string"
-    )

@@ -22,6 +22,20 @@ LANG_MARKERS = [
 ]
 
 
+# the curate and crawl quality gate: minimum whitespace tokens per doc
+MIN_TOKENS = 10
+
+
+def n_tokens(text_col: str = "text") -> Column:
+    """Non-empty whitespace tokens in `text_col` — the one token count
+    behind the curate and crawl gates.  Empty pieces are dropped rather
+    than trimmed away: `F.trim` strips only spaces, so a leading or
+    trailing tab/newline would otherwise count as a phantom token."""
+    return F.size(F.filter(
+        F.split(F.col(text_col), r"\s+"), lambda w: F.length(w) > 0
+    ))
+
+
 def _occurrences(col: Column, needle: str) -> Column:
     """Exact substring-occurrence count via length arithmetic (portable to
     any SQL engine, integer-exact)."""

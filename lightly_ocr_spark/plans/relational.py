@@ -41,6 +41,12 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     hundreds of row groups passes the guard untouched, so this never adds
     a shuffle at 100 TB scale.
 
+    Give it RAW scans (`load()` / `read.parquet` results) only.  The
+    partition probe below is free on a scan, but on a frame with an
+    Exchange in its plan it makes AQE plan and run those upstream
+    shuffles while the caller is still building the plan — work that
+    then runs again for the real action.
+
     The always-true nondeterministic guard above the Exchange is a
     PUSHDOWN BARRIER, and it is the half that makes the fan-out stick:
     Catalyst pushes deterministic predicates (a caller's eligibility
@@ -51,17 +57,14 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     Exchange (observed: the passage-dedup gram build planned THREE
     separate scans of the same file).  Predicates cannot reorder across
     a nondeterministic filter, so everything a caller adds stays above
-    the fan-out; the guard itself is one rand()+format per row.  (The
-    comparison goes through a string cast because Spark 4's optimizer
-    knows rand()'s value range and folds a bare `rand() > -1` guard
-    away — and with the guard gone, the pushdown comes back.)"""
+    the fan-out.  `spark_partition_id() >= 0` is nondeterministic, the
+    optimizer does not fold it, and it costs one integer compare per
+    row."""
     spark = df.sparkSession
     target = parts or spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() * 2 >= target:
         return df
-    return df.repartition(target).where(
-        F.rand(0).cast("string") != F.lit("x")
-    )
+    return df.repartition(target).where(F.spark_partition_id() >= 0)
 
 
 # --- filters / projections -------------------------------------------------

@@ -184,11 +184,10 @@ class TestLangId:
     def test_accuracy_vs_corpus_truth(self, spark, pages_dir):
         from pyspark.sql import functions as F
 
-        from lightly_ocr_spark.operators.langid import langid_pages
+        from lightly_ocr_spark.operators.enrich import enrich_pages
 
         pages = spark.read.parquet(pages_dir).filter(F.length("text") > 0)
-        pred = langid_pages(pages.select("url", "text"))
-        joined = pages.select("url", "lang").join(pred, "url")
+        joined = enrich_pages(pages.select("url", "text", "lang"))
         stats = joined.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum((F.col("lang") == F.col("lang_pred")).cast("long"))

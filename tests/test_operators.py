@@ -405,6 +405,27 @@ class TestHostExpr:
         assert got == [c for _, c in cases]
 
 
+class TestTokenGate:
+    def test_edge_whitespace_is_no_token(self, spark):
+        """The curate/crawl gate counts non-empty whitespace tokens: a
+        leading or trailing tab or newline adds nothing (F.trim strips
+        only spaces, so `size(split(trim(text)))` counted one phantom
+        token per untrimmed edge)."""
+        from lightly_ocr_spark.operators.textstats import n_tokens
+
+        cases = [
+            ("one two three", 3),
+            ("\tone two\n", 2),
+            ("\n\none\t\ttwo  three\r\n", 3),
+            ("  spaced  out  ", 2),
+            ("\t\n", 0),
+            ("", 0),
+        ]
+        d = spark.createDataFrame([(t,) for t, _ in cases], "text string")
+        got = [r["n"] for r in d.select(n_tokens().alias("n")).collect()]
+        assert got == [n for _, n in cases]
+
+
 class TestHostCapPlan:
     def test_two_phase_equals_single_window(self, spark):
         """The sharded two-phase cap must return exactly what a single
@@ -832,12 +853,12 @@ class TestFluency:
     def test_fluency_stage_over_extracted(self, spark, docs):
         from pyspark.sql import functions as F
 
-        from lightly_ocr_spark.operators.fluency import fluency_pages
+        from lightly_ocr_spark.operators.enrich import enrich_pages
 
         d = docs.select(
             F.concat(F.lit("doc://"), "doc_id").alias("url"), "text"
         ).limit(200)
-        out = fluency_pages(d)
+        out = enrich_pages(d)
         rows = out.collect()
         assert len(rows) == 200
         vals = [r["bigram_logp"] for r in rows]
@@ -1509,13 +1530,20 @@ class TestPassageDedup:
 
         shared = "one two three four five six seven eight"
         d = spark.createDataFrame([
-            (0, f"{shared} unique0 end0"),
-            (1, f"head1 start1 {shared}"),
-            (2, f"pre2 {shared} post2"),
-            (3, "no overlap with anything here at all whatsoever ok"),
-        ], "doc_id long, text string")
+            (0, f"{shared} unique0 end0", "a"),
+            (1, f"head1 start1 {shared}", "b"),
+            (2, f"pre2 {shared} post2", "c"),
+            (3, "no overlap with anything here at all whatsoever ok", "d"),
+        ], "doc_id long, text string, extra string")
+        out = passage_dedup_docs(d)
+        # every input column comes through unchanged, results appended
+        assert out.columns == ["doc_id", "text", "extra", "cleaned",
+                               "n_removed_tokens"]
+        rows = out.collect()
+        assert sorted((r["doc_id"], r["text"], r["extra"]) for r in rows) \
+            == sorted(tuple(r) for r in d.collect())
         got = {r["doc_id"]: (r["cleaned"], r["n_removed_tokens"])
-               for r in passage_dedup_docs(d).collect()}
+               for r in rows}
         assert got[0] == ("unique0 end0", 8)
         assert got[1] == ("head1 start1", 8)
         assert got[2] == ("pre2 post2", 8)
@@ -1561,6 +1589,28 @@ class TestPassageDedup:
         got = {r["doc_id"]: (r["cleaned"], r["n_removed_tokens"])
                for r in passage_dedup_docs(d).collect()}
         assert got[0] == ("", 8) and got[1] == ("", 8)
+
+
+class TestPassageDedupPlanBuild:
+    def test_building_on_unmaterialised_join_runs_no_job(self, spark):
+        """Plan construction must not execute anything: probing the input's
+        partitioning would make AQE run the join's shuffles (or broadcast)
+        while the caller is still building the plan, and again for the
+        real action."""
+        from lightly_ocr_spark.operators.dedup import passage_dedup_docs
+
+        texts = spark.createDataFrame(
+            [(f"u{i}", f"alpha beta gamma delta {i} eps zeta eta theta")
+             for i in range(50)], "url string, text string")
+        drops = spark.createDataFrame([("u3",), ("u7",)], "url string")
+        deduped = texts.join(drops, "url", "left_anti")
+        tracker = spark.sparkContext.statusTracker()
+        before = max(tracker.getJobIdsForGroup(None), default=-1)
+        out = passage_dedup_docs(deduped, id_col="url", n=4, min_docs=2)
+        submitted = [j for j in tracker.getJobIdsForGroup(None)
+                     if j > before]
+        assert submitted == []
+        assert out.count() == 48
 
 
 class TestPassageDedupReference:

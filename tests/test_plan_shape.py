@@ -65,6 +65,23 @@ class TestPlanShape:
         assert plan.count("MapInPandas") == 1  # one Arrow crossing (D/R fused)
         assert "Exchange" not in plan          # narrow: zero shuffles
 
+    def test_enrich_is_one_python_eval_with_no_join(self, spark):
+        """The enrichment appends its three scores to the rows it reads:
+        one scalar Arrow eval over `text`, and no url-keyed join of the
+        results back onto the rows."""
+        from lightly_ocr_spark.operators.enrich import enrich_pages
+
+        rows = spark.createDataFrame(
+            [("u", "some text here", 3)], "url string, text string, n int"
+        )
+        out = enrich_pages(rows)
+        assert out.columns == ["url", "text", "n", "lang_pred",
+                               "bigram_logp", "top_bigram_frac"]
+        plan = plan_of(out, mode="simple")
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert "MapInPandas" not in plan
+        assert "Join" not in plan and "Exchange" not in plan
+
     def test_salted_extract_exactly_one_shuffle(self, spark):
         from lightly_ocr_spark.operators.extract_udf import extract_pages
 
