@@ -4,14 +4,11 @@ At 10^12 docs the extraction sink accumulates files from many slices,
 retries, and streaming epochs; small files tax every later scan (driver
 listing, task scheduling, row-group overhead — the classic small-files
 problem).  This job rewrites a dataset to ceil(bytes / target) files and
-commits crash-safely: write to `<out>.inprogress`, verify the row count
-matches the input via an `Observation` riding the write (never a separate
-re-read), then swap directories.  POSIX cannot exchange two directories
-in one atomic step, so the swap is rename(out -> .replaced) +
-rename(.inprogress -> out); a crash inside that window leaves the
-original intact at `<out>.replaced`, and the NEXT run (or `run_compact`
-on the same out dir) restores it before doing anything else — no state
-reachable by crash loses data.
+commits crash-safely through `sources.commit.swap_dir`: write to a staging
+dir, verify the row count matches the input via an `Observation` riding
+the write (never a separate re-read), then swap directories.  A crash
+inside the swap leaves the original intact, and the NEXT run (or any
+index reader) restores it before doing anything else.
 
 Plan choices:
 
@@ -31,11 +28,17 @@ from __future__ import annotations
 import glob
 import json
 import os
-import shutil
 import time
 
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
+
+from lightly_ocr_spark.sources.commit import (
+    atomic_json,
+    recover_interrupted_swap,
+    require_local,
+    swap_dir,
+)
 
 DEFAULT_TARGET_BYTES = 128 << 20
 
@@ -46,17 +49,6 @@ def _data_files(path: str) -> list[str]:
                              recursive=True)
         if os.path.isfile(p)
     ]
-
-
-def recover_interrupted_swap(out_dir: str) -> bool:
-    """If a previous run crashed between the two swap renames (out_dir
-    missing, backup present), restore the original dataset.  Returns True
-    when a restore happened."""
-    backup = out_dir.rstrip("/") + ".replaced"
-    if not os.path.exists(out_dir) and os.path.exists(backup):
-        os.rename(backup, out_dir)
-        return True
-    return False
 
 
 def run_compact(
@@ -72,7 +64,7 @@ def run_compact(
     partition columns (one shuffle; each partition value lands in exactly
     one task) and writes with the same partitionBy, so every partition
     dir collapses to one file.  `in_dir == out_dir` is supported — the
-    dataset is fully materialized into `.inprogress` before the swap
+    dataset is fully materialized into the staging dir before the swap
     touches the original."""
     if shuffle and partition_by:
         raise ValueError(
@@ -80,6 +72,7 @@ def run_compact(
             "partitioned path always repartitions on the partition "
             "columns"
         )
+    require_local(in_dir, out_dir)
     recover_interrupted_swap(in_dir)
     recover_interrupted_swap(out_dir)
     files = _data_files(in_dir)
@@ -115,32 +108,22 @@ def run_compact(
     else:
         sized = df.repartition(n_out) if shuffle else df.coalesce(n_out)
 
-    tmp = out_dir.rstrip("/") + ".inprogress"
-    shutil.rmtree(tmp, ignore_errors=True)
     t0 = time.time()
     writer = sized.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    rows_in = int(obs_in.get["n"])
-
-    # verify BEFORE the swap: the new files' parquet footers must account
-    # for every input row (metadata-only count — no data re-read)
-    rows_out = spark.read.parquet(tmp).count()
-    if rows_out != rows_in:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"compaction row mismatch: {rows_in} in vs {rows_out} out — "
-            "aborted before swap, original dataset untouched"
-        )
-    if os.path.exists(out_dir):
-        backup = out_dir.rstrip("/") + ".replaced"
-        shutil.rmtree(backup, ignore_errors=True)
-        os.rename(out_dir, backup)
-        os.rename(tmp, out_dir)
-        shutil.rmtree(backup, ignore_errors=True)
-    else:
-        os.rename(tmp, out_dir)
+    with swap_dir(out_dir) as tmp:
+        writer.parquet(tmp)
+        rows_in = int(obs_in.get["n"])
+        # verify BEFORE the swap: the new files' parquet footers must
+        # account for every input row (metadata-only count — no data
+        # re-read)
+        rows_out = spark.read.parquet(tmp).count()
+        if rows_out != rows_in:
+            raise RuntimeError(
+                f"compaction row mismatch: {rows_in} in vs {rows_out} out "
+                "— aborted before swap, original dataset untouched"
+            )
 
     out_files = _data_files(out_dir)
     manifest = {
@@ -156,8 +139,7 @@ def run_compact(
         "partition_by": partition_by,
         "wall_s": round(time.time() - t0, 3),
     }
-    with open(os.path.join(out_dir, "_compaction.json"), "w") as f:
-        json.dump(manifest, f, indent=1)
+    atomic_json(os.path.join(out_dir, "_compaction.json"), manifest)
     return manifest
 
 

@@ -7,23 +7,26 @@ deduplicated against EVERYTHING the corpus has ever admitted — without
 rescanning corpus text — gated, and committed.  Cross-batch memory lives in
 the hash-prefix-partitioned fingerprint index
 (`operators.dedup.write_fingerprint_index`): one 64-hex row per admitted
-content, so batch N+1 pays one index anti-join instead of a corpus scan.
+content, keyed by the extraction's own `extract_sha256`, so batch N+1
+pays one index anti-join instead of a corpus scan.
 
 Commit discipline (the batch twin of `extract_job`'s slice manifests, made
-two-phase because TWO stores must agree):
+two-phase because TWO stores must agree).  The dedup operators only
+compute, returning materialised rows; this job makes every write, in this
+order, through the `sources.commit` protocol:
 
     1. survivors  = extract -> url-revisit dedup -> incremental exact
-                    dedup (anti-join the index; localCheckpoint freezes
-                    the rows so later index writes can't recompute them)
-                    -> optional incremental NEAR dedup (--near-index:
-                    MinHash-LSH against the persisted signature index)
+                    dedup (anti-join the fingerprint index) -> optional
+                    incremental NEAR dedup (--near-index: MinHash-LSH
+                    against the persisted signature index)
     2. corpus     : write batch=<id>/ parquet (overwrite — idempotent)
     3. manifest   : batch-<id>.json      <- CORPUS commit point
     4. index      : append near-survivors' signatures (when --near-index),
                     THEN exact fingerprints — near-first, so a crash
                     between the two appends replays with the exact
                     anti-join still computing the full survivor set while
-                    the near re-append no-ops on self-matches
+                    the near append's doc_id anti-join makes its re-append
+                    a no-op
     5. fp marker  : batch-<id>.fp.json   <- INDEX commit point
 
 Crash anywhere, rerun the same batch, and counts stay exact:
@@ -78,12 +81,15 @@ from pyspark.sql import functions as F
 
 from lightly_ocr_spark.operators.dedup import (
     incremental_exact_dedup,
+    incremental_near_dedup,
     newest_per_url,
     write_fingerprint_index,
+    write_minhash_index,
 )
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.operators.textstats import MIN_TOKENS, n_tokens
 from lightly_ocr_spark.sources import read_pages
+from lightly_ocr_spark.sources.commit import atomic_json, require_local
 
 MANIFEST_DIR = "_manifests"
 
@@ -94,20 +100,12 @@ def _manifest_paths(out_dir: str, batch_id: str) -> tuple[str, str]:
             os.path.join(d, f"batch-{batch_id}.fp.json"))
 
 
-def _atomic_json(path: str, payload: dict) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f, indent=1)
-    os.replace(tmp, path)
-
-
 def process_pages_batch(
     spark: SparkSession,
     pages: DataFrame,
     out_dir: str,
     index_path: str,
     batch_id: str,
-    min_tokens: int = MIN_TOKENS,
     input_desc: str | None = None,
     near_index_path: str | None = None,
     near_max_bucket: int | None = None,
@@ -121,6 +119,7 @@ def process_pages_batch(
     instead of appending fingerprints for documents that were never
     corpus-written.  Returns the batch summary (also persisted as the
     manifest)."""
+    require_local(out_dir, index_path, near_index_path)
     os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
     mpath, fpath = _manifest_paths(out_dir, batch_id)
     if os.path.exists(mpath) and os.path.exists(fpath):
@@ -140,14 +139,12 @@ def process_pages_batch(
         "url", "warc_ts", "text", "n_blocks", "extract_sha256"
     )
     one_per_url = newest_per_url(extracted)
-    # intra-batch + cross-batch exact dedup; commit=False — THIS job owns
-    # the append so it can gate it on the corpus commit.  The eager
-    # localCheckpoint freezes the survivor rows: both the corpus write and
-    # the later index append read materialized rows, never a plan that
-    # still references the index path being appended to.
+    # intra-batch + cross-batch exact dedup.  The rows come back
+    # materialised, so both the corpus write and the later index append
+    # read them, never a plan that still references the index path.
     exact_survivors = incremental_exact_dedup(
-        spark, one_per_url, index_path, id_col="url", commit=False
-    ).localCheckpoint(eager=True)
+        spark, one_per_url, index_path, id_col="url"
+    )
     n_unique = exact_survivors.count()
     tl = _leg("extract_exact_dedup", t0)
 
@@ -157,21 +154,19 @@ def process_pages_batch(
     if near_index_path is not None:
         # MinHash near-dedup against the persisted signature index (a
         # trivially-mutated copy of corpus content defeats exact
-        # fingerprints every batch without this).  commit=False — the
-        # append is gated on the corpus manifest below, and it must run
-        # BEFORE the exact append: if the crash window falls between the
-        # two appends, the replay's exact anti-join (exact index still
-        # unchanged) recomputes the full exact-survivor set, while the
-        # near append's own doc_id anti-join (write_minhash_index) makes
-        # its re-append a no-op — under ANY bucket-cap setting.
+        # fingerprints every batch without this).  The append is gated on
+        # the corpus manifest below, and it must run BEFORE the exact
+        # append: if the crash window falls between the two appends, the
+        # replay's exact anti-join (exact index still unchanged)
+        # recomputes the full exact-survivor set, while the near append's
+        # own doc_id anti-join (write_minhash_index) makes its re-append
+        # a no-op — under ANY bucket-cap setting.
         # The EXACT index still records every exact-novel fingerprint
         # (near-dropped included): future byte-identical copies of a
         # near-dropped doc stop at the cheap exact stage.
-        from lightly_ocr_spark.operators.dedup import incremental_near_dedup
-
         survivors, near_sigs = incremental_near_dedup(
             spark, exact_survivors, near_index_path, id_col="url",
-            commit=False, with_sigs=True, max_bucket=near_max_bucket,
+            max_bucket=near_max_bucket,
         )
         n_near_unique = survivors.count()
         tl = _leg("near_dedup", tl)
@@ -201,7 +196,7 @@ def process_pages_batch(
         obs = Observation(f"crawl-{batch_id}-{int(t0)}")
         gated = (
             survivors.withColumn("n_tokens", n_tokens().cast("long"))
-            .filter(F.col("n_tokens") >= min_tokens)
+            .filter(F.col("n_tokens") >= MIN_TOKENS)
             .observe(obs, F.count(F.lit(1)).alias("n"),
                      F.sum(F.length("text")).alias("chars"))
         )
@@ -215,7 +210,7 @@ def process_pages_batch(
             "n_unique": n_unique,
             "rows_written": int(m["n"] or 0),
             "text_chars": int(m["chars"] or 0),
-            "min_tokens": min_tokens,
+            "min_tokens": MIN_TOKENS,
             "wall_s": round(time.time() - t0, 3),
             "committed_at": time.strftime(
                 "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
@@ -223,28 +218,23 @@ def process_pages_batch(
         }
         if n_near_unique is not None:
             manifest["n_near_unique"] = n_near_unique
-        _atomic_json(mpath, manifest)  # CORPUS commit point
+        atomic_json(mpath, manifest)  # CORPUS commit point
 
     # INDEX appends — only ever after the corpus manifest exists; both
     # are anti-joined against their index as of this run's read, so a
     # replay after a completed append computes zero rows and the append
     # degenerates to a no-op.  NEAR before EXACT (see comment above).
     if near_sigs is not None:
-        from lightly_ocr_spark.operators.dedup import write_minhash_index
-
-        write_minhash_index(near_sigs, near_index_path, mode="append")
+        write_minhash_index(near_sigs, near_index_path)
         tl = _leg("near_index_append", tl)
-    write_fingerprint_index(
-        exact_survivors, index_path, id_col="url", text_col="text",
-        mode="append",
-    )
+    write_fingerprint_index(exact_survivors, index_path, id_col="url")
     _leg("fp_index_append", tl)
     # the marker records the batch's COMMITTED fingerprint count (the
     # manifest's n_unique): on an index-append replay the recomputed
     # n_unique is only the rows still missing (legally 0 after a crash
     # past the append), which would leave misleading audit evidence
-    _atomic_json(fpath, {"batch": batch_id,
-                         "fps_appended": manifest["n_unique"]})
+    atomic_json(fpath, {"batch": batch_id,
+                        "fps_appended": manifest["n_unique"]})
     manifest = dict(manifest)
     manifest["skipped"] = False
     # leg walls for THIS invocation (not persisted: a replay re-times only
@@ -260,7 +250,6 @@ def run_crawl_batch(
     index_path: str,
     batch_id: str | None = None,
     input_format: str = "pages",
-    min_tokens: int = MIN_TOKENS,
     near_index_path: str | None = None,
     near_max_bucket: int | None = None,
 ) -> dict:
@@ -271,7 +260,7 @@ def run_crawl_batch(
         batch_id = os.path.basename(os.path.normpath(input_path))
     pages = read_pages(spark, input_path, input_format)
     return process_pages_batch(
-        spark, pages, out_dir, index_path, batch_id, min_tokens=min_tokens,
+        spark, pages, out_dir, index_path, batch_id,
         input_desc=f"{input_format}:{os.path.abspath(input_path)}",
         near_index_path=near_index_path, near_max_bucket=near_max_bucket,
     )
@@ -284,7 +273,6 @@ def run_crawl_stream(
     index_path: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    min_tokens: int = MIN_TOKENS,
     near_index_path: str | None = None,
     near_max_bucket: int | None = None,
 ) -> dict:
@@ -302,8 +290,7 @@ def run_crawl_stream(
         seen.append(f"epoch-{epoch_id}")
         process_pages_batch(
             spark, batch_df, out_dir, index_path, f"epoch-{epoch_id}",
-            min_tokens=min_tokens, near_index_path=near_index_path,
-            near_max_bucket=near_max_bucket,
+            near_index_path=near_index_path, near_max_bucket=near_max_bucket,
         )
 
     q = (
@@ -347,7 +334,6 @@ def main() -> None:
     ap.add_argument("--batch-id", default=None)
     ap.add_argument("--format", choices=("pages", "warc", "jsonl"),
                     default="pages")
-    ap.add_argument("--min-tokens", type=int, default=MIN_TOKENS)
     ap.add_argument("--near-index", default=None,
                     help="optional MinHash signature index directory: also "
                     "near-dedup each batch against everything admitted so "
@@ -378,14 +364,14 @@ def main() -> None:
             ap.error("--stream requires --checkpoint-dir")
         out = run_crawl_stream(
             spark, args.input, args.out, args.index, args.checkpoint_dir,
-            min_tokens=args.min_tokens, near_index_path=args.near_index,
+            near_index_path=args.near_index,
             near_max_bucket=args.near_max_bucket,
         )
     else:
         out = run_crawl_batch(
             spark, args.input, args.out, args.index,
             batch_id=args.batch_id, input_format=args.format,
-            min_tokens=args.min_tokens, near_index_path=args.near_index,
+            near_index_path=args.near_index,
             near_max_bucket=args.near_max_bucket,
         )
     print(json.dumps(out))

@@ -32,13 +32,15 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lightly_ocr_spark.operators.dedup import (
     MINHASH_BANDS,
     MINHASH_K,
     NEAR_DUP_MIN_AGREEMENT,
+    NEAR_DUP_NGRAM,
+    min_id_per_content,
     minhash_signatures,
     near_dup_losers,
     newest_per_url,
@@ -48,6 +50,7 @@ from lightly_ocr_spark.operators.enrich import enrich_pages
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.operators.textstats import MIN_TOKENS, n_tokens
 from lightly_ocr_spark.sources import read_pages
+from lightly_ocr_spark.sources.commit import atomic_json, require_local
 
 
 def media_features_per_url(media: DataFrame) -> DataFrame:
@@ -129,6 +132,7 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
             "pack_budget/shuffle_seed require chunk: packing and the "
             "seeded shard shuffle run over the chunked output"
         )
+    require_local(out_dir)
     os.makedirs(out_dir, exist_ok=True)
     t0 = time.time()
     obs_in = Observation("curate-input")
@@ -149,13 +153,9 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     # and multiply rows through the NB and media url joins
     one_per_url = newest_per_url(extracted)
 
-    # exact dedup: keeper = min(url) per content hash (one shuffle)
-    w = Window.partitionBy("extract_sha256").orderBy("url")
-    uniq = (
-        one_per_url.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    ).persist(StorageLevel.DISK_ONLY)
+    uniq = min_id_per_content(one_per_url, "url").persist(
+        StorageLevel.DISK_ONLY
+    )
     # one materialization: fills the DISK_ONLY cache for both downstream
     # branches, is itself the after-exact-dedup counter, and fires the
     # input/extracted observations exactly once (branches below hit the
@@ -169,7 +169,7 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     sig = minhash_signatures(
         uniq.select(F.col("url").alias("doc_id"), "text"),
         k=MINHASH_K,
-        ngram=3,  # order-sensitive shingles: shared vocabulary != near-dup
+        ngram=NEAR_DUP_NGRAM,
     ).persist(StorageLevel.DISK_ONLY)
     # persist is load-bearing: the signature pipeline (measured 125s at
     # 200k docs) feeds banding and both verification sides; unpersisted,
@@ -421,8 +421,7 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         if pack_budget is not None:
             manifest["pack_budget"] = pack_budget
             manifest["n_packs"] = n_packs
-    with open(os.path.join(out_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1)
+    atomic_json(os.path.join(out_dir, "manifest.json"), manifest)
     uniq.unpersist()
     return manifest
 

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.schemas import PAGES_SCHEMA
 from lightly_ocr_spark.sources import read_pages
+from lightly_ocr_spark.sources.commit import atomic_json, require_local
 
 MANIFEST_DIR = "_manifests"
 
@@ -86,6 +87,7 @@ def run_extract(
     boundary, write commit — overlap instead of serializing.  Commit
     semantics are unchanged: each slice's manifest is written only after its
     own parquet write succeeds."""
+    require_local(out_dir)
     os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
     slices = _slice_files(_input_files(pages_path, input_format), n_slices)
     if salt_partitions is None:
@@ -172,10 +174,7 @@ def run_extract(
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         # commit point: manifest written only after the parquet write succeeds
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, manifest_path)
+        atomic_json(manifest_path, manifest)
         return m["rows_out"]
 
     with ThreadPoolExecutor(max_workers=max(1, concurrent_slices)) as pool:
@@ -206,11 +205,7 @@ def rollup_manifests(out_dir: str) -> dict:
         total["empty_docs"] += m["empty_docs"]
         total["checksum"] = (total["checksum"] + m["checksum"]) % (1 << 63)
         total["input_files"] += m["input_files"]
-    out = os.path.join(out_dir, MANIFEST_DIR, "_rollup.json")
-    tmp = out + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(total, f, indent=1)
-    os.replace(tmp, out)
+    atomic_json(os.path.join(out_dir, MANIFEST_DIR, "_rollup.json"), total)
     return total
 
 

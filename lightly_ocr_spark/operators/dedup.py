@@ -16,15 +16,19 @@ Python row loops):
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lightly_ocr_spark.plans.relational import load, spread
+from lightly_ocr_spark.sources.commit import (
+    read_index,
+    recover_interrupted_swap,
+)
 
 MINHASH_K = 32          # signature length
 MINHASH_BANDS = 8       # 8 bands x 4 rows
 NEAR_DUP_MIN_AGREEMENT = 0.5  # share of the k min-hashes a near-dup shares
+NEAR_DUP_NGRAM = 3      # word shingles: shared vocabulary != near-dup
 
 
 def lower_words(text_col="text") -> F.Column:
@@ -121,17 +125,30 @@ def exact_dups(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def newest_per_url(df: DataFrame) -> DataFrame:
-    """url-revisit dedup: a crawl legally re-fetches the same url (WARC
-    revisit records).  Keeper = newest fetch (warc_ts desc, nulls last),
-    `extract_sha256` as the deterministic tiebreak."""
-    w = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").desc_nulls_last(), "extract_sha256"
-    )
+def _first_in_window(df: DataFrame, w) -> DataFrame:
+    """The first row of each window partition, input columns only."""
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
+    )
+
+
+def newest_per_url(df: DataFrame) -> DataFrame:
+    """url-revisit dedup: a crawl legally re-fetches the same url (WARC
+    revisit records).  Keeper = newest fetch (warc_ts desc, nulls last),
+    `extract_sha256` as the deterministic tiebreak."""
+    return _first_in_window(df, Window.partitionBy("url").orderBy(
+        F.col("warc_ts").desc_nulls_last(), "extract_sha256"
+    ))
+
+
+def min_id_per_content(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Exact dedup: keeper = min `id_col` per `extract_sha256` (one
+    shuffle).  The one keeper rule for the curate job and the crawl
+    loop's intra-batch step."""
+    return _first_in_window(
+        df, Window.partitionBy("extract_sha256").orderBy(id_col)
     )
 
 
@@ -756,13 +773,13 @@ def line_dedup(spark: SparkSession, sf: str, min_docs: int = 5) -> DataFrame:
 
 def write_fingerprint_index(
     docs: DataFrame, path: str, id_col: str = "doc_id",
-    text_col: str = "text", mode: str = "overwrite",
 ) -> None:
-    """Materialize the corpus content-fingerprint index: one row per doc,
-    (fp = sha256(text), id), partitioned by the fingerprint's first hex
-    byte (256 near-uniform partitions).  The continuous-crawl primitive:
-    dedup of batch N+1 never rescans the corpus — it joins this index.
-    `mode='append'` is how a batch commits its own novel fingerprints.
+    """Append the docs' content fingerprints to the exact-dedup index at
+    `path` (the first append creates it): one row per doc, (fp =
+    `extract_sha256`, first_id = id), partitioned by the fingerprint's
+    first hex byte (256 near-uniform partitions).  The continuous-crawl
+    primitive: dedup of batch N+1 never rescans the corpus — it
+    anti-joins this index (`incremental_exact_dedup`).
 
     The frame is hash-repartitioned on fp_prefix before the write so each
     append lands ONE file per partition dir — without this, every writing
@@ -771,94 +788,51 @@ def write_fingerprint_index(
     many-thousand-file listing (measured: per-batch crawl wall drifted
     12.8 -> 18.4s over four appends; flat after).
 
-    Append mode first recovers any interrupted compaction swap (mirrors
-    `write_minhash_index`): a standalone append landing between the two
-    swap renames would otherwise recreate `<path>` and permanently
-    strand the `.replaced` backup, silently shrinking the fingerprint
-    corpus.  (In the crawl flow `incremental_exact_dedup` recovers first
-    in the same batch, which only masked the hazard.)"""
-    if mode == "append":
-        from lightly_ocr_spark.jobs.compact_job import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(path)
+    An interrupted compaction swap is recovered first: an append landing
+    between the two swap renames would otherwise recreate `path` and
+    strand the backup for good, silently shrinking the fingerprint
+    corpus."""
+    recover_interrupted_swap(path)
     docs.select(
-        F.sha2(F.col(text_col), 256).alias("fp"),
+        F.col("extract_sha256").alias("fp"),
         F.col(id_col).alias("first_id"),
     ).withColumn("fp_prefix", F.substring("fp", 1, 2)).repartition(
         "fp_prefix"
-    ).write.mode(mode).partitionBy("fp_prefix").parquet(path)
+    ).write.mode("append").partitionBy("fp_prefix").parquet(path)
 
 
 def incremental_exact_dedup(
     spark: SparkSession, new_batch: DataFrame, index_path: str,
-    id_col: str = "doc_id", text_col: str = "text",
-    commit: bool = True,
+    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Dedup a NEW crawl batch against the persisted corpus index, then
-    (commit=True) append the survivors' fingerprints so the next batch
-    sees them.
+    """Exact-dedup a NEW crawl batch against the persisted fingerprint
+    index.  Compute only: the caller appends the survivors with
+    `write_fingerprint_index` once its own commit allows.
 
-    Three steps, none touching corpus text: (1) intra-batch exact dedup
-    (keeper = min id per fingerprint); (2) anti-join the batch's
-    fingerprints against the index (shuffle carries 32-byte hashes, and
-    the index side is scanned, never rewritten); (3) append novel
-    fingerprints.  Returns the surviving rows with ALL input columns plus
-    `fp` (pass-through, so job pipelines keep their metadata).  At 10^12
-    docs the index is itself big — but it is hash-partitioned, compact
-    (one 64-hex row per doc), and this plan reads it once per batch
-    instead of re-fingerprinting the corpus."""
-    batch = new_batch.withColumn("fp", F.sha2(F.col(text_col), 256))
-    w = Window.partitionBy("fp").orderBy(id_col)
-    intra = (
-        batch.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    # a compaction of the index (crawl_job's documented cadence) that
-    # crashed between its two swap renames leaves the whole corpus
-    # fingerprint set at <path>.replaced and nothing at <path> — restore
-    # it, or the PATH_NOT_FOUND fallback below would silently re-admit
-    # every cross-batch duplicate AND strand the old index forever (the
-    # append below recreates <path>, making later recovery a no-op)
-    from lightly_ocr_spark.jobs.compact_job import recover_interrupted_swap
-
-    recover_interrupted_swap(index_path)
-    try:
-        index = spark.read.parquet(index_path).select("fp")
-        fresh = intra.join(index, "fp", "left_anti")
-    except AnalysisException as e:
-        # first batch: no index at the path yet — everything is novel.
-        # Only PATH_NOT_FOUND-class failures mean "first batch"; a corrupt
-        # footer / permission / IO error must propagate, or cross-batch
-        # dedup silently degrades to intra-batch and (commit=True) appends
-        # duplicate fingerprints that break the index's one-row-per-content
-        # invariant.
-        cond = e.getCondition() or ""
-        if "PATH_NOT_FOUND" not in cond and "PATH_NOT_FOUND" not in str(e):
-            raise
-        fresh = intra
-    if commit:
-        # break lineage BEFORE appending: Spark recaches (recomputes) any
-        # cached plan that reads a path being written, so a mere persist
-        # would silently re-run the anti-join against the UPDATED index
-        # and return an empty frame; a checkpoint's materialized rows have
-        # no reference to the path
-        fresh = fresh.localCheckpoint(eager=True)
-        write_fingerprint_index(
-            fresh, index_path, id_col=id_col, text_col=text_col,
-            mode="append",
+    Two steps, neither touching corpus text: (1) intra-batch exact dedup
+    (`min_id_per_content`); (2) anti-join the batch's `extract_sha256`
+    against the index's `fp` (the shuffle carries 64-hex hashes, and the
+    index side is scanned, never rewritten).  Returns the surviving rows
+    with all input columns, eagerly materialised: Spark recaches a plan
+    whose source path is written, so a frame that still read the index
+    would be re-evaluated against the caller's later append and come back
+    empty.  At 10^12 docs the index is itself big — but it is
+    hash-partitioned, compact (one 64-hex row per doc), and this plan
+    reads it once per batch instead of re-fingerprinting the corpus."""
+    fresh = min_id_per_content(new_batch, id_col)
+    index = read_index(spark, index_path)
+    if index is not None:
+        fresh = fresh.join(
+            index.select(F.col("fp").alias("extract_sha256")),
+            "extract_sha256", "left_anti",
         )
-    return fresh
+    return fresh.localCheckpoint(eager=True)
 
 
-def write_minhash_index(
-    sigs: DataFrame, path: str, mode: str = "overwrite",
-    k: int = MINHASH_K, bands: int = MINHASH_BANDS,
-) -> None:
-    """Materialize the corpus NEAR-dup index from a signature frame
-    (doc_id, mh0..mh{k-1}): two datasets under `path` —
+def write_minhash_index(sigs: DataFrame, path: str) -> None:
+    """Append a signature frame (doc_id, mh0..mh{k-1}) to the corpus
+    NEAR-dup index (the first append creates it): two datasets under
+    `path` —
 
       sigs/     one row per doc (the verification surface; joined only
                 for candidates, by doc_id)
@@ -875,7 +849,6 @@ def write_minhash_index(
     and the next batch's candidate scan paid a 4096-task stage (measured:
     bucket join 5.1s -> ~1s, append 14s -> ~4s at 50k docs).
 
-    `mode='append'` is how a batch commits its survivors' signatures —
     IDEMPOTENT BY CONSTRUCTION: already-indexed doc_ids are anti-joined
     out against the existing sigs/ dataset before anything is written,
     so a crash-replay that recomputes the same survivor set appends
@@ -894,70 +867,21 @@ def write_minhash_index(
     duplicate bucket rows are absorbed by the candidate `distinct` and
     by `cap_buckets`' distinct-id counting.  Appending sigs first would
     instead make the replay skip the doc with its buckets missing —
-    permanently unmatchable.
-
-    `mode='overwrite'` (an index REBUILD) is atomic: both datasets are
-    fully written under `<path>.inprogress` and swapped in with the
-    compact_job rename pair, so no crash window leaves new sigs next to
-    stale buckets (where candidate hits would inner-join to missing
-    signatures and near-dup matches silently vanish).  A crash between
-    the two renames leaves the old index at `<path>.replaced`; readers
-    and the next write restore it via `recover_interrupted_swap`."""
-    import os
-    import shutil
-
-    from lightly_ocr_spark.jobs.compact_job import recover_interrupted_swap
-
-    if mode not in ("overwrite", "append"):
-        raise ValueError(
-            f"write_minhash_index supports mode='overwrite' (atomic "
-            f"rebuild) or 'append' (idempotent commit), got {mode!r}"
-        )
-
-    def _buckets(frame: DataFrame) -> DataFrame:
-        return (
-            band_buckets(frame, k, bands)
-            .withColumn("bh_prefix", F.pmod("bh", F.lit(16)).cast("int"))
-            .repartition("band", "bh_prefix")
-        )
-
-    if mode == "overwrite":
-        tmp = path.rstrip("/") + ".inprogress"
-        shutil.rmtree(tmp, ignore_errors=True)
-        sigs.write.mode("overwrite").parquet(f"{tmp}/sigs")
-        _buckets(sigs).write.mode("overwrite").partitionBy(
-            "band", "bh_prefix"
-        ).parquet(f"{tmp}/buckets")
-        recover_interrupted_swap(path)
-        if os.path.exists(path):
-            backup = path.rstrip("/") + ".replaced"
-            shutil.rmtree(backup, ignore_errors=True)
-            os.rename(path, backup)
-            os.rename(tmp, path)
-            shutil.rmtree(backup, ignore_errors=True)
-        else:
-            os.rename(tmp, path)
-        return
-    # append: restore any interrupted sub-dataset compaction, filter to
-    # genuinely-new doc_ids, then BUCKETS first, SIGS second (docstring)
-    recover_interrupted_swap(f"{path}/sigs")
+    permanently unmatchable.  Both sub-datasets' interrupted compaction
+    swaps are recovered before anything is read or written."""
     recover_interrupted_swap(f"{path}/buckets")
     new_sigs = sigs
-    try:
-        existing = sigs.sparkSession.read.parquet(f"{path}/sigs").select(
-            "doc_id"
-        )
+    existing = read_index(sigs.sparkSession, f"{path}/sigs")
+    if existing is not None:
         # the anti-join plan reads path/sigs, which the write below
         # updates — break lineage first or the write recaches the plan
         # and re-evaluates it against the post-append state
-        new_sigs = sigs.join(existing, "doc_id", "left_anti") \
-            .localCheckpoint(eager=True)
-    except AnalysisException as e:
-        cond = e.getCondition() or ""
-        if "PATH_NOT_FOUND" not in cond and "PATH_NOT_FOUND" not in str(e):
-            raise
-        # first append: the path does not exist yet
-    _buckets(new_sigs).write.mode("append").partitionBy(
+        new_sigs = sigs.join(
+            existing.select("doc_id"), "doc_id", "left_anti"
+        ).localCheckpoint(eager=True)
+    band_buckets(new_sigs).withColumn(
+        "bh_prefix", F.pmod("bh", F.lit(16)).cast("int")
+    ).repartition("band", "bh_prefix").write.mode("append").partitionBy(
         "band", "bh_prefix"
     ).parquet(f"{path}/buckets")
     new_sigs.write.mode("append").parquet(f"{path}/sigs")
@@ -965,182 +889,131 @@ def write_minhash_index(
 
 def incremental_near_dedup(
     spark: SparkSession, new_batch: DataFrame, index_path: str,
-    id_col: str = "doc_id", text_col: str = "text",
-    k: int = MINHASH_K, bands: int = MINHASH_BANDS, ngram: int = 3,
-    min_agreement: float = NEAR_DUP_MIN_AGREEMENT, commit: bool = True,
-    checkpoint_dir: str | None = None,
-    with_sigs: bool = False,
-    max_bucket: int | None = None,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Near-dedup a NEW crawl batch against the persisted minhash index,
-    then (commit=True) append the survivors' signatures so the next batch
-    sees them — the MinHash-LSH twin of `incremental_exact_dedup`, and
-    the missing piece of a continuous-crawl loop (exact dedup alone lets
+    id_col: str = "doc_id", max_bucket: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Near-dedup a NEW crawl batch against the persisted minhash index —
+    the MinHash-LSH twin of `incremental_exact_dedup`, and the missing
+    piece of a continuous-crawl loop (exact dedup alone lets
     trivially-mutated boilerplate re-enter the corpus every batch).
+    Compute only: the caller appends the returned signatures with
+    `write_minhash_index` once its own commit allows.
 
     Plan, none of it rescanning corpus text:
-      1. batch signatures (one groupBy) — persisted: they feed candidate
-         generation, BOTH verification sides, and the commit append;
+      1. batch signatures over `NEAR_DUP_NGRAM` shingles of `text` (one
+         groupBy) — persisted: they feed candidate generation, BOTH
+         verification sides, and the survivor signatures;
       2. CROSS candidates: batch buckets equi-join the index's bucket
          dataset on (band, bh) — uniform hash keys, candidates bounded by
          bucket collisions, never all-pairs;
-      3. verify candidates by full-signature agreement (>= min_agreement
-         of k minhashes) joining batch sigs with ONLY the candidate
-         corpus sigs; any verified match drops the batch doc (the corpus
-         copy is the cluster keeper);
+      3. verify candidates by full-signature agreement (>=
+         `NEAR_DUP_MIN_AGREEMENT` of the k minhashes) joining batch sigs
+         with ONLY the candidate corpus sigs; any verified match drops
+         the batch doc (the corpus copy is the cluster keeper);
       4. INTRA-batch near-dedup among the remainder: `near_dup_losers`,
-         the same clustering the curation pipeline runs;
-      5. append survivors' sigs+buckets (idempotent on replay: the
-         append itself anti-joins already-indexed doc_ids — see
-         `write_minhash_index`; self-match in step 3 cannot be relied on
-         because a bucket cap legally suppresses it for capped docs).
+         the same clustering the curation pipeline runs.
 
-    Returns surviving rows with all input columns (already materialized —
-    safe to act on after any later index write); `with_sigs=True` also
-    returns the survivors' signature frame, so callers that gate the
-    append themselves (crawl_job) never recompute the signature
-    aggregation.  Dropped near-dups' signatures are NOT indexed — each
-    cluster is represented by its keeper, exactly like the batch curation
-    pipeline."""
+    Returns `(survivors, survivor_sigs)`, both eagerly materialised: the
+    surviving rows with all input columns (safe to act on after any
+    later index write), and their signature frame, so the append never
+    recomputes the signature aggregation.  Dropped near-dups' signatures
+    are not returned — each cluster is represented by its keeper,
+    exactly like the batch curation pipeline.  Replaying a batch after
+    its append drops nothing twice: `write_minhash_index` anti-joins
+    already-indexed doc_ids (self-match in step 3 cannot be relied on,
+    because a bucket cap legally suppresses it for capped docs)."""
     from pyspark import StorageLevel
 
-    batch = new_batch.withColumnRenamed(id_col, "doc_id") \
-        if id_col != "doc_id" else new_batch
+    k, bands = MINHASH_K, MINHASH_BANDS
+    need = int(NEAR_DUP_MIN_AGREEMENT * k)
+    # a sub-dataset missing without a compaction backup is the append
+    # crash window, which stays replay-safe by redundancy (see
+    # write_minhash_index): no cross drops until both exist
+    idx_sigs = read_index(spark, f"{index_path}/sigs")
+    idx_buckets = read_index(spark, f"{index_path}/buckets")
+    batch = new_batch.withColumnRenamed(id_col, "doc_id")
     sig_b = minhash_signatures(
-        batch.select("doc_id", F.col(text_col).alias("text")),
-        k=k, ngram=ngram,
+        batch.select("doc_id", "text"), k=k, ngram=NEAR_DUP_NGRAM
     ).persist(StorageLevel.MEMORY_AND_DISK)
+    sig_rem = None
     try:
-        return _near_dedup_core(
-            spark, batch, sig_b, index_path, id_col, k, bands, need=int(
-                min_agreement * k),
-            commit=commit, checkpoint_dir=checkpoint_dir,
-            with_sigs=with_sigs, max_bucket=max_bucket,
-        )
-    finally:
-        # release the signature cache even on failure (a raised corrupt-
-        # index read must not leak a persisted corpus-scale frame)
-        sig_b.unpersist()
-
-
-def _near_dedup_core(
-    spark, batch, sig_b, index_path, id_col, k, bands, need,
-    commit, checkpoint_dir, with_sigs, max_bucket=None,
-):
-    """Body of `incremental_near_dedup` (split out so the signature
-    cache's persist/unpersist pairs in a try/finally)."""
-    from pyspark import StorageLevel
-
-    # a rebuild (overwrite) crash between the swap renames leaves the old
-    # index at <path>.replaced and nothing at <path> — restore it, or the
-    # PATH_NOT_FOUND fallback below would silently treat a populated
-    # corpus as "first batch".  The SUB-datasets get the same treatment:
-    # the documented compaction cadence swaps sigs/ and buckets/
-    # individually, and a crashed buckets/ compaction would otherwise
-    # make every indexed doc unmatchable (candidates need bucket rows)
-    # while the next commit recreates buckets/ and strands the backup
-    # forever.  A sub-dataset missing WITHOUT a .replaced backup is the
-    # append-crash window, which stays replay-safe by redundancy (see
-    # write_minhash_index).
-    from lightly_ocr_spark.jobs.compact_job import recover_interrupted_swap
-
-    recover_interrupted_swap(index_path)
-    recover_interrupted_swap(f"{index_path}/sigs")
-    recover_interrupted_swap(f"{index_path}/buckets")
-    cross_drops = None
-    try:
-        idx_sigs = spark.read.parquet(f"{index_path}/sigs").select(
-            F.col("doc_id").alias("corpus_id"),
-            *[F.col(f"mh{i}") for i in range(k)],
-        )
-        idx_buckets = spark.read.parquet(f"{index_path}/buckets").select(
-            F.col("doc_id").alias("corpus_id"), "band", "bh"
-        )
-        # the cap applies to BOTH sides: a degenerate band hash grows a
-        # mega-bucket on the index side too, and the cross equi-join on
-        # it would be |batch-bucket| x |index-bucket|.  The index-side
-        # size test runs over ONLY the buckets the batch touches (the
-        # restricting join keeps each touched bucket's full membership,
-        # so the test is exact) — capping the whole index would add a
-        # full-index aggregate per batch that grows with the corpus.
-        bb = cap_buckets(band_buckets(sig_b, k, bands), max_bucket)
-        if max_bucket is None:
-            idx_side = idx_buckets
-        else:
-            idx_side = cap_buckets(
-                idx_buckets.join(
-                    bb.select("band", "bh").distinct(), ["band", "bh"]
-                ),
-                max_bucket,
+        cross_drops = None
+        if idx_sigs is not None and idx_buckets is not None:
+            # the cap applies to BOTH sides: a degenerate band hash grows
+            # a mega-bucket on the index side too, and the cross
+            # equi-join on it would be |batch-bucket| x |index-bucket|.
+            # The index-side size test runs over ONLY the buckets the
+            # batch touches (the restricting join keeps each touched
+            # bucket's full membership, so the test is exact) — capping
+            # the whole index would add a full-index aggregate per batch
+            # that grows with the corpus.
+            idx_buckets = idx_buckets.select(
+                F.col("doc_id").alias("corpus_id"), "band", "bh"
             )
-        cand = (
-            bb.join(idx_side, ["band", "bh"])
-            .select("doc_id", "corpus_id")
-            .distinct()
-        )
-        cross_drops = (
-            cand.join(sig_b.alias("sa"), "doc_id")
-            .join(idx_sigs.alias("sb"), "corpus_id")
-            .filter(signature_agreement(k) >= need)
-            .select("doc_id")
-            .distinct()
-        )
-    except AnalysisException as e:
-        cond = e.getCondition() or ""
-        if "PATH_NOT_FOUND" not in cond and "PATH_NOT_FOUND" not in str(e):
-            raise
-        # first batch: no index yet
-
-    # cross_drops embeds the bucket + verification joins against the
-    # GROWING index, and it feeds THREE consumers (the survivor
-    # anti-join, and sig_rem's every evaluation) — eagerly checkpoint the
-    # (tiny: verified drop ids only) frame, or each consumer re-runs the
-    # index joins and per-batch wall grows with corpus size (measured:
-    # near leg 12 -> 19.5s over four 50k batches; flat ~10s after)
-    if cross_drops is not None:
-        cross_drops = cross_drops.localCheckpoint(eager=True)
-    sig_rem = (
-        sig_b.join(cross_drops, "doc_id", "left_anti")
-        if cross_drops is not None else sig_b
-    )
-    # sig_rem feeds five consumers (pair self-join x2, verify join x2,
-    # survivor sigs) — persist for the duration of this call
-    sig_rem = sig_rem.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+            bb = cap_buckets(band_buckets(sig_b, k, bands), max_bucket)
+            if max_bucket is not None:
+                idx_buckets = cap_buckets(
+                    idx_buckets.join(
+                        bb.select("band", "bh").distinct(), ["band", "bh"]
+                    ),
+                    max_bucket,
+                )
+            cand = (
+                bb.join(idx_buckets, ["band", "bh"])
+                .select("doc_id", "corpus_id")
+                .distinct()
+            )
+            # cross_drops embeds the bucket + verification joins against
+            # the GROWING index, and it feeds THREE consumers (the
+            # survivor anti-join, and sig_rem's every evaluation) —
+            # eagerly checkpoint the (tiny: verified drop ids only)
+            # frame, or each consumer re-runs the index joins and
+            # per-batch wall grows with corpus size (measured: near leg
+            # 12 -> 19.5s over four 50k batches; flat ~10s after)
+            cross_drops = (
+                cand.join(sig_b.alias("sa"), "doc_id")
+                .join(idx_sigs.select(
+                    F.col("doc_id").alias("corpus_id"),
+                    *[F.col(f"mh{i}") for i in range(k)],
+                ).alias("sb"), "corpus_id")
+                .filter(signature_agreement(k) >= need)
+                .select("doc_id")
+                .distinct()
+            ).localCheckpoint(eager=True)
+        # sig_rem feeds five consumers (pair self-join x2, verify join
+        # x2, survivor sigs) — persist for the duration of this call
+        sig_rem = (
+            sig_b.join(cross_drops, "doc_id", "left_anti")
+            if cross_drops is not None else sig_b
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         intra_drops = near_dup_losers(
-            sig_rem, k, bands, need, checkpoint_dir=checkpoint_dir,
-            max_bucket=max_bucket,
+            sig_rem, k, bands, need, max_bucket=max_bucket,
         )
-        # anti-joins, not a semi-join against sig_rem: a doc with no tokens
-        # has no signature at all — it cannot near-dup anything and must
-        # SURVIVE, not silently vanish with the dropped set
+        # anti-joins, not a semi-join against sig_rem: a doc with no
+        # tokens has no signature at all — it cannot near-dup anything
+        # and must SURVIVE, not silently vanish with the dropped set
         survivors = batch
         if cross_drops is not None:
             survivors = survivors.join(cross_drops, "doc_id", "left_anti")
-        survivors = survivors.join(intra_drops, "doc_id", "left_anti")
-
-        # materialize BEFORE any append and before releasing the signature
-        # cache: (a) the survivor plan reads index_path, and Spark recaches
-        # plans whose source path is written (a commit would silently
-        # re-evaluate the returned frame against the post-append index where
-        # every survivor self-matches — the round-3 incremental_exact_dedup
-        # lesson); (b) the caller's first action would otherwise re-run the
-        # whole signature aggregation after sig_b is unpersisted below.
-        survivors = survivors.localCheckpoint(eager=True)
-        survivor_sigs = (
-            sig_rem.join(intra_drops, "doc_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
+        # materialize before releasing the signature caches and before
+        # the caller's append: (a) the survivor plan reads index_path,
+        # and Spark recaches plans whose source path is written (the
+        # append would silently re-evaluate the returned frame against
+        # the post-append index, where every survivor self-matches);
+        # (b) the caller's first action would otherwise re-run the whole
+        # signature aggregation after the caches are released.
+        survivors = survivors.join(
+            intra_drops, "doc_id", "left_anti"
+        ).localCheckpoint(eager=True)
+        survivor_sigs = sig_rem.join(
+            intra_drops, "doc_id", "left_anti"
+        ).localCheckpoint(eager=True)
     finally:
-        sig_rem.unpersist()
-    if commit:
-        write_minhash_index(survivor_sigs, index_path, mode="append",
-                            k=k, bands=bands)
-    if id_col != "doc_id":
-        survivors = survivors.withColumnRenamed("doc_id", id_col)
-    if with_sigs:
-        return survivors, survivor_sigs
-    return survivors
+        # release the caches even on failure (a raised corrupt-index read
+        # must not leak a persisted corpus-scale frame)
+        sig_b.unpersist()
+        if sig_rem is not None:
+            sig_rem.unpersist()
+    return survivors.withColumnRenamed("doc_id", id_col), survivor_sigs
 
 
 def passage_dedup_docs(

@@ -361,8 +361,9 @@ def repetition_signals(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def repetition_signals_df(d: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Core of `repetition_signals` over an arbitrary (id, text) frame —
-    also the gate the curation job applies with --max-rep.  Shingles come
+    """Core of `repetition_signals` over an arbitrary (id, text) frame.
+    (Curate's --max-rep gate reads `enrich_pages`' `top_bigram_frac`
+    instead, computed in its one Arrow pass.)  Shingles come
     from the shared `word_ngrams` helper (one slice-bounds implementation
     across decontamination/components/repetition).
 

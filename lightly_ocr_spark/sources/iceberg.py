@@ -2,21 +2,14 @@
 
 north_rule targets Iceberg tables; this sandbox ships no
 `iceberg-spark-runtime` jar (probed: `org.apache.iceberg.spark.SparkCatalog`
-is not loadable — see `iceberg_available()`), so the engine's writer is an
-interface with two implementations:
-
-* `ParquetManifestSink` — the active one (`jobs/extract_job.py`): parquet
-  slices + `_manifests/slice-K.json` commit markers + `_rollup.json`.
-  Commit/resume semantics mirror Iceberg's snapshot model: data files land
-  first, the manifest write IS the atomic commit, uncommitted output is
-  overwritten idempotently on retry.
-* `IcebergSink` — thin mapping used when the jar is on the classpath:
-  `df.writeTo(table).append()` per slice inside the same slice loop; resume
-  reads committed snapshot summaries instead of manifest files.
-
-Swapping sinks changes no operator code: both expose `write_slice` /
-`committed_slices`.
-"""
+is not loadable — see `iceberg_available()`).  The jobs therefore write
+parquet plus JSON commit markers through `sources.commit`: data files land
+first, the atomic marker write IS the commit (`extract_job`'s
+`_manifests/slice-K.json`), and uncommitted output is overwritten
+idempotently on retry — Iceberg's snapshot model without the jar.
+`IcebergSink` is the thin mapping for when the jar is on the classpath:
+`df.writeTo(table).append()` per slice, with resume reading committed
+snapshot summaries instead of marker files.  No job calls it yet."""
 
 from __future__ import annotations
 
@@ -40,9 +33,9 @@ class IcebergSink:
     def __init__(self, spark: SparkSession, table: str):
         if not iceberg_available(spark):
             raise NotImplementedError(
-                "iceberg-spark-runtime jar not on the classpath; use the "
-                "ParquetManifestSink path (jobs/extract_job.py) which keeps "
-                "identical commit/resume semantics"
+                "iceberg-spark-runtime jar not on the classpath; the jobs' "
+                "parquet + commit-marker output (sources.commit) keeps the "
+                "same commit/resume semantics"
             )
         self.spark = spark
         self.table = table

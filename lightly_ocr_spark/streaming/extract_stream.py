@@ -10,12 +10,17 @@ the same manifest discipline as the batch job.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.schemas import PAGES_SCHEMA
+from lightly_ocr_spark.sources.commit import atomic_json, require_local
 
 
 def extract_stream(
@@ -59,14 +64,14 @@ def extract_stream_job(
     epoch's rows to `epoch=K/` idempotently (mode=overwrite re-runs a
     half-written epoch cleanly) and commits a per-epoch manifest AFTER the
     write — the streaming twin of the batch job's slice/manifest discipline.
+    The epoch's row count comes from an `Observation` riding the write,
+    not from re-reading what was just written.
 
     Restart semantics come from the checkpoint: a restarted query resumes
     from the last committed offsets, re-processing at most the one epoch
     whose write raced the failure, which the overwrite absorbs.  Run to
     completion of currently-available files; returns a summary."""
-    import json as _json
-    import os as _os
-
+    require_local(out_dir)
     stream_pages = (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -75,18 +80,18 @@ def extract_stream_job(
     extracted = extract_pages(stream_pages).select(
         "url", "text", "extract_sha256"
     )
-    manifests_dir = _os.path.join(out_dir, "_manifests")
-    _os.makedirs(manifests_dir, exist_ok=True)
+    manifests_dir = os.path.join(out_dir, "_manifests")
+    os.makedirs(manifests_dir, exist_ok=True)
 
     def write_epoch(df, epoch_id: int) -> None:
-        path = _os.path.join(out_dir, f"epoch={epoch_id}")
-        df.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
-        manifest = {"epoch": int(epoch_id), "rows": int(n)}
-        tmp = _os.path.join(manifests_dir, f"epoch-{epoch_id}.json.tmp")
-        with open(tmp, "w") as f:
-            _json.dump(manifest, f)
-        _os.replace(tmp, tmp[:-4])
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
+        atomic_json(
+            os.path.join(manifests_dir, f"epoch-{epoch_id}.json"),
+            {"epoch": int(epoch_id), "rows": int(obs.get["n"])},
+        )
 
     q = (
         extracted.writeStream.foreachBatch(write_epoch)
@@ -97,11 +102,9 @@ def extract_stream_job(
         q.processAllAvailable()
     finally:
         q.stop()
-    import glob as _glob
-
-    manifests = sorted(_glob.glob(_os.path.join(manifests_dir, "epoch-*.json")))
+    manifests = sorted(glob.glob(os.path.join(manifests_dir, "epoch-*.json")))
     total = 0
     for m in manifests:
         with open(m) as f:
-            total += _json.load(f)["rows"]
+            total += json.load(f)["rows"]
     return {"epochs": len(manifests), "rows_out": total}

@@ -187,19 +187,19 @@ class TestCrawlCrashWindows:
         out, idx, b2 = self._setup(spark, tmp_path)
 
         import lightly_ocr_spark.jobs.crawl_job as cj
-        real_json = cj._atomic_json
+        real_json = cj.atomic_json
 
         def boom_marker(path, payload):
             if path.endswith(".fp.json"):
                 raise RuntimeError("simulated crash before fp marker")
             real_json(path, payload)
 
-        monkeypatch.setattr(cj, "_atomic_json", boom_marker)
+        monkeypatch.setattr(cj, "atomic_json", boom_marker)
         with pytest.raises(RuntimeError, match="simulated crash"):
             run_crawl_batch(spark, b2, out, idx, batch_id="b2")
         assert spark.read.parquet(idx).count() == 6  # append DID land
 
-        monkeypatch.setattr(cj, "_atomic_json", real_json)
+        monkeypatch.setattr(cj, "atomic_json", real_json)
         m = run_crawl_batch(spark, b2, out, idx, batch_id="b2")
         assert m["rows_written"] == 2
         # no duplicate fingerprints from the double-run
@@ -216,19 +216,19 @@ class TestCrawlCrashWindows:
         out, idx, b2 = self._setup(spark, tmp_path)
 
         import lightly_ocr_spark.jobs.crawl_job as cj
-        real_json = cj._atomic_json
+        real_json = cj.atomic_json
 
         def boom_manifest(path, payload):
             if path.endswith(".json") and not path.endswith(".fp.json"):
                 raise RuntimeError("simulated crash before manifest")
             real_json(path, payload)
 
-        monkeypatch.setattr(cj, "_atomic_json", boom_manifest)
+        monkeypatch.setattr(cj, "atomic_json", boom_manifest)
         with pytest.raises(RuntimeError, match="simulated crash"):
             run_crawl_batch(spark, b2, out, idx, batch_id="b2")
         assert spark.read.parquet(idx).count() == 4  # index untouched
 
-        monkeypatch.setattr(cj, "_atomic_json", real_json)
+        monkeypatch.setattr(cj, "atomic_json", real_json)
         m = run_crawl_batch(spark, b2, out, idx, batch_id="b2")
         assert m["n_unique"] == 2 and m["rows_written"] == 2
         assert spark.read.parquet(idx).count() == 6
@@ -473,7 +473,10 @@ class TestNearIndexCompaction:
         import glob as g
 
         from lightly_ocr_spark.jobs.compact_job import run_compact
-        from lightly_ocr_spark.operators.dedup import incremental_near_dedup
+        from lightly_ocr_spark.operators.dedup import (
+            incremental_near_dedup,
+            write_minhash_index,
+        )
 
         nidx = str(tmp_path / "mh_index")
         base = {}
@@ -487,7 +490,8 @@ class TestNearIndexCompaction:
                 rows.append((f"d{b}-{i}", text))
                 base[f"d{b}-{i}"] = text
             df = spark.createDataFrame(rows, "doc_id string, text string")
-            incremental_near_dedup(spark, df, nidx, commit=True)
+            _, sigs = incremental_near_dedup(spark, df, nidx)
+            write_minhash_index(sigs, nidx)
 
         def probe():
             pdf = spark.createDataFrame(
@@ -500,7 +504,7 @@ class TestNearIndexCompaction:
                 ],
                 "doc_id string, text string",
             )
-            out = incremental_near_dedup(spark, pdf, nidx, commit=False)
+            out, _ = incremental_near_dedup(spark, pdf, nidx)
             return sorted(r["doc_id"] for r in out.collect())
 
         before = probe()
@@ -537,15 +541,19 @@ class TestCompactionCrashRecovery:
         <idx>.replaced and nothing at <idx>.  The next batch must restore
         them — NOT take the 'first batch' branch, which would silently
         re-admit every cross-batch duplicate and strand the backup."""
-        from lightly_ocr_spark.operators.dedup import incremental_exact_dedup
+        from lightly_ocr_spark.operators.dedup import (
+            incremental_exact_dedup,
+            write_fingerprint_index,
+        )
 
         idx = str(tmp_path / "fp_index")
         d0 = spark.createDataFrame(
             [(f"d{i}", f"doc number {i} with some words " * 3)
              for i in range(20)],
             "doc_id string, text string",
-        )
-        incremental_exact_dedup(spark, d0, idx, commit=True)
+        ).withColumn("extract_sha256", F.sha2("text", 256))
+        write_fingerprint_index(
+            incremental_exact_dedup(spark, d0, idx), idx)
         n0 = spark.read.parquet(idx).count()
         assert n0 == 20
 
@@ -557,11 +565,12 @@ class TestCompactionCrashRecovery:
             [("dup", "doc number 3 with some words " * 3),   # dupes d3
              ("new", "genuinely novel content here " * 3)],
             "doc_id string, text string",
-        )
-        out = incremental_exact_dedup(spark, d1, idx, commit=True)
+        ).withColumn("extract_sha256", F.sha2("text", 256))
+        out = incremental_exact_dedup(spark, d1, idx)
         ids = sorted(r["doc_id"] for r in out.collect())
         assert ids == ["new"], ids  # duplicate caught => index recovered
         assert not os.path.exists(idx + ".replaced")
+        write_fingerprint_index(out, idx)
         assert spark.read.parquet(idx).count() == n0 + 1
 
     def test_near_index_interrupted_bucket_compaction_recovers(
@@ -572,7 +581,10 @@ class TestCompactionCrashRecovery:
         individually): a stranded buckets.replaced must be restored, or
         every indexed doc becomes unmatchable while the next commit
         recreates buckets/ and makes recovery impossible forever."""
-        from lightly_ocr_spark.operators.dedup import incremental_near_dedup
+        from lightly_ocr_spark.operators.dedup import (
+            incremental_near_dedup,
+            write_minhash_index,
+        )
 
         nidx = str(tmp_path / "mh_index")
         base = " ".join(f"uniqueword{j} othertok{j}" for j in range(30))
@@ -581,7 +593,8 @@ class TestCompactionCrashRecovery:
              ("d1", " ".join(f"second{j} doc{j}words" for j in range(30)))],
             "doc_id string, text string",
         )
-        incremental_near_dedup(spark, d0, nidx, commit=True)
+        _, sigs = incremental_near_dedup(spark, d0, nidx)
+        write_minhash_index(sigs, nidx)
 
         os.rename(os.path.join(nidx, "buckets"),
                   os.path.join(nidx, "buckets.replaced"))
@@ -590,7 +603,7 @@ class TestCompactionCrashRecovery:
             [("p-mut", base + " extra")],  # near-copy of indexed d0
             "doc_id string, text string",
         )
-        out = incremental_near_dedup(spark, probe, nidx, commit=False)
+        out, _ = incremental_near_dedup(spark, probe, nidx)
         assert out.count() == 0  # near-dup caught => buckets recovered
         assert not os.path.exists(os.path.join(nidx, "buckets.replaced"))
 

@@ -1168,48 +1168,61 @@ class TestRepetitionParity:
             assert _top_bigram_frac(t) == jvm[i], (i, t)
 
 
+def _near_commit(spark, batch, idx, **kw):
+    """One crawl-loop step: near-dedup `batch`, then append its survivors'
+    signatures to the index, as crawl_job does."""
+    from lightly_ocr_spark.operators.dedup import (
+        incremental_near_dedup,
+        write_minhash_index,
+    )
+
+    survivors, sigs = incremental_near_dedup(spark, batch, idx, **kw)
+    write_minhash_index(sigs, idx)
+    return survivors
+
+
 class TestIncrementalDedup:
     def test_cross_batch_dedup_against_persisted_index(self, spark, tmp_path):
         """Continuous-crawl exact dedup: batch 2's duplicates of batch 1
         (and its own intra-batch dupes) drop via the fingerprint index,
-        never by rescanning batch 1's text; novel fingerprints commit so
-        batch 3 sees them; commit=False leaves the index untouched."""
+        never by rescanning batch 1's text; the caller's append of novel
+        fingerprints lets batch 3 see them; the operator itself never
+        writes the index."""
         from lightly_ocr_spark.operators.dedup import (
             incremental_exact_dedup,
             write_fingerprint_index,
         )
 
+        def frame(rows):
+            return spark.createDataFrame(
+                rows, "doc_id long, text string"
+            ).withColumn("extract_sha256", F.sha2("text", 256))
+
         idx = str(tmp_path / "fp_index")
-        b1 = spark.createDataFrame(
-            [(i, f"batch one document {i} body") for i in range(10)],
-            "doc_id long, text string",
-        )
+        b1 = frame([(i, f"batch one document {i} body") for i in range(10)])
         s1 = incremental_exact_dedup(spark, b1, idx)
         assert s1.count() == 10  # first batch: everything novel
+        write_fingerprint_index(s1, idx)
 
-        b2 = spark.createDataFrame(
+        b2 = frame(
             # 0-4 duplicate batch 1; 100/101 are new; 102 dupes 101
             [(100 + i, f"batch one document {i} body") for i in range(5)]
             + [(100, "brand new text alpha"), (101, "brand new text beta"),
-               (102, "brand new text beta")],
-            "doc_id long, text string",
+               (102, "brand new text beta")]
         )
         s2 = incremental_exact_dedup(spark, b2, idx)
         got = sorted(r["doc_id"] for r in s2.collect())
         assert got == [100, 101]  # cross-batch AND intra-batch dupes gone
+        write_fingerprint_index(s2, idx)
 
-        b3 = spark.createDataFrame(
-            [(200, "brand new text alpha"),  # dupes batch 2's commit
-             (201, "never seen gamma")],
-            "doc_id long, text string",
-        )
-        s3 = incremental_exact_dedup(spark, b3, idx, commit=False)
+        b3 = frame([(200, "brand new text alpha"),  # dupes batch 2's commit
+                    (201, "never seen gamma")])
+        s3 = incremental_exact_dedup(spark, b3, idx)
         assert sorted(r["doc_id"] for r in s3.collect()) == [201]
-        # commit=False: replaying b3 still sees 201 as novel
-        s3b = incremental_exact_dedup(spark, b3, idx, commit=False)
+        # no append: replaying b3 still sees 201 as novel
+        s3b = incremental_exact_dedup(spark, b3, idx)
         assert sorted(r["doc_id"] for r in s3b.collect()) == [201]
 
-        from lightly_ocr_spark.operators.dedup import write_fingerprint_index  # noqa
         # index is hash-prefix partitioned on disk
         import glob as g
         assert g.glob(f"{idx}/fp_prefix=*"), "index not partitioned"
@@ -1219,8 +1232,8 @@ class TestIncrementalDedup:
     ):
         """Only PATH_NOT_FOUND means 'first batch'.  A real read failure
         (corrupt footer, junk files) must PROPAGATE — treating it as
-        first-batch would return duplicates as survivors and, with
-        commit=True, append duplicate fingerprints that permanently break
+        first-batch would return duplicates as survivors, and their
+        append would add duplicate fingerprints that permanently break
         the index's one-row-per-content invariant."""
         from lightly_ocr_spark.operators.dedup import incremental_exact_dedup
 
@@ -1229,9 +1242,9 @@ class TestIncrementalDedup:
         (idx / "part-00000.parquet").write_bytes(b"this is not parquet")
         b = spark.createDataFrame(
             [(1, "same text"), (2, "same text")], "doc_id long, text string"
-        )
+        ).withColumn("extract_sha256", F.sha2("text", 256))
         with pytest.raises(Exception) as ei:
-            incremental_exact_dedup(spark, b, str(idx), commit=False).count()
+            incremental_exact_dedup(spark, b, str(idx)).count()
         assert "PATH_NOT_FOUND" not in str(ei.value)
 
 
@@ -1288,8 +1301,7 @@ class TestBucketCap:
             + [("a", pair_a)],
             "doc_id string, text string",
         )
-        s1 = incremental_near_dedup(spark, b1, idx, commit=True,
-                                    max_bucket=20)
+        s1 = _near_commit(spark, b1, idx, max_bucket=20)
         # the mega docs share most shingles -> their buckets exceed the
         # cap -> they are NOT clustered intra-batch; all survive
         assert s1.count() == 31
@@ -1298,8 +1310,7 @@ class TestBucketCap:
             [("probe", pair_a + " extra")],
             "doc_id string, text string",
         )
-        s2 = incremental_near_dedup(spark, b2, idx, commit=False,
-                                    max_bucket=20)
+        s2, _ = incremental_near_dedup(spark, b2, idx, max_bucket=20)
         assert s2.count() == 0  # small-bucket near-dup still caught
 
 
@@ -1321,13 +1332,13 @@ class TestMinhashIndexAppendIdempotence:
         )
         sigs1 = minhash_signatures(d1, ngram=3).localCheckpoint(eager=True)
         idx = str(tmp_path / "idx")
-        write_minhash_index(sigs1, idx, mode="append")
+        write_minhash_index(sigs1, idx)
         n_sigs = spark.read.parquet(f"{idx}/sigs").count()
         n_buck = spark.read.parquet(f"{idx}/buckets").count()
         assert n_sigs == 5
 
         # crash-replay: identical append is a complete no-op
-        write_minhash_index(sigs1, idx, mode="append")
+        write_minhash_index(sigs1, idx)
         assert spark.read.parquet(f"{idx}/sigs").count() == n_sigs
         assert spark.read.parquet(f"{idx}/buckets").count() == n_buck
 
@@ -1338,7 +1349,7 @@ class TestMinhashIndexAppendIdempotence:
             "doc_id string, text string",
         )
         sigs2 = minhash_signatures(d2, ngram=3).localCheckpoint(eager=True)
-        write_minhash_index(sigs2, idx, mode="append")
+        write_minhash_index(sigs2, idx)
         sigs = spark.read.parquet(f"{idx}/sigs")
         assert sigs.count() == 6  # only d9 appended
         assert sigs.groupBy("doc_id").count().filter(
@@ -1372,7 +1383,7 @@ class TestIncrementalNearDedup:
             [(i, self._doc(i)) for i in range(4)],
             "doc_id long, text string",
         )
-        s1 = incremental_near_dedup(spark, b1, idx)
+        s1 = _near_commit(spark, b1, idx)
         n1 = s1.count()
         assert 1 <= n1 <= 4  # the shared preamble may cluster some of b1
 
@@ -1387,12 +1398,12 @@ class TestIncrementalNearDedup:
                  f"zq{i} xv{i} kj{i}" for i in range(30)))],
             "doc_id long, text string",
         )
-        s2 = incremental_near_dedup(spark, b2, idx)
+        s2 = _near_commit(spark, b2, idx)
         got2 = sorted(r["doc_id"] for r in s2.collect())
         assert got2 == [200], got2
 
         # replay of batch 2: survivors already indexed -> self-match -> []
-        s2b = incremental_near_dedup(spark, b2, idx)
+        s2b, _ = incremental_near_dedup(spark, b2, idx)
         assert s2b.count() == 0
 
     def test_no_token_docs_survive(self, spark, tmp_path):
@@ -1404,7 +1415,7 @@ class TestIncrementalNearDedup:
         b = spark.createDataFrame(
             [(1, self._doc(1)), (2, "")], "doc_id long, text string",
         )
-        s = incremental_near_dedup(spark, b, idx, commit=False)
+        s, _ = incremental_near_dedup(spark, b, idx)
         assert 2 in {r["doc_id"] for r in s.collect()}
 
     def test_intra_batch_transitive_chain_one_survivor(
@@ -1424,7 +1435,7 @@ class TestIncrementalNearDedup:
              (3, base + " taily")],
             "doc_id long, text string",
         )
-        s = incremental_near_dedup(spark, b, idx, commit=False)
+        s, _ = incremental_near_dedup(spark, b, idx)
         assert s.count() == 1 and s.collect()[0]["doc_id"] == 1
 
     def test_pass_through_columns_and_custom_id(self, spark, tmp_path):
@@ -1434,7 +1445,7 @@ class TestIncrementalNearDedup:
         b = spark.createDataFrame(
             [("u1", self._doc(5), 7)], "url string, text string, extra int",
         )
-        s = incremental_near_dedup(spark, b, idx, id_col="url")
+        s, _ = incremental_near_dedup(spark, b, idx, id_col="url")
         row = s.collect()[0]
         assert row["url"] == "u1" and row["extra"] == 7
 
@@ -1448,7 +1459,7 @@ class TestIncrementalNearDedup:
             [(1, self._doc(1))], "doc_id long, text string",
         )
         with pytest.raises(Exception) as ei:
-            incremental_near_dedup(spark, b, str(idx), commit=False).count()
+            incremental_near_dedup(spark, b, str(idx))[0].count()
         assert "PATH_NOT_FOUND" not in str(ei.value)
 
 
@@ -1492,7 +1503,7 @@ class TestNearIndexInvariant:
         idx = str(tmp_path / "inv_index")
         survivors = []
         for b in batches:
-            s = incremental_near_dedup(
+            s = _near_commit(
                 spark,
                 spark.createDataFrame(b, "doc_id long, text string"),
                 idx,

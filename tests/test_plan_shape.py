@@ -292,7 +292,10 @@ class TestIncrementalNearDedupPlanShape:
         (bucket joins + signature verification + anti-joins) — a
         cartesian/nested-loop anywhere means candidates stopped being
         bucket-bounded and the 10^12-doc story is gone."""
-        from lightly_ocr_spark.operators.dedup import incremental_near_dedup
+        from lightly_ocr_spark.operators.dedup import (
+            incremental_near_dedup,
+            write_minhash_index,
+        )
 
         idx = str(tmp_path / "mh_plan_idx")
         seed = spark.createDataFrame(
@@ -300,14 +303,15 @@ class TestIncrementalNearDedupPlanShape:
              for i in range(5)],
             "doc_id long, text string",
         )
-        incremental_near_dedup(spark, seed, idx)  # build a real index
+        _, sigs = incremental_near_dedup(spark, seed, idx)
+        write_minhash_index(sigs, idx)  # build a real index
 
         batch = spark.createDataFrame(
             [(100 + i, " ".join(f"nb{i}w{j} qq{i}x{j}" for j in range(20)))
              for i in range(5)],
             "doc_id long, text string",
         )
-        out = incremental_near_dedup(spark, batch, idx, commit=False)
+        out, _ = incremental_near_dedup(spark, batch, idx)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan

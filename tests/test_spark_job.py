@@ -358,10 +358,8 @@ class TestJsonlSource:
     def test_compact_recovers_interrupted_swap(self, spark, tmp_path):
         """Crash between the two swap renames leaves out_dir missing and
         the original at .replaced; the next run must restore it first."""
-        from lightly_ocr_spark.jobs.compact_job import (
-            recover_interrupted_swap,
-            run_compact,
-        )
+        from lightly_ocr_spark.jobs.compact_job import run_compact
+        from lightly_ocr_spark.sources.commit import recover_interrupted_swap
 
         src = str(tmp_path / "src2")
         spark.range(300).write.parquet(src)
