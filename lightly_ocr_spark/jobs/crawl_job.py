@@ -49,9 +49,10 @@ gates are deterministic functions of content, so re-admitting a known-bad
 document in a later batch would only re-run the same rejection — indexing
 it once means no future batch ever extracts or gates that content again.
 
-Streaming mode wires the same per-batch function behind
-`warc_pages_stream` + ``foreachBatch``: each trigger's archives become one
-batch (``epoch-K``), the streaming checkpoint guarantees each epoch is
+Streaming mode (`run_crawl_stream`, the package's one exactly-once stream)
+wires the same per-batch function behind `sources.warc.warc_pages_stream`
++ ``foreachBatch``: each trigger's archives become one batch
+(``epoch-K``), the streaming checkpoint guarantees each epoch is
 delivered with the same id on restart, and the manifest/marker pair makes
 redelivery a no-op — exactly-once end to end.
 
@@ -90,6 +91,7 @@ from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.operators.textstats import MIN_TOKENS, n_tokens
 from lightly_ocr_spark.sources import read_pages
 from lightly_ocr_spark.sources.commit import atomic_json, require_local
+from lightly_ocr_spark.sources.warc import warc_pages_stream
 
 MANIFEST_DIR = "_manifests"
 
@@ -281,8 +283,6 @@ def run_crawl_stream(
     completion of currently-available files (a production deployment
     leaves the query running); restart-safe via the streaming checkpoint
     plus the manifest/marker idempotence."""
-    from lightly_ocr_spark.streaming.warc_stream import warc_pages_stream
-
     pages = warc_pages_stream(spark, warc_dir, max_files_per_trigger)
     seen: list[str] = []
 

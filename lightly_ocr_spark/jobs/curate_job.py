@@ -212,8 +212,8 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         )
 
         # host_expr falls back to the parent path for authority-less URIs
-        # (binaryFile 'file:/...' paths), so a rawdir corpus buckets by
-        # directory instead of collapsing into one empty-host bucket
+        # ('file:/...' paths), so a corpus keyed by local file URIs buckets
+        # by directory instead of collapsing into one empty-host bucket
         host = host_expr("url")
         deduped = host_cap_df(
             deduped.withColumn("host", host), order_col="url", cap=host_cap

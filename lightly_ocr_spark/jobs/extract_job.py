@@ -44,6 +44,7 @@ from lightly_ocr_spark.sources import read_pages
 from lightly_ocr_spark.sources.commit import atomic_json, require_local
 
 MANIFEST_DIR = "_manifests"
+CONCURRENT_SLICES = 4
 
 
 _FORMAT_GLOBS = {
@@ -77,16 +78,15 @@ def run_extract(
     resume: bool = True,
     salt_partitions: int | None = None,
     salt: bool | None = None,
-    concurrent_slices: int = 4,
     input_format: str = "pages",
 ) -> dict:
     """Run the extraction over all uncommitted slices; return job summary.
 
-    Slices run as concurrent Spark jobs (driver threads; Spark's scheduler
-    interleaves their stages) so per-job barriers — scan tail, shuffle
-    boundary, write commit — overlap instead of serializing.  Commit
-    semantics are unchanged: each slice's manifest is written only after its
-    own parquet write succeeds."""
+    Slices run as `CONCURRENT_SLICES` concurrent Spark jobs (driver
+    threads; Spark's scheduler interleaves their stages) so per-job
+    barriers — scan tail, shuffle boundary, write commit — overlap instead
+    of serializing.  Commit semantics are unchanged: each slice's manifest
+    is written only after its own parquet write succeeds."""
     require_local(out_dir)
     os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
     slices = _slice_files(_input_files(pages_path, input_format), n_slices)
@@ -133,7 +133,7 @@ def run_extract(
         pages = read_pages(spark, files, input_format)
         # skew salting: spread any hot host across all partitions
         # (north_rule).  Extraction itself is row-local (input splits are
-        # byte-uniform), so --no-salt skips the shuffle when no downstream
+        # byte-uniform), so --salt off skips the shuffle when no downstream
         # op keys by host/url.  "auto" resolves against THIS slice's
         # files: WARC always salts (gzip, unsplittable), jsonl only when
         # the slice actually contains .gz members — a slice of plain
@@ -177,7 +177,7 @@ def run_extract(
         atomic_json(manifest_path, manifest)
         return m["rows_out"]
 
-    with ThreadPoolExecutor(max_workers=max(1, concurrent_slices)) as pool:
+    with ThreadPoolExecutor(max_workers=CONCURRENT_SLICES) as pool:
         results = list(pool.map(lambda a: run_slice(*a), enumerate(slices)))
     for r in results:
         if r is None:
@@ -250,8 +250,6 @@ def main() -> None:
                     help="url-hash rebalancing shuffle before extraction: "
                     "auto (default) salts only non-splittable WARC input; "
                     "parquet scans are already byte-uniform")
-    ap.add_argument("--no-salt", action="store_true",
-                    help="alias for --salt off (back-compat)")
     ap.add_argument("--verify", action="store_true")
     ap.add_argument("--format", choices=("pages", "warc", "jsonl"),
                     default="pages",
@@ -262,11 +260,7 @@ def main() -> None:
     from lightly_ocr_spark.plans.session import build_session
 
     spark = build_session("extract-job", cores=args.cores, python_heavy=True)
-    if args.no_salt and args.salt == "on":
-        ap.error("--no-salt contradicts --salt on; pick one")
     salt = {"auto": None, "on": True, "off": False}[args.salt]
-    if args.no_salt:
-        salt = False
     summary = run_extract(
         spark, args.pages, args.out, n_slices=args.slices,
         resume=not args.no_resume, salt=salt,

@@ -61,28 +61,35 @@ def _query_vec(spark: SparkSession, sf: str, vec_id: int = 0):
     return [float(x) for x in row["embedding"]]
 
 
-def cosine_topk(
-    spark: SparkSession, sf: str, vec_id: int = 0, k: int = 10
-) -> DataFrame:
-    """Exact brute-force cosine top-k vs a query vector (rank ties broken by
-    vec_id; similarity rounded for cross-engine comparison)."""
-    q = _query_vec(spark, sf, vec_id)
+def _rerank_topk(cand: DataFrame, q: list[float], k: int) -> DataFrame:
+    """Exact cosine rerank of candidate (vec_id, embedding) rows against
+    query vector `q`: the top `k` (rank ties broken by vec_id; similarity
+    rounded for cross-engine comparison).  The one tail every top-k query
+    here shares — they differ only in how candidates are fetched."""
     qcol = F.array(*[F.lit(v) for v in q])
-    # spread (round 6): the 64-element dot/norm folds are interpreted
-    # per-row work and the single-row-group scan otherwise runs them all
-    # on one core (guide §2.5)
-    e = spread(load(spark, sf, "embeddings"))
-    sims = e.select(
+    sims = cand.select(
         "vec_id",
         (_dot(F.col("embedding"), qcol)
          / (_norm(F.col("embedding")) * F.lit(_qnorm(q)))).alias("cos"),
     )
     return (
-        sims.filter(F.col("vec_id") != vec_id)
-        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
+        sims.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
         .limit(k)
         .select("vec_id", F.round("cos", 6).alias("cosine_sim"))
     )
+
+
+def cosine_topk(
+    spark: SparkSession, sf: str, vec_id: int = 0, k: int = 10
+) -> DataFrame:
+    """Exact brute-force cosine top-k vs a query vector: every other vector
+    is a candidate."""
+    q = _query_vec(spark, sf, vec_id)
+    # spread (round 6): the 64-element dot/norm folds are interpreted
+    # per-row work and the single-row-group scan otherwise runs them all
+    # on one core (guide §2.5)
+    e = spread(load(spark, sf, "embeddings"))
+    return _rerank_topk(e.filter(F.col("vec_id") != vec_id), q, k)
 
 
 def _planes(n_tables: int = N_TABLES, bits: int = BITS_PER_TABLE,
@@ -223,8 +230,9 @@ def ivf_topk(
     """ANN, IVF flavor: partition vectors by nearest centroid; a query scans
     only its `nprobe` closest cells, exact cosine rerank inside them.
 
-    Scale path: the cell id is a persisted partition column, so the probe is
-    partition pruning on the vector table — no full scan, no shuffle.
+    Scale path: persist the cell id as a partition column and the probe
+    becomes partition pruning on the vector table — no full scan, no
+    shuffle.
     `centroids` overrides the default first-n codebook (pass the
     Lloyd-refined one from `ivf_centroids_kmeans` for better cell balance)."""
     e = load(spark, sf, "embeddings")
@@ -244,20 +252,10 @@ def ivf_topk(
     )
     probe = [int(c) for c in scored[:nprobe]]
 
-    qcol = F.array(*[F.lit(v) for v in q])
     cand = tagged.filter(
         F.col("cell").isin(probe) & (F.col("vec_id") != vec_id)
     )
-    sims = cand.select(
-        "vec_id",
-        (_dot(F.col("embedding"), qcol)
-         / (_norm(F.col("embedding")) * F.lit(_qnorm(q)))).alias("cos"),
-    )
-    return (
-        sims.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(k)
-        .select("vec_id", F.round("cos", 6).alias("cosine_sim"))
-    )
+    return _rerank_topk(cand, q, k)
 
 
 def ivf_centroids_kmeans(
@@ -322,61 +320,6 @@ def ivf_kmeans_topk(
                     centroids=cents)
 
 
-def write_ivf_index(
-    df: DataFrame, path: str, centroids: list[list[float]] | None = None,
-    kmeans_iters: int = 0,
-) -> list[list[float]]:
-    """Materialize the IVF index: vectors tagged with their cell id,
-    written partitioned by `cell` — the one-time precomputation that turns
-    every subsequent probe into partition pruning instead of a scan.
-    Returns the codebook (persist it beside the index at scale).
-
-    `kmeans_iters > 0` Lloyd-refines the default first-n codebook before
-    tagging (better cell balance -> fewer wasted probes); an explicit
-    `centroids` list wins over both."""
-    if centroids is None and kmeans_iters > 0:
-        centroids = ivf_centroids_kmeans(df, iters=kmeans_iters)
-    centroids = centroids or ivf_centroids(df)
-    tagged = df.withColumn("cell", ivf_assign_col(F.col("embedding"), centroids))
-    tagged.write.mode("overwrite").partitionBy("cell").parquet(path)
-    return centroids
-
-
-def ivf_topk_indexed(
-    spark: SparkSession, index_path: str, centroids: list[list[float]],
-    query: list[float], k: int = 10, nprobe: int = IVF_NPROBE,
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """ANN over a persisted IVF index: the cell predicate is a PARTITION
-    filter on the index table (verified by plan-shape test), so the scan
-    touches only `nprobe` of the cells regardless of table size — the
-    10^12-vector query path the in-memory `ivf_topk` documents."""
-    import math
-
-    qn = math.sqrt(sum(v * v for v in query)) or 1.0
-    scored = sorted(
-        range(len(centroids)),
-        key=lambda i: -sum(
-            a * b for a, b in zip(centroids[i], query)
-        ) / (math.sqrt(sum(v * v for v in centroids[i])) or 1.0) / qn,
-    )
-    probe = [int(c) for c in scored[:nprobe]]
-    idx = spark.read.parquet(index_path).filter(F.col("cell").isin(probe))
-    if exclude_vec_id is not None:
-        idx = idx.filter(F.col("vec_id") != exclude_vec_id)
-    qcol = F.array(*[F.lit(float(v)) for v in query])
-    sims = idx.select(
-        "vec_id",
-        (_dot(F.col("embedding"), qcol)
-         / (_norm(F.col("embedding")) * F.lit(_qnorm(query)))).alias("cos"),
-    )
-    return (
-        sims.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(k)
-        .select("vec_id", F.round("cos", 6).alias("cosine_sim"))
-    )
-
-
 def lsh_bucket_index(df: DataFrame, planes=None) -> DataFrame:
     """Exploded (table, bucket, vec_id, embedding) ANN index.
 
@@ -387,53 +330,6 @@ def lsh_bucket_index(df: DataFrame, planes=None) -> DataFrame:
     return e.select(
         "vec_id", "embedding",
         F.posexplode("buckets").alias("table", "bucket"),
-    )
-
-
-def write_lsh_index(df: DataFrame, path: str, planes=None) -> None:
-    """Materialize the exploded LSH index partitioned by (table, bucket):
-    the one-time precomputation that turns every query's candidate fetch
-    into metadata-only partition pruning (L partitions touched of
-    L * 2^bits total) regardless of table size."""
-    lsh_bucket_index(df, planes).write.mode("overwrite").partitionBy(
-        "table", "bucket"
-    ).parquet(path)
-
-
-def lsh_topk_indexed(
-    spark: SparkSession, index_path: str, query: list[float],
-    k: int = 10, exclude_vec_id: int | None = None, planes=None,
-) -> DataFrame:
-    """ANN over a persisted LSH index: the query's L (table, bucket) keys
-    become a partition-only disjunction on the index scan (verified by
-    plan-shape test), followed by exact cosine rerank on the candidates."""
-    planes = planes or _planes()
-    qdf = spark.createDataFrame(
-        [(0, [float(v) for v in query])],
-        "vec_id long, embedding array<double>",
-    )
-    qkeys = [
-        (int(r["table"]), int(r["bucket"]))
-        for r in lsh_bucket_index(qdf, planes).select("table", "bucket").collect()
-    ]
-    pred = None
-    for t, b in qkeys:
-        cond = (F.col("table") == t) & (F.col("bucket") == b)
-        pred = cond if pred is None else (pred | cond)
-    idx = spark.read.parquet(index_path).filter(pred)
-    if exclude_vec_id is not None:
-        idx = idx.filter(F.col("vec_id") != exclude_vec_id)
-    cand = idx.dropDuplicates(["vec_id"]).select("vec_id", "embedding")
-    qcol = F.array(*[F.lit(float(v)) for v in query])
-    sims = cand.select(
-        "vec_id",
-        (_dot(F.col("embedding"), qcol)
-         / (_norm(F.col("embedding")) * F.lit(_qnorm(query)))).alias("cos"),
-    )
-    return (
-        sims.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(k)
-        .select("vec_id", F.round("cos", 6).alias("cosine_sim"))
     )
 
 
@@ -468,17 +364,5 @@ def lsh_topk(
     full-table filter scan), exact cosine rerank on candidates only.  Same
     output schema as `cosine_topk`; recall/scan tradeoff is
     (N_TABLES, BITS_PER_TABLE)."""
-    planes = _planes()
     q = _query_vec(spark, sf, vec_id)
-    qcol = F.array(*[F.lit(v) for v in q])
-    cand = lsh_candidates(spark, sf, vec_id, planes)
-    sims = cand.select(
-        "vec_id",
-        (_dot(F.col("embedding"), qcol)
-         / (_norm(F.col("embedding")) * F.lit(_qnorm(q)))).alias("cos"),
-    )
-    return (
-        sims.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(k)
-        .select("vec_id", F.round("cos", 6).alias("cosine_sim"))
-    )
+    return _rerank_topk(lsh_candidates(spark, sf, vec_id), q, k)

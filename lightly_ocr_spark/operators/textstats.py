@@ -380,9 +380,9 @@ def repetition_signals_df(d: DataFrame, id_col: str = "doc_id") -> DataFrame:
     # materialize the words array as its OWN projection: an inlined split
     # is re-evaluated by every interpreted lambda element (O(words^2) per
     # doc — the `_tokens` lesson, measured 9x on the signature build).
-    # Probe for a free column name (the salted_join discipline): a caller
-    # frame that already carries `_words` would otherwise make the later
-    # F.col reference ambiguous at runtime.
+    # Probe for a free column name: a caller frame that already carries
+    # `_words` would otherwise make the later F.col reference ambiguous at
+    # runtime.
     wname = "_words"
     while wname in d.columns:
         wname += "_"

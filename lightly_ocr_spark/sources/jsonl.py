@@ -1,6 +1,6 @@
 """JSONL(.gz) ingest: newline-delimited JSON corpora -> pages rows.
 
-Alongside WARC (the crawl-native container) and raw directories, JSONL is
+Alongside pages parquet and WARC (the crawl-native container), JSONL is
 the third format real training corpora arrive in (RedPajama/Dolma-style
 dumps: one JSON object per line with url/text/meta fields).  Spark's JSON
 source handles gzip transparently and splits uncompressed files by line,
@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from lightly_ocr_spark.schemas import PAGES_SCHEMA
 
 
 def read_jsonl_pages(
@@ -57,9 +55,3 @@ def read_jsonl_pages(
         F.col(lang_field).cast("string").alias("lang"),
     ).filter(F.col("url").isNotNull())
 
-
-def pages_schema_matches(df: DataFrame) -> bool:
-    """True when df's columns line up with PAGES_SCHEMA (names + order)."""
-    return [f.name for f in df.schema.fields] == [
-        f.name for f in PAGES_SCHEMA.fields
-    ]

@@ -194,8 +194,8 @@ def explode_archives(files_df) -> "object":
     """(.., content binary) frame -> pages(url, warc_ts, html).
 
     The ONE parse+projection shared by the batch front door (`warc_pages`)
-    and the streaming one (`streaming/warc_stream.py`) — the timestamp
-    contract and output schema cannot drift between them."""
+    and the streaming one (`warc_pages_stream`) — the timestamp contract
+    and output schema cannot drift between them."""
     from pyspark.sql import functions as F
 
     raw = files_df.select("content").mapInPandas(
@@ -216,6 +216,22 @@ def warc_pages(spark, warc_path: str | list[str]):
     """WARC directory (or explicit file list) -> pages(url, warc_ts, html),
     extraction-ready."""
     return explode_archives(spark.read.format("binaryFile").load(warc_path))
+
+
+def warc_pages_stream(spark, warc_dir: str, max_files_per_trigger: int = 1):
+    """Streaming twin of `warc_pages`: a binaryFile stream over the archive
+    directory, each newly-dropped archive exploded to pages rows per
+    trigger.  Feeds `jobs.crawl_job.run_crawl_stream`."""
+    # streaming sources require an explicit schema; binaryFile's is fixed
+    files = (
+        spark.readStream.format("binaryFile")
+        .schema("path string, modificationTime timestamp, "
+                "length long, content binary")
+        .option("pathGlobFilter", "*.warc*")
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .load(warc_dir)
+    )
+    return explode_archives(files)
 
 
 # --- deterministic synthesizer (tests; same philosophy as pdf.make_pdf) ---

@@ -1,8 +1,9 @@
-"""Structured Streaming surface.
+"""Structured Streaming parity query.
 
 The reference has no stream processing (SURVEY.md §2.8) — its only
 "streaming" artifact is a reconnect loop (`ingress/db/db.go:108-132`).  The
-graft is batch-first; this package exists to prove the engine's operators
-also run under `readStream` (file source → windowless aggregation → memory
-sink) for incremental ingest of new WARC drops.
+graft is batch-first: `file_stream.py` serves the `__spark_entry__` query
+`st1_streaming_counts` (batch/stream parity of one aggregation).  The live
+streaming ingest is `jobs.crawl_job.run_crawl_stream`, which reads new WARC
+drops through `sources.warc.warc_pages_stream`.
 """

@@ -3,6 +3,12 @@ import shutil
 
 import pytest
 
+# build_session defaults the driver heap to 48g, sized for a large host.
+# The suite's inputs are small, and an unbounded heap lets the one
+# long-lived test JVM grow past the RAM of a 16 GB machine until the
+# kernel kills it mid-run; a bounded heap makes it collect instead.
+os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -108,138 +108,6 @@ class TestPlanShape:
         gen = plan_of(quality_score(spark, SF), mode="codegen")
         assert "WholeStageCodegen" in gen
 
-    def test_bucketed_join_is_shuffle_free(self, spark):
-        """Two tables bucketed identically on url must equi-join with ZERO
-        Exchange operators (the write pre-paid the shuffle), while the same
-        join over plain parquet shuffles both sides; results identical.
-        Broadcast disabled so the test exercises the sort-merge path a
-        too-big-to-broadcast table would take."""
-        from lightly_ocr_spark.plans.bucketed import (
-            bucketed_join,
-            write_bucketed,
-        )
-
-        docs = spark.read.parquet(f"{SF}/documents.parquet")
-        left = docs.selectExpr("concat('u', doc_id) AS url", "text")
-        right = docs.selectExpr("concat('u', doc_id) AS url",
-                                "lang", "n_chars")
-        write_bucketed(left, "bk_left", "url", buckets=8)
-        write_bucketed(right, "bk_right", "url", buckets=8)
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            j = bucketed_join(spark, "bk_left", "bk_right", "url")
-            plan = plan_of(j)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, plan[:1200]
-
-            baseline = left.join(right, "url")
-            base_plan = plan_of(baseline)
-            assert "Exchange" in base_plan  # plain path DOES shuffle
-
-            got = sorted(tuple(r) for r in j.collect())
-            want = sorted(tuple(r) for r in baseline.collect())
-            assert got == want and len(got) == 500
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-            spark.sql("DROP TABLE IF EXISTS bk_left")
-            spark.sql("DROP TABLE IF EXISTS bk_right")
-
-    def test_salted_join_equals_plain_join_and_spreads_hot_key(self, spark):
-        """salted_join: identical rows to the plain equi-join on a corpus
-        where ONE key carries 80% of the left side; the hot key's rows
-        spread across multiple (key, salt) sub-keys instead of one."""
-        from lightly_ocr_spark.plans.bucketed import salted_join
-
-        left = spark.range(5000).selectExpr(
-            "CASE WHEN id % 5 < 4 THEN 'hot.example' "
-            "ELSE concat('h', id % 97) END AS host",
-            "id AS row_id",
-        )
-        right = spark.createDataFrame(
-            [("hot.example", 1)] + [(f"h{i}", 0) for i in range(97)],
-            "host string, is_hot int",
-        )
-        got = salted_join(left, right, "host", salt=8)
-        want = left.join(right, "host")
-        assert sorted(map(tuple, got.collect())) == \
-            sorted(map(tuple, want.collect()))
-
-        # the hot key's left rows really fan out over >1 salt bucket —
-        # measured through the operator's OWN expression, not a copy
-        from lightly_ocr_spark.plans.bucketed import salt_expr
-
-        n_buckets = (
-            left.withColumn("s", salt_expr("host", 8, "row_id"))
-            .filter(F.col("host") == "hot.example")
-            .select("s").distinct().count()
-        )
-        assert n_buckets >= 6, n_buckets
-
-        # the expression is DETERMINISTIC (retry-stable, pushdown-safe):
-        # the same row must land in the same bucket regardless of
-        # partition layout — monotonically_increasing_id()-based salts
-        # fail this (id depends on row position within partitions)
-        a = sorted(map(tuple, left.withColumn(
-            "s", salt_expr("host", 8, "row_id")).collect()))
-        b = sorted(map(tuple, left.repartition(13).withColumn(
-            "s", salt_expr("host", 8, "row_id")).collect()))
-        assert a == b
-
-        # a caller-owned '_salt' column must survive untouched
-        left2 = left.withColumn("_salt", F.lit(42))
-        got2 = salted_join(left2, right, "host", salt=4)
-        assert "_salt" in got2.columns
-        assert got2.filter(F.col("_salt") != 42).count() == 0
-        assert got2.count() == want.count()
-
-    def test_ivf_indexed_probe_is_partition_pruned(self, spark, tmp_path):
-        """The persisted IVF index is partitioned by cell, so a probe must
-        appear in the scan's PartitionFilters (metadata-only pruning) — and
-        return exactly what the in-memory ivf_topk computes."""
-        from lightly_ocr_spark.operators.similarity import (
-            _query_vec,
-            ivf_topk,
-            ivf_topk_indexed,
-            write_ivf_index,
-        )
-
-        e = spark.read.parquet(f"{SF}/embeddings.parquet")
-        path = str(tmp_path / "ivf_index")
-        cents = write_ivf_index(e, path)
-        q = _query_vec(spark, SF, 0)
-        got = ivf_topk_indexed(spark, path, cents, q, exclude_vec_id=0)
-
-        plan = plan_of(got)
-        part = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-        assert part and "cell" in part[0], plan[:800]
-
-        want = [tuple(r) for r in ivf_topk(spark, SF).collect()]
-        assert [tuple(r) for r in got.collect()] == want
-
-    def test_lsh_indexed_probe_is_partition_pruned(self, spark, tmp_path):
-        """Same for LSH: (table, bucket) are partition columns of the
-        persisted index, the query's L keys prune to L partitions, and the
-        result matches the join-based lsh_topk exactly."""
-        from lightly_ocr_spark.operators.similarity import (
-            _query_vec,
-            lsh_topk,
-            lsh_topk_indexed,
-            write_lsh_index,
-        )
-
-        e = spark.read.parquet(f"{SF}/embeddings.parquet")
-        path = str(tmp_path / "lsh_index")
-        write_lsh_index(e, path)
-        q = _query_vec(spark, SF, 0)
-        got = lsh_topk_indexed(spark, path, q, exclude_vec_id=0)
-
-        plan = plan_of(got)
-        part = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-        assert part and "table" in part[0] and "bucket" in part[0], plan[:800]
-
-        want = [tuple(r) for r in lsh_topk(spark, SF).collect()]
-        assert [tuple(r) for r in got.collect()] == want
-
     def test_lsh_candidate_fetch_is_bucket_join_not_full_scan(self, spark):
         """The ANN candidate fetch must be an equi-join against the exploded
         (table, bucket) index — NOT a full-table Filter with an OR-chain

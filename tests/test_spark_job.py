@@ -217,31 +217,6 @@ class TestIcebergGate:
             IcebergSink(spark, "ice.extracted")
 
 
-class TestRawDirIngest:
-    def test_binary_file_source_to_pages(self, spark, tmp_path):
-        from lightly_ocr_spark.operators.extract_udf import extract_pages
-        from lightly_ocr_spark.sources.rawdir import read_raw_dir
-
-        body = ("<html><body><p>ten little words fill this paragraph "
-                "right here now</p></body></html>")
-        for i in range(5):
-            (tmp_path / f"page{i}.html").write_text(body)
-        (tmp_path / "ignore.txt").write_text("not html")
-
-        pages = read_raw_dir(spark, str(tmp_path))
-        assert pages.count() == 5
-        assert [f.name for f in pages.schema.fields] == [
-            "url", "warc_ts", "html", "text", "lang"
-        ]
-        # binaryFile paths are already URIs — no "file://file:/" doubling
-        for r in pages.select("url").collect():
-            assert r["url"].count(":") == 1 and "page" in r["url"], r["url"]
-        out = extract_pages(pages).select("text").distinct().collect()
-        assert len(out) == 1
-        assert out[0]["text"] == ("ten little words fill this paragraph "
-                                  "right here now")
-
-
 class TestCompactJob:
     def test_many_small_files_compact_losslessly(self, spark, tmp_path):
         """64 tiny files -> few target-size files: same rows/values, a
@@ -292,10 +267,8 @@ class TestJsonlSource:
         import json as J
 
         from lightly_ocr_spark.operators.extract_udf import extract_pages
-        from lightly_ocr_spark.sources.jsonl import (
-            pages_schema_matches,
-            read_jsonl_pages,
-        )
+        from lightly_ocr_spark.schemas import PAGES_SCHEMA
+        from lightly_ocr_spark.sources.jsonl import read_jsonl_pages
 
         d = tmp_path / "jsonl"
         d.mkdir()
@@ -312,7 +285,7 @@ class TestJsonlSource:
         (d / "part0.jsonl.gz").write_bytes(gzip.compress(blob))
 
         pages = read_jsonl_pages(spark, str(d))
-        assert pages_schema_matches(pages)
+        assert pages.columns == [f.name for f in PAGES_SCHEMA.fields]
         got = pages.collect()
         assert len(got) == 31                     # url-less row dropped
         assert all(isinstance(r["html"], (bytes, bytearray)) for r in got)

@@ -1,5 +1,5 @@
-"""Structured Streaming parity: the same fused extraction operator under
-readStream produces byte-identical output to the batch goldens."""
+"""Structured Streaming parity: the registered streaming aggregation and the
+crawl's streaming WARC reader produce exactly what their batch twins do."""
 
 import pytest
 
@@ -7,58 +7,6 @@ pytestmark = pytest.mark.spark
 
 
 class TestStreamingExtraction:
-    def test_stream_matches_goldens(self, spark, pages_dir):
-        from pyspark.sql import functions as F
-
-        from lightly_ocr_spark.streaming.extract_stream import extract_stream
-
-        got = extract_stream(spark, pages_dir, max_files_per_trigger=2)
-        golden = spark.read.parquet(pages_dir).select(
-            "url", F.col("text").alias("golden_text")
-        )
-        joined = got.join(golden, "url", "inner")
-        stats = joined.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("text") == F.col("golden_text")).cast("long"))
-            .alias("ok"),
-        ).collect()[0]
-        assert stats["n"] == 1500 == stats["ok"]
-        # incremental triggers must not duplicate rows
-        assert got.groupBy("url").count().filter("count > 1").count() == 0
-
-    def test_stream_extracts_mixed_html_pdf(self, spark, tmp_path):
-        """Magic-byte routing works identically under readStream: PDF rows
-        in a streamed pages directory extract via the PDF engine."""
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from lightly_ocr_spark.functions.pdf import make_pdf
-        from lightly_ocr_spark.streaming.extract_stream import extract_stream
-
-        texts = {
-            f"pdf://{i}": f"streamed pdf number {i} with plenty of words "
-                          f"to extract and verify"
-            for i in range(20)
-        }
-        pdf = pd.DataFrame(
-            {
-                "url": list(texts),
-                "warc_ts": pd.Series([None] * 20,
-                                     dtype="datetime64[us]"),
-                "html": [make_pdf(t) for t in texts.values()],
-                "text": [""] * 20,
-                "lang": ["en"] * 20,
-            }
-        )
-        d = tmp_path / "pdfpages"
-        d.mkdir()
-        pq.write_table(pa.Table.from_pandas(pdf), str(d / "a.parquet"))
-
-        got = {r["url"]: r["text"]
-               for r in extract_stream(spark, str(d)).collect()}
-        assert got == texts
-
     def test_streaming_counts_match_batch(self, spark):
         from pyspark.sql import functions as F
 
@@ -81,236 +29,18 @@ class TestStreamingExtraction:
         assert stream == batch
 
 
-class TestExactlyOnceStreamSink:
-    def test_checkpoint_restart_no_duplicates(self, spark, tmp_path):
-        """foreachBatch sink: run, restart with the same checkpoint (no-op),
-        add a file, restart again — every url lands exactly once across all
-        epochs, and manifests account for every committed row."""
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from lightly_ocr_spark.streaming.extract_stream import (
-            extract_stream_job,
-        )
-
-        def write_pages(path, lo, hi):
-            pdf = pd.DataFrame(
-                {
-                    "url": [f"https://h/{i}" for i in range(lo, hi)],
-                    "warc_ts": pd.Series([None] * (hi - lo),
-                                         dtype="datetime64[us]"),
-                    "html": [
-                        (f"<p>streamed doc {i} with plenty of words to "
-                         f"extract here now</p>").encode()
-                        for i in range(lo, hi)
-                    ],
-                    "text": [""] * (hi - lo),
-                    "lang": ["en"] * (hi - lo),
-                }
-            )
-            pq.write_table(pa.Table.from_pandas(pdf), path)
-
-        d = tmp_path / "pages"
-        d.mkdir()
-        for k in range(4):
-            write_pages(str(d / f"{k}.parquet"), k * 10, (k + 1) * 10)
-        out = str(tmp_path / "out")
-        cp = str(tmp_path / "cp")
-
-        s1 = extract_stream_job(spark, str(d), out, cp)
-        assert s1["rows_out"] == 40
-        # restart with nothing new: no duplicate work
-        s2 = extract_stream_job(spark, str(d), out, cp)
-        assert s2["rows_out"] == 40
-        # late-arriving file, same checkpoint: only the delta is processed
-        write_pages(str(d / "late.parquet"), 100, 110)
-        s3 = extract_stream_job(spark, str(d), out, cp)
-        assert s3["rows_out"] == 50
-
-        got = spark.read.parquet(f"{out}/epoch=*")
-        assert got.count() == 50
-        assert got.groupBy("url").count().filter("count > 1").count() == 0
-
-
-class TestWindowedWatermark:
-    def test_late_events_dropped_and_windows_finalize(self, spark, tmp_path):
-        """Watermark semantics, deterministic: batch 1 carries events for
-        two 5-minute windows (watermark advances to max-5min at batch end);
-        batch 2 carries one fresh event (advancing the watermark past both
-        windows, finalizing them) plus one event OLDER than the watermark,
-        which must be dropped — the closed window's count excludes it."""
-        import datetime as dt
-
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from lightly_ocr_spark.streaming.windowed import (
-            windowed_event_counts,
-        )
-
-        t0 = dt.datetime(2020, 1, 1, 10, 0, 0, tzinfo=dt.timezone.utc)
-
-        def ts(minutes):
-            return t0 + dt.timedelta(minutes=minutes)
-
-        def write(path, minutes_list):
-            # tz-aware -> parquet TIMESTAMP (watermarks reject TIMESTAMP_NTZ)
-            pdf = pd.DataFrame(
-                {"ts": pd.Series([ts(m) for m in minutes_list],
-                                 dtype="datetime64[us, UTC]")}
-            )
-            pq.write_table(pa.Table.from_pandas(pdf), path)
-
-        d = tmp_path / "events_stream"
-        d.mkdir()
-        # batch 1: 3 events in [10:00,10:05), 2 in [10:05,10:10), 1 in
-        # [10:10,10:15) — watermark after the batch = 10:11-5min = 10:06
-        write(str(d / "a.parquet"), [0, 1, 2, 5, 9, 11])
-        # batch 2: a fresh event at 10:20 -> watermark advances to 10:15,
-        # closing all three earlier windows (emitted in append mode)
-        write(str(d / "b.parquet"), [20])
-        # batch 3: one LATE event at 10:01 — its window closed a batch ago;
-        # the watermark must drop it, not re-open or corrupt the window
-        write(str(d / "c.parquet"), [1])
-        import os
-        import time
-        # file-source processes oldest-mtime first: force the batch order
-        now = time.time()
-        os.utime(str(d / "a.parquet"), (now - 100, now - 100))
-        os.utime(str(d / "b.parquet"), (now - 50, now - 50))
-
-        out = windowed_event_counts(spark, str(d))
-        got = {
-            (r["window_start"].minute, r["window_end"].minute): r["n"]
-            for r in out.collect()
-        }
-        # finalized windows only; (0,5) reads 4 if the late event leaks in
-        assert got == {(0, 5): 3, (5, 10): 2, (10, 15): 1}, got
-
-
-class TestStatefulDedup:
-    def test_cross_batch_dedup(self, spark, tmp_path):
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from lightly_ocr_spark.streaming.stateful_dedup import streaming_dedup
-
-        def rows(lo, hi):
-            return pd.DataFrame(
-                {
-                    "url": [f"https://h/{i}" for i in range(lo, hi)],
-                    "text": [f"t{i}" for i in range(lo, hi)],
-                }
-            )
-
-        d = tmp_path / "overlap"
-        d.mkdir()
-        pq.write_table(pa.Table.from_pandas(rows(0, 100)), str(d / "a.parquet"))
-        pq.write_table(pa.Table.from_pandas(rows(50, 150)), str(d / "b.parquet"))
-
-        out = streaming_dedup(spark, str(d), max_files_per_trigger=1)
-        got = {r["url"] for r in out.collect()}
-        assert len(got) == 150                      # 50 repeats suppressed
-        assert out.count() == 150                   # no duplicate rows at all
-        assert got == {f"https://h/{i}" for i in range(150)}
-
-    def test_intra_batch_dedup(self, spark, tmp_path):
-        """Duplicates arriving in the SAME micro-batch chunk must also be
-        suppressed (round-1 advisor finding: the freshness filter was
-        computed against prior-batch state only)."""
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from lightly_ocr_spark.streaming.stateful_dedup import streaming_dedup
-
-        pdf = pd.DataFrame(
-            {
-                "url": [f"https://h/{i % 10}" for i in range(100)],
-                "text": [f"t{i % 10}" for i in range(100)],
-            }
-        )
-        d = tmp_path / "intra"
-        d.mkdir()
-        pq.write_table(pa.Table.from_pandas(pdf), str(d / "a.parquet"))
-
-        out = streaming_dedup(spark, str(d), max_files_per_trigger=1)
-        assert out.count() == 10                    # 90 intra-batch repeats
-
-
-class TestStreamStreamJoin:
-    def test_interval_join_parity_with_batch(self, spark, tmp_path):
-        """Stream-stream interval join (watermarks both sides, bounded
-        state) returns exactly the batch join's rows: every click matches
-        the views within [view_ts, view_ts + gap] for its user, clicks
-        outside any gap match nothing."""
-        import pandas as pd
-
-        from lightly_ocr_spark.streaming.stream_join import (
-            attribution_join,
-            run_attribution_stream,
-        )
-
-        def ts(minutes):
-            return pd.Timestamp("2024-01-01 00:00:00", tz="UTC") \
-                + pd.Timedelta(minutes=minutes)
-
-        vdir, cdir = str(tmp_path / "views"), str(tmp_path / "clicks")
-        views = pd.DataFrame({
-            "user_id": [1, 1, 2, 3],
-            "view_ts": pd.Series(
-                [ts(0), ts(30), ts(5), ts(0)], dtype="datetime64[us, UTC]"
-            ),
-        })
-        clicks = pd.DataFrame({
-            "user_id": [1, 1, 2, 3, 9],
-            "click_ts": pd.Series(
-                # u1: matches view@0 (+3m) and view@30 (+32m);
-                # u2: +25m after its view -> outside 10m gap, no match;
-                # u3: exactly at the gap boundary (inclusive);
-                # u9: no view at all
-                [ts(3), ts(32), ts(30), ts(10), ts(1)],
-                dtype="datetime64[us, UTC]",
-            ),
-        })
-        # two files per side so the stream sees multiple triggers
-        pd_views = [views.iloc[:2], views.iloc[2:]]
-        pd_clicks = [clicks.iloc[:3], clicks.iloc[3:]]
-        import os
-        os.makedirs(vdir), os.makedirs(cdir)
-        for i, part in enumerate(pd_views):
-            part.to_parquet(os.path.join(vdir, f"v{i}.parquet"))
-        for i, part in enumerate(pd_clicks):
-            part.to_parquet(os.path.join(cdir, f"c{i}.parquet"))
-
-        got = sorted(
-            (r["user_id"], str(r["view_ts"]), str(r["click_ts"]), r["lag_s"])
-            for r in run_attribution_stream(spark, vdir, cdir).collect()
-        )
-        want = sorted(
-            (r["user_id"], str(r["view_ts"]), str(r["click_ts"]), r["lag_s"])
-            for r in attribution_join(
-                spark.read.parquet(vdir), spark.read.parquet(cdir)
-            ).collect()
-        )
-        assert got == want
-        users = [g[0] for g in got]
-        assert users == [1, 1, 3]          # u2 outside gap, u9 unmatched
-        assert [g[3] for g in got] == [180, 120, 600]  # lags in seconds
-
-
 class TestWarcStream:
     def test_streamed_archives_match_batch_ingest(self, spark, tmp_path):
         """binaryFile readStream over a WARC directory: incremental
         archive-by-archive extraction must equal the batch warc_pages ->
         extract path exactly, with no duplicates across triggers."""
+        import uuid
+
         from lightly_ocr_spark.operators.extract_udf import extract_pages
-        from lightly_ocr_spark.sources.warc import make_warc, warc_pages
-        from lightly_ocr_spark.streaming.warc_stream import (
-            extract_warc_stream,
+        from lightly_ocr_spark.sources.warc import (
+            make_warc,
+            warc_pages,
+            warc_pages_stream,
         )
 
         d = tmp_path / "warcs"
@@ -326,11 +56,30 @@ class TestWarcStream:
                 make_warc(recs, gzip_members=True)
             )
 
-        got = extract_warc_stream(spark, str(d), max_files_per_trigger=1)
+        streamed = extract_pages(
+            warc_pages_stream(spark, str(d), max_files_per_trigger=1)
+        ).select("url", "text", "extract_sha256")
+        name = "warc_stream_" + uuid.uuid4().hex[:8]
+        q = (
+            streamed.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            triggers = sum(p["numInputRows"] > 0 for p in q.recentProgress)
+        finally:
+            q.stop()
+        try:
+            g = sorted(tuple(r) for r in spark.table(name).collect())
+        finally:
+            spark.catalog.dropTempView(name)
+
         want = extract_pages(warc_pages(spark, str(d))).select(
             "url", "text", "extract_sha256"
         )
-        g = sorted(tuple(r) for r in got.collect())
         w = sorted(tuple(r) for r in want.collect())
         assert g == w and len(g) == 30
-        assert got.groupBy("url").count().filter("count > 1").count() == 0
+        assert len({r[0] for r in g}) == len(g)  # no url twice across triggers
+        assert triggers == 3  # one archive per trigger
