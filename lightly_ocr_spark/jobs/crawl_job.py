@@ -358,7 +358,7 @@ def main() -> None:
 
     from lightly_ocr_spark.plans.session import build_session
 
-    spark = build_session("crawl-job", cores=args.cores, python_heavy=True)
+    spark = build_session("crawl-job", cores=args.cores)
     if args.stream:
         if not args.checkpoint_dir:
             ap.error("--stream requires --checkpoint-dir")

@@ -520,7 +520,7 @@ def main() -> None:
 
     from lightly_ocr_spark.plans.session import build_session
 
-    spark = build_session("curate-job", cores=args.cores, python_heavy=True)
+    spark = build_session("curate-job", cores=args.cores)
     print(json.dumps(
         run_curate(spark, args.pages, args.out, host_cap=args.host_cap,
                    input_format=args.format, max_rep=args.max_rep,

@@ -4,10 +4,13 @@ Graft of the reference's serve/predict path (`pipeline.py:106-112`) plus its
 checkpoint/resume training discipline (`train/crnn.py:285-327`), restated for
 a 10^12-row table:
 
-* **Slices** — the input file set is split into S slices (file-level
+* **Slices** — the input file set is split into one slice per
+  `SLICE_BYTES` of input, rounded up and at most one per file (file-level
   assignment, so each slice job scans only its own files: no re-read
   amplification).  A slice is the unit of commit, the analog of the
   reference's periodic checkpoint interval (`val_interval`, config.yml:14).
+  The count depends only on the input, so a resume on another cluster
+  size cuts the same slices; ``--slices`` pins it.
 * **Salting** — within a slice, rows are shuffled by ``xxhash64(url)`` so a
   hot host-domain cannot pin a partition (north_rule skew requirement).
   ``xxhash64`` over full urls is near-uniform regardless of the zipf host
@@ -45,6 +48,9 @@ from lightly_ocr_spark.sources.commit import atomic_json, require_local
 
 MANIFEST_DIR = "_manifests"
 CONCURRENT_SLICES = 4
+# input bytes per slice when the caller does not pin the count: about one
+# Common Crawl WARC file (unmeasured: inputs so far were at most 7.7 MB)
+SLICE_BYTES = 1 << 30
 
 
 _FORMAT_GLOBS = {
@@ -65,7 +71,9 @@ def _input_files(pages_path: str, input_format: str = "pages") -> list[str]:
     return files
 
 
-def _slice_files(files: list[str], n_slices: int) -> list[list[str]]:
+def _slice_files(files: list[str], n_slices: int | None) -> list[list[str]]:
+    if n_slices is None:
+        n_slices = -(-sum(map(os.path.getsize, files)) // SLICE_BYTES)
     n_slices = max(1, min(n_slices, len(files)))
     return [files[k::n_slices] for k in range(n_slices)]
 
@@ -74,7 +82,7 @@ def run_extract(
     spark: SparkSession,
     pages_path: str,
     out_dir: str,
-    n_slices: int = 8,
+    n_slices: int | None = None,
     resume: bool = True,
     salt_partitions: int | None = None,
     salt: bool | None = None,
@@ -82,70 +90,59 @@ def run_extract(
 ) -> dict:
     """Run the extraction over all uncommitted slices; return job summary.
 
-    Slices run as `CONCURRENT_SLICES` concurrent Spark jobs (driver
-    threads; Spark's scheduler interleaves their stages) so per-job
+    ``n_slices=None`` cuts one slice per `SLICE_BYTES` of input.  Slices
+    run as `CONCURRENT_SLICES` concurrent Spark jobs (driver threads;
+    Spark's scheduler interleaves their stages) so per-job
     barriers — scan tail, shuffle boundary, write commit — overlap instead
     of serializing.  Commit semantics are unchanged: each slice's manifest
     is written only after its own parquet write succeeds."""
     require_local(out_dir)
-    os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
+    man_dir = os.path.join(out_dir, MANIFEST_DIR)
+    os.makedirs(man_dir, exist_ok=True)
     slices = _slice_files(_input_files(pages_path, input_format), n_slices)
     if salt_partitions is None:
         salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if salt is None:
-        # auto: extraction is row-local and parquet input splits are
-        # byte-uniform (maxPartitionBytes), so the salt shuffle buys no
-        # balance there and costs ~21% throughput (BENCH docs_per_sec vs
-        # docs_per_sec_salted).  WARC archives are gzip — NOT splittable —
-        # so one giant archive would otherwise pin one task; keep the
-        # post-parse rebalancing shuffle for that input.  Same for
-        # gzip-compressed JSONL (plain .jsonl splits by line and stays
-        # narrow).  Downstream host-keyed ops (curate's host cap /
-        # near-dup) re-shuffle on their own keys regardless, so they never
-        # depend on this salt.
-        salt = "auto"  # resolved PER SLICE in run_slice: a slice of plain
-        # splittable .jsonl files stays narrow even when another slice in
-        # the same run carries .gz archives
 
-    summary = {"slices": len(slices), "skipped": 0, "run": 0, "rows_out": 0,
-               "wall_s": 0.0}
+    # a manifest commits a SPECIFIC file set under a SPECIFIC cut; if the
+    # slice count or input dir changed since, slice k denotes other files,
+    # and running on would lose the moved ones or leave stale slice=* dirs
+    # that double-count in the rollup — fail loudly before any slice runs
+    committed = set()
+    for p in glob.glob(os.path.join(man_dir, "slice-*.json")):
+        with open(p) as f:
+            m = json.load(f)
+        k, n = m["slice"], m.get("slices")
+        if n != len(slices):
+            raise ValueError(
+                f"{out_dir} holds slice {k} of a run of {n or 'unrecorded'} "
+                f"slices (this run cuts {len(slices)}) — "
+                + (f"resume with --slices {n}, or " if n else "")
+                + "use a fresh --out"
+            )
+        if resume and m["input_files"] != slices[k]:
+            raise ValueError(
+                f"slice {k} was committed for a different file set — the "
+                "input changed since; use a fresh --out"
+            )
+        committed.add(k)
+
     t_job = time.time()
 
     def run_slice(k: int, files: list[str]) -> int | None:
-        manifest_path = os.path.join(out_dir, MANIFEST_DIR, f"slice-{k}.json")
-        if resume and os.path.exists(manifest_path):
-            # a manifest commits a SPECIFIC file set; if the input dir or
-            # --slices changed since, slice k now denotes different files
-            # and skipping it would silently lose the moved ones (while
-            # stale slice=* dirs double-count in the rollup) — fail loudly
-            with open(manifest_path) as f:
-                committed = json.load(f).get("input_files")
-            if committed != files:
-                raise ValueError(
-                    f"slice {k} manifest was committed for a different "
-                    f"file set ({len(committed or [])} files vs "
-                    f"{len(files)} now) — input dir or --slices changed "
-                    "since the previous run; use a fresh --out (or "
-                    "identical slicing) instead of resuming"
-                )
+        if resume and k in committed:
             return None
         t0 = time.time()
         pages = read_pages(spark, files, input_format)
         # skew salting: spread any hot host across all partitions
-        # (north_rule).  Extraction itself is row-local (input splits are
-        # byte-uniform), so --salt off skips the shuffle when no downstream
-        # op keys by host/url.  "auto" resolves against THIS slice's
-        # files: WARC always salts (gzip, unsplittable), jsonl only when
-        # the slice actually contains .gz members — a slice of plain
-        # splittable files never pays the ~21% shuffle tax for a .gz that
-        # lives in some other slice.
-        if salt == "auto":
-            slice_salt = input_format == "warc" or (
-                input_format == "jsonl"
-                and any(f.endswith(".gz") for f in files)
-            )
-        else:
-            slice_salt = bool(salt)
+        # (north_rule).  Extraction is row-local and parquet or plain
+        # .jsonl splits are byte-uniform, so salt=None (auto) skips the
+        # ~21% shuffle tax there; it salts only gzip input, which does not
+        # split (WARC always, jsonl when THIS slice has .gz members), so
+        # one giant archive cannot pin one task.  Host-keyed downstream
+        # ops (curate's host cap, near-dup) re-shuffle on their own keys.
+        gz = any(f.endswith(".gz") for f in files)
+        slice_salt = bool(salt) if salt is not None else (
+            input_format == "warc" or (input_format == "jsonl" and gz))
         salted = (
             pages.repartition(salt_partitions, F.xxhash64("url"))
             if slice_salt else pages
@@ -163,6 +160,7 @@ def run_extract(
         m = obs.get
         manifest = {
             "slice": k,
+            "slices": len(slices),
             "input_files": files,
             "rows_out": m["rows_out"],
             "text_chars": int(m["text_chars"] or 0),
@@ -174,18 +172,15 @@ def run_extract(
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         # commit point: manifest written only after the parquet write succeeds
-        atomic_json(manifest_path, manifest)
+        atomic_json(os.path.join(man_dir, f"slice-{k}.json"), manifest)
         return m["rows_out"]
 
     with ThreadPoolExecutor(max_workers=CONCURRENT_SLICES) as pool:
         results = list(pool.map(lambda a: run_slice(*a), enumerate(slices)))
-    for r in results:
-        if r is None:
-            summary["skipped"] += 1
-        else:
-            summary["run"] += 1
-            summary["rows_out"] += r
-    summary["wall_s"] = round(time.time() - t_job, 3)
+    summary = {"slices": len(slices), "skipped": results.count(None),
+               "run": len(slices) - results.count(None),
+               "rows_out": sum(r or 0 for r in results),
+               "wall_s": round(time.time() - t_job, 3)}
     rollup_manifests(out_dir)
     return summary
 
@@ -243,7 +238,10 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--pages", required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--slices", type=int, default=8)
+    ap.add_argument("--slices", type=int, default=None,
+                    help="slice count (default: one per GiB of input, at "
+                    "most one per file); resuming an --out needs the "
+                    "count it was written with")
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--salt", choices=("auto", "on", "off"), default="auto",
@@ -259,7 +257,7 @@ def main() -> None:
 
     from lightly_ocr_spark.plans.session import build_session
 
-    spark = build_session("extract-job", cores=args.cores, python_heavy=True)
+    spark = build_session("extract-job", cores=args.cores)
     salt = {"auto": None, "on": True, "off": False}[args.salt]
     summary = run_extract(
         spark, args.pages, args.out, n_slices=args.slices,

@@ -128,8 +128,11 @@ def nb_predict(
     The model join is broadcast (|V|x|C| rows); the label cross join is
     |C| rows per doc.  Ties break on label ASC for determinism.
 
-    Round-6 plan (guide §2.3/§2.4; docs are assumed unique per id, as
-    every caller guarantees): the per-doc token total comes straight
+    Ids must be unique: duplicates would merge their docs' word counts,
+    so the argmax aggregate raises when an id brings any label twice (a
+    duplicate without words contributes nothing and passes).
+
+    Round-6 plan (guide §2.3/§2.4): the per-doc token total comes straight
     from size(words) on the input row — the former explode -> groupBy
     -> sum computed the identical integer through a second corpus-wide
     explode and shuffle; and the per-doc argmax is a min_by hash
@@ -170,10 +173,16 @@ def nb_predict(
         )
     )
     best = scored.groupBy(id_col).agg(
-        F.min_by(
-            F.struct(F.col("label"), F.col("score")),
-            F.struct((-F.col("score")).alias("s"), F.col("label").alias("l")),
-        ).alias("b")
+        F.when(
+            F.count(F.lit(1)) == F.count_distinct("label"),
+            F.min_by(
+                F.struct(F.col("label"), F.col("score")),
+                F.struct((-F.col("score")).alias("s"),
+                         F.col("label").alias("l")),
+            ),
+        ).otherwise(F.raise_error(F.lit(
+            f"nb_predict: duplicate {id_col} values; ids must be unique"
+        ))).alias("b")
     )
     return best.select(
         F.col(id_col),

@@ -38,10 +38,17 @@ def build_session(
     extra_conf: dict | None = None,
     python_heavy: bool = False,
 ) -> SparkSession:
-    """Create (or reuse) the canonical session.
+    """Create (or reuse) the canonical session: one task slot per core.
 
     ``cores=None`` uses ``local[*]``; an int pins ``local[N]`` — the
     two-parallelism scaling protocol (BASELINE.md §3) relies on this.
+
+    ``python_heavy`` is accepted and ignored.  It used to declare
+    ``spark.task.cpus=2`` for pandas-UDF jobs, halving the task slots
+    although a Python worker uses one core.  On a 4-core box, the only
+    size measured, one slot per core ran the extract benchmark at 1.44x
+    the docs/s in 4 of 4 interleaved pairs (median 2,242 vs 1,555);
+    whether ``task.cpus=2`` pays at larger sizes is open.
     """
     if cores is None:
         cores_env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -70,12 +77,6 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
-    if python_heavy:
-        # A pandas-UDF task really occupies TWO threads: the JVM feeder and
-        # the forked Python worker.  Declaring it (task.cpus=2) halves task
-        # slots but stops the 2x thread oversubscription — measured +39%
-        # extraction throughput at local[32].
-        b = b.config("spark.task.cpus", "2")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -281,6 +281,24 @@ class TestNaiveBayes:
         }
         assert pred == {100: "sport", 101: "tech", 102: "tech"}
 
+    def test_duplicate_ids_raise(self, spark):
+        """Two docs under one id would merge their word counts into one
+        prediction; the argmax aggregate fails instead."""
+        from lightly_ocr_spark.operators.classify import nb_fit, nb_predict
+
+        train = spark.createDataFrame(
+            [(0, "sport", "goal match team"), (1, "tech", "code bug patch")],
+            "doc_id long, label string, text string",
+        )
+        wm, lm = nb_fit(train, label_col="label")
+        unique = spark.createDataFrame(
+            [(7, "team goal"), (8, "bug code")], "doc_id long, text string")
+        dup = spark.createDataFrame(
+            [(7, "team goal"), (7, "bug code")], "doc_id long, text string")
+        assert nb_predict(unique, wm, lm).count() == 2
+        with pytest.raises(Exception, match="duplicate doc_id"):
+            nb_predict(dup, wm, lm).collect()
+
     def test_langid_query_contract(self, spark):
         """ml_nb_langid (the fixture's lang labels are independent of its
         single shared vocabulary, so ACCURACY is meaningless here — the

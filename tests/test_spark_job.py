@@ -7,10 +7,13 @@ import hashlib
 import json
 import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
+from lightly_ocr_spark.jobs import extract_job
 from lightly_ocr_spark.jobs.extract_job import (
     read_extracted,
     run_extract,
@@ -90,6 +93,80 @@ class TestExtractJob:
         )
         assert rollup["slices"] == 3 and rollup["rows_out"] == 1500
         assert sorted(rollup["input_files"]) == sorted(seen_files)
+
+
+class TestByteSizedSlices:
+    def test_default_is_one_slice_per_slice_bytes(
+        self, pages_dir, monkeypatch
+    ):
+        """ceil(input bytes / SLICE_BYTES) slices, at most one per file,
+        from the listed files' sizes alone (no Spark job)."""
+        files = extract_job._input_files(pages_dir)
+        total = sum(os.path.getsize(f) for f in files)
+        assert len(extract_job._slice_files(files, None)) == 1
+
+        monkeypatch.setattr(extract_job, "SLICE_BYTES", total // 3 + 1)
+        slices = extract_job._slice_files(files, None)
+        assert len(slices) == 3
+        assert sorted(f for s in slices for f in s) == files
+        sb = total // 4
+        monkeypatch.setattr(extract_job, "SLICE_BYTES", sb)
+        assert len(extract_job._slice_files(files, None)) == -(-total // sb)
+        monkeypatch.setattr(extract_job, "SLICE_BYTES", 1)
+        assert len(extract_job._slice_files(files, None)) == len(files)
+
+    def test_default_rerun_skips_and_other_count_raises(
+        self, spark, pages_dir, out_dir, tmp_path
+    ):
+        s = run_extract(spark, pages_dir, out_dir)
+        assert (s["slices"], s["run"], s["rows_out"]) == (1, 1, 1500)
+        s = run_extract(spark, pages_dir, out_dir)
+        assert (s["slices"], s["skipped"], s["run"]) == (1, 1, 0)
+
+        pinned = str(tmp_path / "pinned")
+        run_extract(spark, pages_dir, pinned, n_slices=3)
+        with pytest.raises(ValueError, match=r"run of 3 slices .*--slices 3"):
+            run_extract(spark, pages_dir, pinned)
+
+        # slice 0 of the 3-slice run never committed: the default cut's
+        # only slice has no manifest, but the --out still holds slices 1-2
+        # of the other cut, which a rerun would double-count
+        os.remove(os.path.join(pinned, "_manifests", "slice-0.json"))
+        with pytest.raises(ValueError, match=r"run of 3 slices .*--slices 3"):
+            run_extract(spark, pages_dir, pinned)
+        with pytest.raises(ValueError, match=r"run of 3 slices"):
+            run_extract(spark, pages_dir, pinned, resume=False)
+
+        # a manifest without a recorded count cannot vouch for its cut
+        man = os.path.join(out_dir, "_manifests", "slice-0.json")
+        m = json.load(open(man))
+        del m["slices"]
+        json.dump(m, open(man, "w"))
+        with pytest.raises(ValueError, match=r"unrecorded .*fresh --out"):
+            run_extract(spark, pages_dir, out_dir)
+
+
+class TestSlotPolicy:
+    def test_one_task_slot_per_core(self):
+        """python_heavy is accepted and ignored: a pandas-UDF Python
+        worker uses one core, so every core is a task slot.  A fresh
+        process, because getOrCreate would hand back the suite's session."""
+        code = (
+            "from lightly_ocr_spark.plans.session import build_session\n"
+            "s = build_session('slots', cores=3, python_heavy=True)\n"
+            "sc = s.sparkContext\n"
+            "print('SLOTS', sc.defaultParallelism"
+            " // int(s.conf.get('spark.task.cpus', '1')))\n"
+            "s.stop()\n"
+        )
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(os.environ, SPARK_DRIVER_MEM="1g", PYTHONPATH=root)
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=root, env=env,
+            capture_output=True, text=True, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert "SLOTS 3" in out.stdout.splitlines(), out.stdout
 
 
 class TestSaltAutoDefault:

@@ -44,7 +44,6 @@ def main() -> None:
         pass
     spark = build_session(
         "lsh-cap-recall", cores=cpus * 3 // 2, shuffle_partitions=cpus,
-        python_heavy=True,
         extra_conf={"spark.sql.files.maxPartitionBytes": "4m"},
     )
     pages_dir = ensure_bench_pages(n)

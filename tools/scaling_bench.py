@@ -55,7 +55,7 @@ from lightly_ocr_spark.operators.extract_udf import extract_pages
 from pyspark.sql import functions as F
 
 spark = build_session("scale-%d" % cores, cores=cores,
-                      shuffle_partitions=2 * cores, python_heavy=True)
+                      shuffle_partitions=2 * cores)
 # warm-up (JVM, Python workers, code paths) — excluded from the measurement
 warm = spark.read.parquet(pages_dir).limit(2048)
 extract_pages(warm).agg(F.count("*")).collect()
