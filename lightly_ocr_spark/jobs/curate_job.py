@@ -17,6 +17,8 @@ generator->filter->dataset ETL plane, `ocr/tools/generator.py` +
     -> quality gate               # >= MIN_TOKENS whitespace tokens
     -> enrich                     # lang_pred, bigram_logp, top_bigram_frac
     -> repetition / fluency / NB gates, PII scrub (all opt-in)
+    -> media rollup (opt-in)      # valid items per url: one Arrow
+                                  # crossing, payload sha256 JVM-side
     -> write + stage-count manifest
 
 The stages after near dedup add or replace columns on the rows they
@@ -53,29 +55,28 @@ from lightly_ocr_spark.sources import read_pages
 from lightly_ocr_spark.sources.commit import atomic_json, require_local
 
 
-def media_features_per_url(media: DataFrame) -> DataFrame:
-    """Opt-in media leg: probe -> validity filter -> featurize -> per-url
-    rollup, ready to left-join onto the curated text table.
+def media_per_url(media: DataFrame) -> DataFrame:
+    """Opt-in media leg: validity filter -> per-url rollup, ready to
+    left-join onto the curated text table.
 
     Input: media parquet with MEDIA_SCHEMA columns plus a `url` linking
-    each item to its page.  Corrupt images (bad magic/CRC, truncated
-    header, dimensions disagreeing with declared meta) are dropped by
-    `valid_media`; survivors get Arrow-batched features (url carried
-    through the stage — single pass, no re-join), then one url-keyed
-    aggregate: item count and a deterministic per-url media fingerprint
-    (sha256 over the sorted item hashes).  Scalars only — the curated
-    table stays one row per url."""
-    from lightly_ocr_spark.operators.multimodal import (
-        featurize_media,
-        valid_media,
-    )
+    each item to its page.  Each payload's sha256 is computed JVM-side
+    (a null payload hashes as the empty string), then one Arrow crossing
+    (`valid_media`) drops corrupt images (bad magic/CRC, truncated
+    header, dimensions disagreeing with declared meta) and carries only
+    `url` and the hash back.  One url-keyed aggregate follows: item
+    count and a deterministic per-url media fingerprint (sha256 over the
+    sorted item hashes).  Scalars only — the curated table stays one
+    row per url."""
+    from lightly_ocr_spark.operators.multimodal import valid_media
 
-    # url rides THROUGH the featurize stage: joining features back to
-    # kept on media_id would re-execute the whole probe/validity subtree
-    # (and its Arrow stage) a second time per action
-    feats = featurize_media(valid_media(media))
+    hashed = media.select(
+        "url", "kind", "payload", "meta",
+        F.sha2(F.coalesce("payload", F.expr("X''")), 256)
+        .alias("payload_sha256"),
+    )
     return (
-        feats.groupBy("url")
+        valid_media(hashed).groupBy("url")
         .agg(
             F.count(F.lit(1)).alias("n_valid_media"),
             F.sha2(
@@ -301,7 +302,7 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     obs_media = None
     if media_path is not None:
         obs_media = Observation("curate-media")
-        per_url = media_features_per_url(
+        per_url = media_per_url(
             spark.read.parquet(media_path)
         ).observe(
             obs_media,
@@ -448,8 +449,8 @@ def main() -> None:
                     "default uses executor-local checkpoints (local mode)")
     ap.add_argument("--media", default=None,
                     help="optional media parquet (MEDIA_SCHEMA + url): "
-                    "probe/validate images, featurize survivors, and "
-                    "left-join per-url media counts+fingerprint onto the "
+                    "drop corrupt images by a header probe and left-join "
+                    "per-url valid-item counts + fingerprint onto the "
                     "curated table")
     ap.add_argument("--nb-model", default=None,
                     help="saved NB model dir (classify.nb_save): score "

@@ -11,8 +11,10 @@ a 10^12-row table:
   reference's periodic checkpoint interval (`val_interval`, config.yml:14).
   The count depends only on the input, so a resume on another cluster
   size cuts the same slices; ``--slices`` pins it.
-* **Salting** — within a slice, rows are shuffled by ``xxhash64(url)`` so a
-  hot host-domain cannot pin a partition (north_rule skew requirement).
+* **Salting** — a slice of input that does not split (gzip WARC or
+  JSONL) is shuffled by ``xxhash64(url)`` so one giant archive cannot pin
+  a task (north_rule skew requirement); parquet and plain JSONL splits
+  are already byte-uniform and run narrow (``--salt`` overrides).
   ``xxhash64`` over full urls is near-uniform regardless of the zipf host
   distribution.
 * **Manifests** — each committed slice writes `_manifests/slice-K.json` with
@@ -21,9 +23,8 @@ a 10^12-row table:
   reference's per-interval logs (`train/crnn.py:285-327`).
 * **Resume** — a slice is committed iff its manifest exists; re-running skips
   committed slices and overwrites partial output of uncommitted ones
-  (idempotent).  With an Iceberg catalog the same semantics come from
-  snapshot commits; the parquet+manifest sink keeps the contract identical
-  in jarless environments (SURVEY.md §7.4 fallback).
+  (idempotent): a table format's snapshot-commit semantics, from parquet
+  data plus atomic JSON markers (`sources.commit`).
 
 Run: ``spark-submit --py-files dist/lightly_ocr_spark.zip -m`` or
 ``python -m lightly_ocr_spark.jobs.extract_job --pages DIR --out DIR``.

@@ -376,10 +376,17 @@ def minhash_pairs(
     `max_id` bounds the candidate universe: the synthetic documents share a
     tiny vocabulary, so nearly every pair is a true near-dup and the pair
     count grows quadratically with corpus size — a data property, not an
-    LSH failure (bucket join still never materializes cross-bucket pairs)."""
-    d = spread(load(spark, sf, "documents").select("doc_id", "text").filter(
+    LSH failure (bucket join still never materializes cross-bucket pairs).
+
+    NOT `spread` (measured at sf0.1 on 4 cores, 12 interleaved pairs
+    twice): one xxhash64 per (seed, token) over <= `max_id` docs is too
+    light to amortize the fan-out shuffle — 1.27 vs 1.25 s and 1.07 vs
+    1.19 s median without vs with it.  The md5 twin keeps its `spread`:
+    `k` md5s per token are heavy enough that the fan-out pays (without
+    it 1.86 vs 1.64 s and 1.46 vs 1.35 s in the same runs)."""
+    d = load(spark, sf, "documents").select("doc_id", "text").filter(
         F.col("doc_id") < max_id
-    ))
+    )
     doubled = d.unionByName(
         d.filter(F.col("doc_id") < 50).select(
             (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"

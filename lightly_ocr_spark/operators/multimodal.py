@@ -5,40 +5,25 @@ The graft treats media exactly like the reference treats image buffers
 decode probe, `generator.py:10-18`): an opaque binary column plus declared
 metadata, processed by Arrow-batched functions.
 
-Decode depth is split in two:
-
-* **Header probe — REAL.**  `probe_image` parses PNG / JPEG / GIF headers
-  (pure Python, no media libs): magic, dimensions, and for PNG the IHDR
-  CRC.  `probe_media` / `valid_media` run it as an Arrow-batched stage and
-  are the graft of the reference's decode-probe validity filter
-  (`ocr/tools/generator.py:10-18`: decode the bytes, drop the row if the
-  decode fails or the size is degenerate).
-* **Pixel decode — stubbed.**  Full rasterization needs PIL/libav, which
-  this container ships without; `decode_image` raises NotImplementedError
-  unless PIL is importable, and `fake_image_features` is the deterministic
-  stand-in for feature extraction.  The Spark-side plumbing (schema,
-  mapInPandas batch shape, partitioning) is real and tested either way.
+The decode is a header probe, not a pixel decode: `probe_image` parses
+PNG / JPEG / GIF headers (pure Python, no media libs) for magic,
+dimensions and, for PNG, the IHDR CRC.  `valid_media` runs it as one
+Arrow-batched filter and is the graft of the reference's decode-probe
+validity filter (`ocr/tools/generator.py:10-18`: decode the bytes, drop
+the row if the decode fails or the size is degenerate).
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
 import zlib
 from collections.abc import Iterator
+from functools import partial
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # pragma: no cover - not present in this container
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except Exception:  # pragma: no cover
-    HAVE_PIL = False
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -60,20 +45,6 @@ MEDIA_SCHEMA = T.StructType(
         ),
     ]
 )
-
-FEATURE_DIM = 16
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("payload_sha256", T.StringType(), False),
-        T.StructField("features", T.ArrayType(T.FloatType(), False), False),
-        T.StructField("decoder", T.StringType(), False),
-    ]
-)
-
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -142,126 +113,50 @@ def probe_image(payload: bytes | None) -> dict:
     return bad
 
 
-PROBE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("mime_detected", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("valid", T.BooleanType(), False),
-    ]
-)
+def _image_passes(payload: bytes | None, width, height) -> bool:
+    """Decode probe succeeds and the parsed dimensions agree with the
+    declared ones (a null declared dimension is not checked)."""
+    p = probe_image(payload)
+    return (p["valid"]
+            and (pd.isna(width) or p["width"] == width)
+            and (pd.isna(height) or p["height"] == height))
 
 
-def _probe_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _valid_partition(carried: list[str], batches: Iterator[pd.DataFrame]
+                     ) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        probes = [probe_image(p) for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "media_id": pdf["media_id"].to_numpy(),
-                "kind": pdf["kind"].to_numpy(),
-                "mime_detected": [p["mime"] for p in probes],
-                "width": pd.array([p["width"] for p in probes],
-                                  dtype="Int32"),
-                "height": pd.array([p["height"] for p in probes],
-                                   dtype="Int32"),
-                "valid": [p["valid"] for p in probes],
-            }
-        )
-
-
-def probe_media(media: DataFrame) -> DataFrame:
-    """media table -> header-probe results (one Arrow crossing)."""
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        _probe_partition, schema=PROBE_SCHEMA
-    )
+        # a null kind is dropped, as `kind != 'image'` drops it in SQL
+        keep = [
+            kind is not None
+            and (kind != "image" or _image_passes(payload, w, h))
+            for kind, payload, w, h in zip(
+                pdf["kind"], pdf["payload"], pdf["_w"], pdf["_h"]
+            )
+        ]
+        yield pdf.loc[keep, carried]
 
 
 def valid_media(media: DataFrame) -> DataFrame:
-    """F7-analog validity filter for IMAGE rows: keep images whose payload
-    header parses AND whose parsed dimensions agree with the declared
-    metadata (a lying `meta.width` is as disqualifying as a truncated
-    payload).  Non-image kinds (audio/video) pass through untouched —
+    """F7-analog validity filter, one Arrow crossing: keep images whose
+    payload header parses AND whose parsed dimensions agree with the
+    declared metadata (a lying `meta.width` is as disqualifying as a
+    truncated payload).  Non-image kinds (audio/video) pass through —
     the probe only understands image formats, so failing them would
-    silently drop every valid audio/video row."""
-    images = media.filter(F.col("kind") == "image")
-    others = media.filter(F.col("kind") != "image")
-    probes = probe_media(images).filter(F.col("valid"))
-    kept_images = (
-        images.join(probes.select("media_id", "width", "height"), "media_id")
-        .filter(
-            (F.col("meta.width").isNull() | (F.col("meta.width") == F.col("width")))
-            & (F.col("meta.height").isNull()
-               | (F.col("meta.height") == F.col("height")))
-        )
-        .select(images["*"])
+    silently drop every valid audio/video row.
+
+    Returns the passing rows' columns other than `kind`, `payload` and
+    `meta`: callers carry what they need downstream (a url, a hash the
+    JVM computed) through the crossing, and the payload bytes never
+    come back out of Python."""
+    carried = [f for f in media.schema.fields
+               if f.name not in ("kind", "payload", "meta")]
+    names = [f.name for f in carried]
+    return media.select(
+        *names, "kind", "payload",
+        F.col("meta.width").alias("_w"), F.col("meta.height").alias("_h"),
+    ).mapInPandas(
+        partial(_valid_partition, names), schema=T.StructType(carried)
     )
-    return kept_images.unionByName(others)
-
-
-def decode_image(payload: bytes) -> "np.ndarray":
-    """Real decode path — unavailable in this container by design."""
-    if not HAVE_PIL:
-        raise NotImplementedError(
-            "image decoding requires PIL; this environment ships without "
-            "media libraries — use fake_image_features (deterministic stub)"
-        )
-    raise NotImplementedError("real decoder wiring lands with the media libs")
-
-
-def fake_image_features(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Deterministic stand-in features: sha256-seeded, unit-normalized.
-
-    Stable across runs/machines, so downstream operators (ANN, dedup) can be
-    tested end-to-end without decoders."""
-    h = hashlib.sha256(payload or b"").digest()
-    raw = np.frombuffer((h * ((dim * 4) // len(h) + 1))[: dim * 4], dtype="<u4")
-    v = (raw.astype(np.float64) / 2**32) - 0.5
-    n = np.linalg.norm(v)
-    return (v / n if n else v).astype(np.float32)
-
-
-def _featurize_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        payloads = pdf["payload"]
-        feats = [fake_image_features(p).tolist() for p in payloads]
-        out = {
-            "media_id": pdf["media_id"].to_numpy(),
-            "kind": pdf["kind"].to_numpy(),
-            "n_bytes": payloads.map(lambda p: len(p or b"")).astype("int64"),
-            "payload_sha256": payloads.map(
-                lambda p: hashlib.sha256(p or b"").hexdigest()
-            ),
-            "features": pd.Series(feats, dtype="object"),
-            # honest provenance: the features ARE the sha256 stub even
-            # when PIL happens to be importable (decode_image has no
-            # real path yet) — labeling them "pil" would let auditors
-            # trust hash noise as pixel-derived embeddings
-            "decoder": "stub-sha256",
-        }
-        if "url" in pdf.columns:
-            out["url"] = pdf["url"].to_numpy()
-        yield pd.DataFrame(out)
-
-
-def featurize_media(media: DataFrame) -> DataFrame:
-    """media table -> per-item features (Arrow-batched, schema-stable).
-    A `url` column, when present, is carried through the stage so callers
-    can aggregate per page WITHOUT re-joining (a join back on media_id
-    would re-execute the upstream probe/validity subtree).
-
-    At scale: salt by xxhash64(media_id) before this stage if payload sizes
-    are heavy-tailed (video >> thumbnails) — same skew treatment as pages."""
-    cols = ["media_id", "kind", "payload"]
-    schema = FEATURES_SCHEMA
-    if "url" in media.columns:
-        cols.append("url")
-        schema = T.StructType(
-            FEATURES_SCHEMA.fields
-            + [T.StructField("url", T.StringType(), True)]
-        )
-    return media.select(*cols).mapInPandas(_featurize_partition, schema=schema)
 
 
 def make_png(width: int, height: int, tail: bytes = b"") -> bytes:

@@ -4,8 +4,8 @@ Dependency-free ISO 28500 subset: splits a WARC (plain or gzip, including
 CC's per-record-gzip-member layout) into records, keeps ``WARC-Type:
 response``, takes ``WARC-Target-URI`` / ``WARC-Date``, and strips the HTTP
 envelope so the payload body lands in the ``html`` binary column — the
-front door a real CC pipeline needs before the Iceberg table exists
-(graft of the reference's ingest plane, `ingress/server.go` + the KV fetch
+front door a real CC pipeline needs before extraction (graft of the
+reference's ingest plane, `ingress/server.go` + the KV fetch
 `pipeline.py:106-112`, restated as a batch file source).
 
 Spark shape: `binaryFile` scan -> ONE `mapInPandas` that explodes each

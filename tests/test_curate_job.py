@@ -1,5 +1,6 @@
 """End-to-end curation pipeline test with planted exact and near dupes."""
 
+import hashlib
 import os
 
 import pytest
@@ -85,6 +86,10 @@ class TestMediaLeg:
             (6, urls[3], "audio", b"\x01\x02\x03", Row(
                 width=None, height=None, sample_rate=16000,
                 n_frames=None, mime="audio/fake")),
+            # urls[4]: a null audio payload counts, hashed as b""
+            (7, urls[4], "audio", None, Row(
+                width=None, height=None, sample_rate=16000,
+                n_frames=None, mime="audio/fake")),
         ]
         from lightly_ocr_spark.operators.multimodal import MEDIA_SCHEMA
         from pyspark.sql import types as T
@@ -100,9 +105,10 @@ class TestMediaLeg:
 
         out = str(tmp_path / "curated_media")
         m = run_curate(spark, pages_dir, out, media_path=media_dir)
-        # 4 valid items (urls[0]: 2, urls[1]: 1, urls[2]: 0, urls[3]: audio)
-        assert m["media_valid_items"] == 4
-        assert m["media_urls"] == 3
+        # 5 valid items (urls[0]: 2, urls[1]: 1, urls[2]: 0, urls[3] and
+        # urls[4]: one audio each)
+        assert m["media_valid_items"] == 5
+        assert m["media_urls"] == 4
 
         curated = spark.read.parquet(os.path.join(out, "data"))
         got = {
@@ -110,12 +116,18 @@ class TestMediaLeg:
             for r in curated.filter(F.col("n_valid_media").isNotNull())
             .select("url", "n_valid_media", "media_sha256").collect()
         }
-        surviving = {u for u in urls[:4] if u in got}
-        # urls[2] had only corrupt media: no media columns for it
-        assert urls[2] not in got
-        for u in surviving:
-            n, sha = got[u]
-            assert n >= 1 and len(sha) == 64
+        def fingerprint(*payloads):
+            items = sorted(hashlib.sha256(p).hexdigest() for p in payloads)
+            return hashlib.sha256(",".join(items).encode()).hexdigest()
+
+        # urls[1] is itself dropped by curation; urls[2] had only corrupt
+        # media, so it gets no media columns
+        assert got == {
+            urls[0]: (2, fingerprint(good, make_png(32, 32))),
+            urls[3]: (1, fingerprint(b"\x01\x02\x03")),
+            urls[4]: (1, "cd372fb85148700fa88095e3492d3f9f"
+                         "5beb43e555e5ff26d95f5a6adc36f8e6"),
+        }
         # pages without media keep flowing with null media columns
         assert curated.filter(F.col("n_valid_media").isNull()).count() > 0
 

@@ -82,6 +82,30 @@ class TestPlanShape:
         assert "MapInPandas" not in plan
         assert "Join" not in plan and "Exchange" not in plan
 
+    def test_media_leg_is_one_arrow_crossing_with_no_join(self, spark):
+        """Curate's media leg hashes payloads JVM-side, crosses into
+        Python once, and gets only `url` and the hash back: the executed
+        plan has one MapInPandas and no join keyed on media_id."""
+        import re
+
+        from lightly_ocr_spark.jobs.curate_job import media_per_url
+        from lightly_ocr_spark.operators.multimodal import synthetic_media
+
+        media = synthetic_media(spark, n=12).withColumn(
+            "url", F.concat(F.lit("u"), (F.col("media_id") % 3).cast("string"))
+        )
+        out = media_per_url(media)
+        assert len(out.collect()) == 3
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[0]   # the final plan only
+        assert "isFinalPlan=true" in plan, plan
+        assert plan.count("MapInPandas") == 1, plan
+        assert "Join" not in plan, plan
+        assert "sha2(coalesce(payload" in plan, plan
+        assert re.search(
+            r"MapInPandas .*, \[url#\d+, payload_sha256#\d+\], ", plan
+        ), plan
+
     def test_salted_extract_exactly_one_shuffle(self, spark):
         from lightly_ocr_spark.operators.extract_udf import extract_pages
 

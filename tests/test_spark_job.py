@@ -276,24 +276,6 @@ class TestExtractedReporting:
         assert top["docs"] > 1500 * 0.15  # zipf head visible in output
 
 
-class TestIcebergGate:
-    def test_iceberg_probed_and_gated(self, spark):
-        """The sandbox ships no iceberg runtime jar (probed, not assumed);
-        the sink raises a clear NotImplementedError pointing at the
-        manifest-parquet path with equivalent commit semantics."""
-        import pytest as _pytest
-
-        from lightly_ocr_spark.sources.iceberg import (
-            IcebergSink,
-            iceberg_available,
-        )
-
-        if iceberg_available(spark):  # pragma: no cover - jarful environments
-            _pytest.skip("iceberg present: sink usable")
-        with _pytest.raises(NotImplementedError):
-            IcebergSink(spark, "ice.extracted")
-
-
 class TestCompactJob:
     def test_many_small_files_compact_losslessly(self, spark, tmp_path):
         """64 tiny files -> few target-size files: same rows/values, a
