@@ -92,9 +92,6 @@ class ExtractResult:
     text: str
     spans: tuple[Span, ...]
     n_blocks: int
-    # D8 analog, populated only when extract_text(..., subspans=True):
-    # per segment, sentence (start, end) offsets into that segment's text
-    sentence_spans: tuple[tuple[tuple[int, int], ...], ...] = ()
 
 
 def _normalize_block_text(raw: str) -> str:
@@ -297,30 +294,6 @@ def _segments(blocks: list[Block]) -> list[tuple[list[int], float]]:
     return out
 
 
-# D8 analog (OPTIONAL, default off — the reference ships enablePoly=False,
-# `ocr/net.py:50`): sentence-level sub-spans inside a segment's stitched
-# text.  Boundaries after [.!?] or CJK fullwidth stops when followed by
-# whitespace/newline; offsets index the segment text (the "polygon" refines
-# the box, it does not change it).
-_SENTENCE_RE = re.compile(r"[^.!?。！？\n]*(?:[.!?。！？]+|\n|$)\s*", re.DOTALL)
-
-
-def split_sentences(text: str) -> list[tuple[int, int]]:
-    """(start, end) char spans of sentences; concatenation of the slices
-    reproduces `text` exactly (lossless partition)."""
-    spans: list[tuple[int, int]] = []
-    pos = 0
-    n = len(text)
-    while pos < n:
-        m = _SENTENCE_RE.match(text, pos)
-        if m is None or m.end() == pos:  # safety: always advance
-            spans.append((pos, n))
-            break
-        spans.append((pos, m.end()))
-        pos = m.end()
-    return spans
-
-
 def _collapse_dup_lines(lines: list[str]) -> list[str]:
     """R6: CTC-collapse analog — drop consecutive duplicate lines."""
     out: list[str] = []
@@ -332,12 +305,8 @@ def _collapse_dup_lines(lines: list[str]) -> list[str]:
     return out
 
 
-def extract_text(raw_html: bytes | None, subspans: bool = False) -> ExtractResult:
-    """Full fused pipeline for one document (engine path).
-
-    `subspans=False` mirrors the reference's `enablePoly=False` default
-    (`net.py:50`): sentence refinement is opt-in and never alters text/spans.
-    """
+def extract_text(raw_html: bytes | None) -> ExtractResult:
+    """Full fused pipeline for one document (engine path)."""
     decoded = decode_page_bytes(raw_html)
     canon, removals = canonicalize_newlines(decoded)
     blocks = tokenize_blocks(canon)
@@ -358,12 +327,7 @@ def extract_text(raw_html: bytes | None, subspans: bool = False) -> ExtractResul
         o_start = c_start + bisect_right(removals, c_start)
         o_end = c_end + bisect_right(removals, c_end - 1)
         spans.append(Span(o_start, o_end, score))
-    sent: tuple[tuple[tuple[int, int], ...], ...] = ()
-    if subspans:
-        sent = tuple(tuple(split_sentences(t)) for t in texts)
-    return ExtractResult(
-        SEGMENT_SEP.join(texts), tuple(spans), len(blocks), sent
-    )
+    return ExtractResult(SEGMENT_SEP.join(texts), tuple(spans), len(blocks))
 
 
 def _pdf_spans(text: str) -> tuple[list[int], list[int]]:

@@ -21,8 +21,9 @@ order, through the `sources.commit` protocol:
                     against the persisted signature index)
     2. corpus     : write batch=<id>/ parquet (overwrite — idempotent)
     3. manifest   : batch-<id>.json      <- CORPUS commit point
-    4. index      : append near-survivors' signatures (when --near-index),
-                    THEN exact fingerprints — near-first, so a crash
+    4. index      : append near-survivors' signatures to the near
+                    index's one dataset, sigs/ (when --near-index), THEN
+                    exact fingerprints — near-first, so a crash
                     between the two appends replays with the exact
                     anti-join still computing the full survivor set while
                     the near append's doc_id anti-join makes its re-append
@@ -61,14 +62,13 @@ Batches are SEQUENTIAL by design: the index is a serial admission log
 inside each batch, not across batches.
 
 Index maintenance cadence: every append lands one file per touched
-partition dir (fp_prefix=XX/ for the exact index; band=B/bh_prefix=P/
-for the near index's buckets/, plus a flat file set in sigs/), so after
-~50-100 batches run `compact_job` between batches — `--partition-by
-fp_prefix` on the exact index, `--partition-by band,bh_prefix` on
-buckets/ and a flat compaction on sigs/.  In-place compaction preserves
-layout and dedup results exactly (tested: probe survivors identical
-before/after), and the crash-safe swap means a batch can always follow
-a compaction, never run concurrently with one.
+fp_prefix=XX/ dir of the exact index and a flat file set in the near
+index's sigs/, so after ~50-100 batches run `compact_job` between
+batches — `--partition-by fp_prefix` on the exact index and a flat
+compaction on sigs/.  In-place compaction preserves layout and dedup
+results exactly (tested: probe survivors identical before/after), and
+the crash-safe swap means a batch can always follow a compaction, never
+run concurrently with one.
 """
 
 from __future__ import annotations

@@ -299,20 +299,17 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         curated = pii_scrub_df(curated).withColumnRenamed(
             "scrubbed", "text"
         )
-    obs_media = None
+    out_counts = [F.count(F.lit(1)).alias("n")]
     if media_path is not None:
-        obs_media = Observation("curate-media")
-        per_url = media_per_url(
-            spark.read.parquet(media_path)
-        ).observe(
-            obs_media,
-            F.sum("n_valid_media").alias("items"),
-            F.count(F.lit(1)).alias("urls"),
+        # left join: pages without media keep flowing.  The media counts
+        # are taken after the join, over the curated rows only, and ride
+        # the write action's observation — no extra materialization
+        curated = curated.join(
+            media_per_url(spark.read.parquet(media_path)), "url", "left"
         )
-        # left join: pages without media keep flowing; counts ride the
-        # write action via the observation, no extra materialization
-        curated = curated.join(per_url, "url", "left")
-    curated = curated.observe(obs_cur, F.count(F.lit(1)).alias("n"))
+        out_counts += [F.sum("n_valid_media").alias("media_items"),
+                       F.count("n_valid_media").alias("media_urls")]
+    curated = curated.observe(obs_cur, *out_counts)
     curated.write.mode("overwrite").parquet(os.path.join(out_dir, "data"))
     if nb_model_path is not None:
         gated.unpersist()
@@ -398,10 +395,10 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         "min_tokens": MIN_TOKENS,
         "wall_s": round(time.time() - t0, 3),
     }
-    if obs_media is not None:
-        m = obs_media.get
-        manifest["media_valid_items"] = int(m["items"] or 0)
-        manifest["media_urls"] = int(m["urls"] or 0)
+    if media_path is not None:
+        m = obs_cur.get
+        manifest["media_valid_items"] = int(m["media_items"] or 0)
+        manifest["media_urls"] = int(m["media_urls"])
     if nb_model_path is not None:
         manifest["nb_model"] = nb_model_path
         manifest["nb_drop"] = nb_drop

@@ -37,7 +37,6 @@ def _words(text_col: str) -> F.Column:
 def nb_fit(
     docs: DataFrame, label_col: str = "label", text_col: str = "text",
     alpha: float = 1.0, eager: bool = True,
-    cache_registry: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Fit multinomial NB; returns (word_model, label_model) DataFrames.
 
@@ -106,13 +105,6 @@ def nb_fit(
         label_model = label_model.localCheckpoint(eager=True)
         word_counts.unpersist()
         doc_counts.unpersist()
-    elif cache_registry is not None:
-        # lazy fit keeps the two corpus aggregates persisted for as long
-        # as the returned model views are in use; long-lived sessions
-        # fitting MANY corpora (e.g. a fuzz sweep) can pass a list here
-        # and unpersist() the handles when done instead of leaking one
-        # cache pair per distinct input plan until LRU eviction
-        cache_registry.extend([word_counts, doc_counts])
     return word_model, label_model
 
 

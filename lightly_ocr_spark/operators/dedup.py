@@ -12,6 +12,12 @@ Python row loops):
               a bucket, which is the scale path for 10^12 docs.
 * simhash   — 64 sign votes over per-token md5 digit bits (`simhash_md5`);
               near-dups differ in few bits.
+
+The crawl loop's cross-batch memory is two append-only indexes: the
+exact one holds one content fingerprint per admitted doc, and the near
+one holds one MinHash signature row per admitted doc (`sigs/`).  The
+near index stores no LSH buckets: a probe derives them from the
+signatures with the same `band_buckets` projection the batch side uses.
 """
 
 from __future__ import annotations
@@ -226,8 +232,8 @@ def band_buckets(
     """Signature frame (doc_id, mh0..mh{k-1}) -> stacked LSH bucket rows
     (doc_id, band, bh): rows-per-band split, per-band xxhash64, one
     explode.  The single shared banding projection — candidate-pair
-    generation, the curation pipeline, and the persisted near-dup index
-    all derive buckets from here so the bucket layout cannot drift."""
+    generation, the curation pipeline, and both sides of the near-dup
+    index probe derive buckets from here so the layout cannot drift."""
     if k % bands:
         raise ValueError(
             f"k={k} not divisible by bands={bands}: the trailing "
@@ -265,10 +271,8 @@ def cap_buckets(stacked: DataFrame, max_bucket: int | None) -> DataFrame:
     is what exact, line, and passage dedup already catch.  `None`
     disables the cap (exact legacy behavior).
 
-    Bucket size counts DISTINCT ids, not rows: the near-dup index's
-    append crash window legally leaves duplicate bucket rows (absorbed
-    by the candidate `distinct`), and a row count would double-count
-    them into spuriously capping a legitimate bucket."""
+    Bucket size counts DISTINCT ids, not rows, so an id whose rows
+    repeat in `stacked` never counts twice toward the cap."""
     if max_bucket is None:
         return stacked
     if max_bucket < 1:
@@ -282,9 +286,9 @@ def cap_buckets(stacked: DataFrame, max_bucket: int | None) -> DataFrame:
     if len(others) != 1:
         raise ValueError(
             f"cap_buckets expects exactly one id column besides "
-            f"(band, bh), got {stacked.columns}: project extras (e.g. a "
-            "bh_prefix partition column) away first, or the distinct "
-            "count silently runs over the wrong column"
+            f"(band, bh), got {stacked.columns}: project extras away "
+            "first, or the distinct count silently runs over the wrong "
+            "column"
         )
     id_col = others[0]
     keep = (
@@ -838,45 +842,23 @@ def incremental_exact_dedup(
 
 def write_minhash_index(sigs: DataFrame, path: str) -> None:
     """Append a signature frame (doc_id, mh0..mh{k-1}) to the corpus
-    NEAR-dup index (the first append creates it): two datasets under
-    `path` —
-
-      sigs/     one row per doc (the verification surface; joined only
-                for candidates, by doc_id)
-      buckets/  (doc_id, band, bh), partitioned by (band, bh_prefix):
-                the candidate surface — batch N+1's buckets equi-join
-                here, so candidate generation touches bucket rows, never
-                signatures, and partition pruning can narrow a probe to
-                one band/prefix shard
-
-    The bucket frame is hash-repartitioned on the partition columns
-    before the write, so each append lands exactly ONE file per touched
-    (band, bh_prefix) dir instead of one per shuffle partition — without
-    this, a 50k-doc batch wrote 128 dirs x 32 files = 4096 tiny files,
-    and the next batch's candidate scan paid a 4096-task stage (measured:
-    bucket join 5.1s -> ~1s, append 14s -> ~4s at 50k docs).
+    NEAR-dup index at `path` (the first append creates it): one flat
+    `sigs/` dataset, one row per admitted doc.  It is the whole index —
+    the LSH bucket rows are a pure function of the signatures, so
+    `incremental_near_dedup` derives them at probe time.  (An index
+    written with an earlier `buckets/` sub-dataset next to `sigs/`
+    reads unchanged; that directory is never read.)
 
     IDEMPOTENT BY CONSTRUCTION: already-indexed doc_ids are anti-joined
-    out against the existing sigs/ dataset before anything is written,
-    so a crash-replay that recomputes the same survivor set appends
-    nothing.  (Self-match through the candidate join used to provide
-    replay-idempotence, but a bucket cap can legally suppress a capped
-    doc's self-match; the anti-join holds under ANY candidate-generation
-    settings.)  A doc_id already present keeps its ORIGINAL signature —
-    a re-crawled url whose content changed is not re-indexed, matching
-    the exact index's one-fingerprint-per-admission semantics.
-
-    Append ORDER is buckets first, sigs second, making sigs/ the commit
-    point the anti-join reads: a crash between the two appends leaves
-    orphan bucket rows whose doc_id is absent from sigs/ — inert
-    (verification inner-joins sigs) — and the replay, whose anti-join
-    still sees the doc_id as new, re-appends both datasets; the
-    duplicate bucket rows are absorbed by the candidate `distinct` and
-    by `cap_buckets`' distinct-id counting.  Appending sigs first would
-    instead make the replay skip the doc with its buckets missing —
-    permanently unmatchable.  Both sub-datasets' interrupted compaction
-    swaps are recovered before anything is read or written."""
-    recover_interrupted_swap(f"{path}/buckets")
+    out against the existing sigs/ before anything is written, so a
+    crash-replay that recomputes the same survivor set appends nothing.
+    (Self-match through the candidate join cannot provide this: a
+    bucket cap can legally suppress a capped doc's self-match; the
+    anti-join holds under ANY candidate-generation settings.)  A doc_id
+    already present keeps its ORIGINAL signature — a re-crawled url
+    whose content changed is not re-indexed, matching the exact index's
+    one-fingerprint-per-admission semantics.  An interrupted compaction
+    swap of sigs/ is recovered (by `read_index`) before the append."""
     new_sigs = sigs
     existing = read_index(sigs.sparkSession, f"{path}/sigs")
     if existing is not None:
@@ -886,11 +868,6 @@ def write_minhash_index(sigs: DataFrame, path: str) -> None:
         new_sigs = sigs.join(
             existing.select("doc_id"), "doc_id", "left_anti"
         ).localCheckpoint(eager=True)
-    band_buckets(new_sigs).withColumn(
-        "bh_prefix", F.pmod("bh", F.lit(16)).cast("int")
-    ).repartition("band", "bh_prefix").write.mode("append").partitionBy(
-        "band", "bh_prefix"
-    ).parquet(f"{path}/buckets")
     new_sigs.write.mode("append").parquet(f"{path}/sigs")
 
 
@@ -909,9 +886,11 @@ def incremental_near_dedup(
       1. batch signatures over `NEAR_DUP_NGRAM` shingles of `text` (one
          groupBy) — persisted: they feed candidate generation, BOTH
          verification sides, and the survivor signatures;
-      2. CROSS candidates: batch buckets equi-join the index's bucket
-         dataset on (band, bh) — uniform hash keys, candidates bounded by
-         bucket collisions, never all-pairs;
+      2. CROSS candidates: batch buckets equi-join the index's buckets
+         on (band, bh) — both sides derived by the same `band_buckets`
+         projection, the index side from its `sigs/` at probe time;
+         uniform hash keys, candidates bounded by bucket collisions,
+         never all-pairs;
       3. verify candidates by full-signature agreement (>=
          `NEAR_DUP_MIN_AGREEMENT` of the k minhashes) joining batch sigs
          with ONLY the candidate corpus sigs; any verified match drops
@@ -932,11 +911,7 @@ def incremental_near_dedup(
 
     k, bands = MINHASH_K, MINHASH_BANDS
     need = int(NEAR_DUP_MIN_AGREEMENT * k)
-    # a sub-dataset missing without a compaction backup is the append
-    # crash window, which stays replay-safe by redundancy (see
-    # write_minhash_index): no cross drops until both exist
     idx_sigs = read_index(spark, f"{index_path}/sigs")
-    idx_buckets = read_index(spark, f"{index_path}/buckets")
     batch = new_batch.withColumnRenamed(id_col, "doc_id")
     sig_b = minhash_signatures(
         batch.select("doc_id", "text"), k=k, ngram=NEAR_DUP_NGRAM
@@ -944,7 +919,7 @@ def incremental_near_dedup(
     sig_rem = None
     try:
         cross_drops = None
-        if idx_sigs is not None and idx_buckets is not None:
+        if idx_sigs is not None:
             # the cap applies to BOTH sides: a degenerate band hash grows
             # a mega-bucket on the index side too, and the cross
             # equi-join on it would be |batch-bucket| x |index-bucket|.
@@ -953,7 +928,7 @@ def incremental_near_dedup(
             # bucket's full membership, so the test is exact) — capping
             # the whole index would add a full-index aggregate per batch
             # that grows with the corpus.
-            idx_buckets = idx_buckets.select(
+            idx_buckets = band_buckets(idx_sigs, k, bands).select(
                 F.col("doc_id").alias("corpus_id"), "band", "bh"
             )
             bb = cap_buckets(band_buckets(sig_b, k, bands), max_bucket)

@@ -464,14 +464,11 @@ class TestNearIndexCompaction:
     def test_near_index_compacts_in_place_probe_identical(
         self, spark, tmp_path
     ):
-        """The near-dup index's buckets/ dataset gains one file per
-        touched (band, bh_prefix) dir per batch append (sigs/ one batch's
-        worth of files per append).  Partition-preserving compaction of
-        buckets/ plus flat compaction of sigs/ collapses the fragmentation
-        in place — and an incremental_near_dedup probe returns EXACTLY the
-        same survivors before and after."""
-        import glob as g
-
+        """The near-dup index is one flat sigs/ dataset that gains one
+        batch's worth of files per append.  A flat in-place compaction
+        of sigs/ collapses the fragmentation — and an
+        incremental_near_dedup probe returns EXACTLY the same survivors
+        before and after."""
         from lightly_ocr_spark.jobs.compact_job import run_compact
         from lightly_ocr_spark.operators.dedup import (
             incremental_near_dedup,
@@ -510,24 +507,18 @@ class TestNearIndexCompaction:
         before = probe()
         assert before == ["p-new"], before  # mutation caught, novel kept
 
-        def files_per_dir(root):
-            dirs = g.glob(os.path.join(root, "band=*", "bh_prefix=*"))
-            return {
-                d: len(g.glob(os.path.join(d, "*.parquet"))) for d in dirs
-            }
+        def sig_files():
+            return glob.glob(os.path.join(nidx, "sigs", "*.parquet"))
 
-        counts = files_per_dir(f"{nidx}/buckets")
-        assert counts and any(c > 1 for c in counts.values()), \
-            "appends did not fragment — test premise broken"
-        rows_b = spark.read.parquet(f"{nidx}/buckets").count()
+        assert os.listdir(nidx) == ["sigs"]
+        n_files = len(sig_files())
+        assert n_files >= 3, "appends did not fragment — test premise broken"
         rows_s = spark.read.parquet(f"{nidx}/sigs").count()
 
-        mb = run_compact(spark, f"{nidx}/buckets", f"{nidx}/buckets",
-                         partition_by=["band", "bh_prefix"])
         ms = run_compact(spark, f"{nidx}/sigs", f"{nidx}/sigs")
-        assert mb["rows"] == rows_b and ms["rows"] == rows_s
-        counts2 = files_per_dir(f"{nidx}/buckets")
-        assert counts2 and all(c == 1 for c in counts2.values()), counts2
+        assert ms["rows"] == rows_s == 60
+        assert len(sig_files()) == 1
+        assert spark.read.parquet(f"{nidx}/sigs").count() == rows_s
 
         assert probe() == before
 
@@ -576,11 +567,11 @@ class TestCompactionCrashRecovery:
     def test_near_index_interrupted_bucket_compaction_recovers(
         self, spark, tmp_path
     ):
-        """Same crash window for the near index's buckets/ SUB-dataset
-        (the documented cadence compacts sigs/ and buckets/
-        individually): a stranded buckets.replaced must be restored, or
-        every indexed doc becomes unmatchable while the next commit
-        recreates buckets/ and makes recovery impossible forever."""
+        """Same crash window for the near index's sigs/ dataset (the
+        documented cadence compacts it flat): a stranded sigs.replaced
+        must be restored by the next probe, or every indexed doc becomes
+        unmatchable while the next commit recreates sigs/ and makes
+        recovery impossible forever."""
         from lightly_ocr_spark.operators.dedup import (
             incremental_near_dedup,
             write_minhash_index,
@@ -596,16 +587,17 @@ class TestCompactionCrashRecovery:
         _, sigs = incremental_near_dedup(spark, d0, nidx)
         write_minhash_index(sigs, nidx)
 
-        os.rename(os.path.join(nidx, "buckets"),
-                  os.path.join(nidx, "buckets.replaced"))
+        os.rename(os.path.join(nidx, "sigs"),
+                  os.path.join(nidx, "sigs.replaced"))
 
         probe = spark.createDataFrame(
             [("p-mut", base + " extra")],  # near-copy of indexed d0
             "doc_id string, text string",
         )
         out, _ = incremental_near_dedup(spark, probe, nidx)
-        assert out.count() == 0  # near-dup caught => buckets recovered
-        assert not os.path.exists(os.path.join(nidx, "buckets.replaced"))
+        assert out.count() == 0  # near-dup caught => sigs recovered
+        assert not os.path.exists(os.path.join(nidx, "sigs.replaced"))
+        assert spark.read.parquet(f"{nidx}/sigs").count() == 2
 
 
 class TestCrawlStreamNearIndex:

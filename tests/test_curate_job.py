@@ -90,6 +90,10 @@ class TestMediaLeg:
             (7, urls[4], "audio", None, Row(
                 width=None, height=None, sample_rate=16000,
                 n_frames=None, mime="audio/fake")),
+            # a valid image of a page that was never crawled: it joins no
+            # curated row, so it must not count in the manifest
+            (8, "https://media-only.example/never-crawled", "image", good,
+             meta(64, 48)),
         ]
         from lightly_ocr_spark.operators.multimodal import MEDIA_SCHEMA
         from pyspark.sql import types as T
@@ -105,10 +109,12 @@ class TestMediaLeg:
 
         out = str(tmp_path / "curated_media")
         m = run_curate(spark, pages_dir, out, media_path=media_dir)
-        # 5 valid items (urls[0]: 2, urls[1]: 1, urls[2]: 0, urls[3] and
-        # urls[4]: one audio each)
-        assert m["media_valid_items"] == 5
-        assert m["media_urls"] == 4
+        # the counts cover the curated rows only: 4 valid items (urls[0]:
+        # 2, urls[3] and urls[4]: one audio each) over 3 urls.  urls[1]'s
+        # valid image and the never-crawled page's image join no curated
+        # row (urls[1] is dropped by curation)
+        assert m["media_valid_items"] == 4
+        assert m["media_urls"] == 3
 
         curated = spark.read.parquet(os.path.join(out, "data"))
         got = {

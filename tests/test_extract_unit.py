@@ -153,32 +153,6 @@ class TestSegmentation:
         assert html[s.start : s.end] == P10
 
 
-class TestSentenceSubspans:
-    """D8 analog: opt-in, lossless, never changes text/spans (poly=False
-    default per net.py:50)."""
-
-    def test_off_by_default(self):
-        assert ex(f"<p>{P10}.</p>").sentence_spans == ()
-
-    def test_lossless_partition(self):
-        from lightly_ocr_spark.functions.extract import extract_text
-
-        html = ("<p>First sentence here with nine words total right now. "
-                "Second one follows! Third asks a question? tail</p>").encode()
-        r = extract_text(html, subspans=True)
-        assert len(r.sentence_spans) == 1
-        seg_text = r.text
-        rebuilt = "".join(seg_text[a:b] for a, b in r.sentence_spans[0])
-        assert rebuilt == seg_text
-        assert len(r.sentence_spans[0]) == 4
-
-    def test_flag_does_not_change_text(self):
-        from lightly_ocr_spark.functions.extract import extract_text
-
-        html = f"<p>{P10}. {P10}!</p>".encode()
-        assert extract_text(html).text == extract_text(html, subspans=True).text
-
-
 class TestRobustness:
     def test_empty_and_none(self):
         assert ex("").text == ""

@@ -2,6 +2,8 @@
 (engine-specific hashing): minhash-LSH, simhash, LSH-ANN — plus the driver
 contract smoke (`__spark_entry__.entry`)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1281,7 +1283,8 @@ class TestMinhashIndexAppendIdempotence:
         """The append anti-joins already-indexed doc_ids (idempotence no
         longer depends on candidate self-match, which a bucket cap can
         legally suppress), and an already-indexed doc_id keeps its
-        ORIGINAL signature even if re-appended with different content."""
+        ORIGINAL signature even if re-appended with different content.
+        The index is sigs/ alone: no bucket dataset is ever written."""
         from lightly_ocr_spark.operators.dedup import (
             minhash_signatures,
             write_minhash_index,
@@ -1296,13 +1299,11 @@ class TestMinhashIndexAppendIdempotence:
         idx = str(tmp_path / "idx")
         write_minhash_index(sigs1, idx)
         n_sigs = spark.read.parquet(f"{idx}/sigs").count()
-        n_buck = spark.read.parquet(f"{idx}/buckets").count()
         assert n_sigs == 5
 
         # crash-replay: identical append is a complete no-op
         write_minhash_index(sigs1, idx)
         assert spark.read.parquet(f"{idx}/sigs").count() == n_sigs
-        assert spark.read.parquet(f"{idx}/buckets").count() == n_buck
 
         # re-crawled url with CHANGED content: not re-indexed
         d2 = spark.createDataFrame(
@@ -1319,6 +1320,7 @@ class TestMinhashIndexAppendIdempotence:
         orig = {r["mh0"] for r in sigs1.filter("doc_id = 'd0'").collect()}
         kept = {r["mh0"] for r in sigs.filter("doc_id = 'd0'").collect()}
         assert kept == orig  # original signature survives
+        assert os.listdir(idx) == ["sigs"]
 
 
 class TestIncrementalNearDedup:
@@ -1410,6 +1412,40 @@ class TestIncrementalNearDedup:
         s, _ = incremental_near_dedup(spark, b, idx, id_col="url")
         row = s.collect()[0]
         assert row["url"] == "u1" and row["extra"] == 7
+
+    def test_leftover_buckets_dir_is_never_read(self, spark, tmp_path):
+        """An index written when the near index also kept a buckets/
+        dataset next to sigs/ needs no rebuild: the probe derives buckets
+        from sigs/ and never reads buckets/, so junk bytes there change
+        nothing — the survivors equal those of the same index without
+        it."""
+        import shutil
+
+        from lightly_ocr_spark.operators.dedup import incremental_near_dedup
+
+        idx = str(tmp_path / "mh_index5")
+        _near_commit(spark, spark.createDataFrame(
+            [(i, self._doc(i)) for i in range(4)],
+            "doc_id long, text string",
+        ), idx)
+        probe = spark.createDataFrame(
+            [(100, self._doc(0, mutate="a")),
+             (200, "totally disjoint vocabulary " + " ".join(
+                 f"zq{i} xv{i} kj{i}" for i in range(30)))],
+            "doc_id long, text string",
+        )
+
+        def survivors(index_path):
+            out, _ = incremental_near_dedup(spark, probe, index_path)
+            return sorted(r["doc_id"] for r in out.collect())
+
+        clean = str(tmp_path / "mh_index5_clean")
+        shutil.copytree(idx, clean)
+        junk = os.path.join(idx, "buckets", "band=0", "bh_prefix=0")
+        os.makedirs(junk)
+        with open(os.path.join(junk, "part-0.parquet"), "wb") as f:
+            f.write(b"junk")
+        assert survivors(idx) == survivors(clean) == [200]
 
     def test_corrupt_index_raises(self, spark, tmp_path):
         from lightly_ocr_spark.operators.dedup import incremental_near_dedup

@@ -179,11 +179,15 @@ class TestShingleProjectionStaysMaterialized:
 
 
 class TestIncrementalNearDedupPlanShape:
-    def test_no_cartesian_or_nested_loop_joins(self, spark, tmp_path):
+    def test_no_cartesian_or_nested_loop_joins(
+        self, spark, tmp_path, monkeypatch
+    ):
         """The incremental near-dedup plan must be equi-joins end to end
         (bucket joins + signature verification + anti-joins) — a
         cartesian/nested-loop anywhere means candidates stopped being
-        bucket-bounded and the 10^12-doc story is gone."""
+        bucket-bounded and the 10^12-doc story is gone.  Every frame the
+        probe materialises is checked, and the index is read through
+        its sigs/ alone: no scan reads a buckets path."""
         from lightly_ocr_spark.operators.dedup import (
             incremental_near_dedup,
             write_minhash_index,
@@ -203,7 +207,30 @@ class TestIncrementalNearDedupPlanShape:
              for i in range(5)],
             "doc_id long, text string",
         )
-        out, _ = incremental_near_dedup(spark, batch, idx)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
+        # the returned frames are checkpointed, so their own plans are a
+        # bare RDD scan: record the plan of every frame the probe
+        # materialises instead
+        plans = []
+        frame_cls = type(batch)
+        checkpoint = frame_cls.localCheckpoint
+
+        def recording(df, *args, **kwargs):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return checkpoint(df, *args, **kwargs)
+
+        monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+        # scan nodes print their paths cut to this many characters
+        key = "spark.sql.maxMetadataStringLength"
+        old_len = spark.conf.get(key)
+        spark.conf.set(key, "4096")
+        try:
+            incremental_near_dedup(spark, batch, idx)
+        finally:
+            spark.conf.set(key, old_len)
+        scans = [ln for p in plans for ln in p.splitlines()
+                 if "FileScan" in ln or "Location" in ln]
+        assert any("mh_plan_idx/sigs" in ln for ln in scans), plans
+        assert not any("buckets" in ln for ln in scans), scans
+        for plan in plans:
+            assert "CartesianProduct" not in plan
+            assert "BroadcastNestedLoopJoin" not in plan
