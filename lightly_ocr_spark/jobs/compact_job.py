@@ -10,14 +10,9 @@ the write (never a separate re-read), then swap directories.  A crash
 inside the swap leaves the original intact, and the NEXT run (or any
 index reader) restores it before doing anything else.
 
-Plan choices:
-
-* `coalesce(n)` by default — compaction is file-count reduction, and
-  coalesce does it with ZERO shuffle (each output task concatenates whole
-  input splits).
-* `--shuffle` switches to `repartition(n)` for byte-even output when the
-  input is pathologically skewed (one 10 GB file among thousands of 1 MB
-  ones) — one shuffle, perfectly balanced files.
+Plan: `coalesce(n)` — compaction is file-count reduction, and coalesce
+does it with ZERO shuffle (each output task concatenates whole input
+splits).  `--partition-by` instead repartitions on the partition columns.
 
 Graft note: the reference never compacts (its KV store hides file layout,
 `ingress/server.go`); a table-format pipeline has to.
@@ -53,7 +48,7 @@ def _data_files(path: str) -> list[str]:
 
 def run_compact(
     spark: SparkSession, in_dir: str, out_dir: str,
-    target_bytes: int = DEFAULT_TARGET_BYTES, shuffle: bool = False,
+    target_bytes: int = DEFAULT_TARGET_BYTES,
     partition_by: list[str] | None = None,
 ) -> dict:
     """`partition_by` compacts a HIVE-PARTITIONED dataset (e.g. the crawl
@@ -66,12 +61,6 @@ def run_compact(
     dir collapses to one file.  `in_dir == out_dir` is supported — the
     dataset is fully materialized into the staging dir before the swap
     touches the original."""
-    if shuffle and partition_by:
-        raise ValueError(
-            "--shuffle and --partition-by are mutually exclusive: the "
-            "partitioned path always repartitions on the partition "
-            "columns"
-        )
     require_local(in_dir, out_dir)
     recover_interrupted_swap(in_dir)
     recover_interrupted_swap(out_dir)
@@ -106,7 +95,7 @@ def run_compact(
             )
         sized = df.repartition(*[F.col(c) for c in partition_by])
     else:
-        sized = df.repartition(n_out) if shuffle else df.coalesce(n_out)
+        sized = df.coalesce(n_out)
 
     t0 = time.time()
     writer = sized.write.mode("overwrite")
@@ -133,9 +122,8 @@ def run_compact(
         "bytes_in": in_bytes,
         "bytes_out": sum(os.path.getsize(p) for p in out_files),
         # effective plan only: the partitioned path is governed by the
-        # partition columns, not by target size / shuffle flags
+        # partition columns, not by target size
         "target_bytes": None if partition_by else target_bytes,
-        "shuffle": None if partition_by else shuffle,
         "partition_by": partition_by,
         "wall_s": round(time.time() - t0, 3),
     }
@@ -150,9 +138,6 @@ def main() -> None:
     ap.add_argument("--in", dest="in_dir", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--target-mb", type=int, default=128)
-    ap.add_argument("--shuffle", action="store_true",
-                    help="repartition for byte-even files (one shuffle) "
-                    "instead of zero-shuffle coalesce")
     ap.add_argument("--partition-by", default=None,
                     help="comma-separated hive-partition columns: compact "
                     "each partition dir to one file, layout preserved "
@@ -165,7 +150,7 @@ def main() -> None:
     spark = build_session("compact-job", cores=args.cores)
     print(json.dumps(run_compact(
         spark, args.in_dir, args.out,
-        target_bytes=args.target_mb << 20, shuffle=args.shuffle,
+        target_bytes=args.target_mb << 20,
         partition_by=(args.partition_by.split(",")
                       if args.partition_by else None),
     )))

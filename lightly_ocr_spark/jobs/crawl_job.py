@@ -52,7 +52,7 @@ it once means no future batch ever extracts or gates that content again.
 
 Streaming mode (`run_crawl_stream`, the package's one exactly-once stream)
 wires the same per-batch function behind `sources.warc.warc_pages_stream`
-+ ``foreachBatch``: each trigger's archives become one batch
++ ``foreachBatch``: each trigger's archive becomes one batch
 (``epoch-K``), the streaming checkpoint guarantees each epoch is
 delivered with the same id on restart, and the manifest/marker pair makes
 redelivery a no-op — exactly-once end to end.
@@ -89,7 +89,7 @@ from lightly_ocr_spark.operators.dedup import (
 )
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.operators.textstats import MIN_TOKENS, n_tokens
-from lightly_ocr_spark.sources import read_pages
+from lightly_ocr_spark.sources import FORMAT_GLOBS, read_pages
 from lightly_ocr_spark.sources.commit import atomic_json, require_local
 from lightly_ocr_spark.sources.warc import warc_pages_stream
 
@@ -153,7 +153,12 @@ def process_pages_batch(
     survivors = exact_survivors
     near_sigs = None
     n_near_unique = None
-    if near_index_path is not None:
+    if near_index_path is not None and n_unique == 0:
+        # nothing to drop and nothing to append.  Also exact on a replay:
+        # the near append runs before the exact one, so zero exact
+        # survivors means the near index already holds this batch.
+        n_near_unique = 0
+    elif near_index_path is not None:
         # MinHash near-dedup against the persisted signature index (a
         # trivially-mutated copy of corpus content defeats exact
         # fingerprints every batch without this).  The append is gated on
@@ -274,7 +279,6 @@ def run_crawl_stream(
     out_dir: str,
     index_path: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
     near_index_path: str | None = None,
     near_max_bucket: int | None = None,
 ) -> dict:
@@ -283,7 +287,7 @@ def run_crawl_stream(
     completion of currently-available files (a production deployment
     leaves the query running); restart-safe via the streaming checkpoint
     plus the manifest/marker idempotence."""
-    pages = warc_pages_stream(spark, warc_dir, max_files_per_trigger)
+    pages = warc_pages_stream(spark, warc_dir)
     seen: list[str] = []
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -332,8 +336,7 @@ def main() -> None:
                     help="fingerprint index directory (created on first "
                     "batch, appended thereafter)")
     ap.add_argument("--batch-id", default=None)
-    ap.add_argument("--format", choices=("pages", "warc", "jsonl"),
-                    default="pages")
+    ap.add_argument("--format", choices=tuple(FORMAT_GLOBS), default="pages")
     ap.add_argument("--near-index", default=None,
                     help="optional MinHash signature index directory: also "
                     "near-dedup each batch against everything admitted so "

@@ -51,7 +51,7 @@ from lightly_ocr_spark.operators.dedup import (
 from lightly_ocr_spark.operators.enrich import enrich_pages
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.operators.textstats import MIN_TOKENS, n_tokens
-from lightly_ocr_spark.sources import read_pages
+from lightly_ocr_spark.sources import FORMAT_GLOBS, read_pages
 from lightly_ocr_spark.sources.commit import atomic_json, require_local
 
 
@@ -433,8 +433,7 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--host-cap", type=int, default=None,
                     help="keep at most K docs per host (off by default)")
-    ap.add_argument("--format", choices=("pages", "warc", "jsonl"),
-                    default="pages",
+    ap.add_argument("--format", choices=tuple(FORMAT_GLOBS), default="pages",
                     help="input layout: pages parquet, raw WARC archives, "
                     "or JSONL(.gz) dumps")
     ap.add_argument("--max-rep", type=float, default=None,

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.schemas import PAGES_SCHEMA
-from lightly_ocr_spark.sources import read_pages
+from lightly_ocr_spark.sources import FORMAT_GLOBS, input_files, read_pages
 from lightly_ocr_spark.sources.commit import atomic_json, require_local
 
 MANIFEST_DIR = "_manifests"
@@ -52,24 +52,6 @@ CONCURRENT_SLICES = 4
 # input bytes per slice when the caller does not pin the count: about one
 # Common Crawl WARC file (unmeasured: inputs so far were at most 7.7 MB)
 SLICE_BYTES = 1 << 30
-
-
-_FORMAT_GLOBS = {
-    "pages": "*.parquet",
-    "warc": "*.warc*",
-    "jsonl": "*.jsonl*",
-}
-
-
-def _input_files(pages_path: str, input_format: str = "pages") -> list[str]:
-    pattern = _FORMAT_GLOBS[input_format]
-    if os.path.isdir(pages_path):
-        files = sorted(glob.glob(os.path.join(pages_path, pattern)))
-    else:
-        files = [pages_path]
-    if not files:
-        raise FileNotFoundError(f"no {pattern} files under {pages_path}")
-    return files
 
 
 def _slice_files(files: list[str], n_slices: int | None) -> list[list[str]]:
@@ -84,8 +66,6 @@ def run_extract(
     pages_path: str,
     out_dir: str,
     n_slices: int | None = None,
-    resume: bool = True,
-    salt_partitions: int | None = None,
     salt: bool | None = None,
     input_format: str = "pages",
 ) -> dict:
@@ -96,13 +76,14 @@ def run_extract(
     Spark's scheduler interleaves their stages) so per-job
     barriers — scan tail, shuffle boundary, write commit — overlap instead
     of serializing.  Commit semantics are unchanged: each slice's manifest
-    is written only after its own parquet write succeeds."""
+    is written only after its own parquet write succeeds.  A rerun skips
+    the committed slices; to redo a run, write to a fresh `out_dir`.
+    Salting shuffles into `spark.sql.shuffle.partitions` partitions."""
     require_local(out_dir)
     man_dir = os.path.join(out_dir, MANIFEST_DIR)
     os.makedirs(man_dir, exist_ok=True)
-    slices = _slice_files(_input_files(pages_path, input_format), n_slices)
-    if salt_partitions is None:
-        salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    slices = _slice_files(input_files(pages_path, input_format), n_slices)
+    salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # a manifest commits a SPECIFIC file set under a SPECIFIC cut; if the
     # slice count or input dir changed since, slice k denotes other files,
@@ -120,7 +101,7 @@ def run_extract(
                 + (f"resume with --slices {n}, or " if n else "")
                 + "use a fresh --out"
             )
-        if resume and m["input_files"] != slices[k]:
+        if m["input_files"] != slices[k]:
             raise ValueError(
                 f"slice {k} was committed for a different file set — the "
                 "input changed since; use a fresh --out"
@@ -130,7 +111,7 @@ def run_extract(
     t_job = time.time()
 
     def run_slice(k: int, files: list[str]) -> int | None:
-        if resume and k in committed:
+        if k in committed:
             return None
         t0 = time.time()
         pages = read_pages(spark, files, input_format)
@@ -215,7 +196,7 @@ def verify_extracted(
     """Golden check (J1/J2 + A2): every url present exactly once, text
     byte-identical to the pages.text golden column."""
     golden = spark.read.schema(PAGES_SCHEMA).parquet(
-        *_input_files(pages_path)
+        *input_files(pages_path)
     ).select("url", F.col("text").alias("golden_text"))
     got = read_extracted(spark, out_dir).select("url", "text")
     joined = got.join(golden, "url", "inner")
@@ -244,14 +225,12 @@ def main() -> None:
                     "most one per file); resuming an --out needs the "
                     "count it was written with")
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--salt", choices=("auto", "on", "off"), default="auto",
                     help="url-hash rebalancing shuffle before extraction: "
                     "auto (default) salts only non-splittable WARC input; "
                     "parquet scans are already byte-uniform")
     ap.add_argument("--verify", action="store_true")
-    ap.add_argument("--format", choices=("pages", "warc", "jsonl"),
-                    default="pages",
+    ap.add_argument("--format", choices=tuple(FORMAT_GLOBS), default="pages",
                     help="input layout: pages parquet, raw WARC archives, "
                     "or JSONL(.gz) dumps")
     args = ap.parse_args()
@@ -261,8 +240,7 @@ def main() -> None:
     spark = build_session("extract-job", cores=args.cores)
     salt = {"auto": None, "on": True, "off": False}[args.salt]
     summary = run_extract(
-        spark, args.pages, args.out, n_slices=args.slices,
-        resume=not args.no_resume, salt=salt,
+        spark, args.pages, args.out, n_slices=args.slices, salt=salt,
         input_format=args.format,
     )
     if args.verify:

@@ -25,22 +25,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lightly_ocr_spark.operators.dedup import lower_words
 from lightly_ocr_spark.plans.relational import load, spread
 
 
-def _words(text_col: str) -> F.Column:
-    return F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: F.length(w) > 0
-    )
-
-
 def nb_fit(
-    docs: DataFrame, label_col: str = "label", text_col: str = "text",
-    alpha: float = 1.0, eager: bool = True,
+    docs: DataFrame, label_col: str = "label", eager: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Fit multinomial NB; returns (word_model, label_model) DataFrames.
 
-    word_model:  (label, word, log_lik)  — ln((c_wl + a) / (tot_l + a*V))
+    word_model:  (label, word, log_lik)  — ln((c_wl + 1) / (tot_l + V))
     label_model: (label, log_prior, log_unseen) — doc-count prior and the
                  per-label likelihood mass for words never seen with it.
 
@@ -54,7 +48,7 @@ def nb_fit(
 
     toks = docs.select(
         F.col(label_col).alias("label"),
-        F.explode(_words(text_col)).alias("word"),
+        F.explode(lower_words()).alias("word"),
     )
     # |L|x|V| rows — model-scale, NOT corpus-scale; persisted so every
     # derived quantity below (and the scoring join later) reads the
@@ -72,8 +66,8 @@ def nb_fit(
         word_counts.join(F.broadcast(totals), "label")
         .select(
             "label", "word",
-            F.log((F.col("c") + F.lit(alpha))
-                  / (F.col("tot") + F.lit(alpha * vocab))).alias("log_lik"),
+            F.log((F.col("c") + F.lit(1.0))
+                  / (F.col("tot") + F.lit(float(vocab)))).alias("log_lik"),
         )
     )
     doc_counts = docs.groupBy(F.col(label_col).alias("label")).agg(
@@ -87,8 +81,8 @@ def nb_fit(
         .select(
             "label",
             F.log(F.col("n_docs") / F.lit(float(n_total))).alias("log_prior"),
-            F.log(F.lit(alpha)
-                  / (F.col("tot") + F.lit(alpha * vocab))).alias("log_unseen"),
+            F.log(F.lit(1.0)
+                  / (F.col("tot") + F.lit(float(vocab)))).alias("log_unseen"),
         )
     )
     # fit is eager by default: materialize both model-scale outputs
@@ -110,7 +104,7 @@ def nb_fit(
 
 def nb_predict(
     docs: DataFrame, word_model: DataFrame, label_model: DataFrame,
-    id_col: str = "doc_id", text_col: str = "text",
+    id_col: str = "doc_id",
 ) -> DataFrame:
     """Score docs against a fitted model -> (id, pred_label, score).
 
@@ -132,12 +126,12 @@ def nb_predict(
     (score DESC, label ASC) winner the row_number window picked, minus
     the window's per-doc sort."""
     toks = (
-        docs.select(id_col, F.explode(_words(text_col)).alias("word"))
+        docs.select(id_col, F.explode(lower_words()).alias("word"))
         .groupBy(id_col, "word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     doc_totals = docs.select(
-        id_col, F.size(_words(text_col)).cast("long").alias("n_words")
+        id_col, F.size(lower_words()).cast("long").alias("n_words")
     ).filter(F.col("n_words") > 0)
     # the zero-word filter preserves the exploded form's semantics
     # exactly: a doc with no tokens produced no (doc, word) rows, hence

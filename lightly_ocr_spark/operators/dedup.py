@@ -37,10 +37,10 @@ NEAR_DUP_MIN_AGREEMENT = 0.5  # share of the k min-hashes a near-dup shares
 NEAR_DUP_NGRAM = 3      # word shingles: shared vocabulary != near-dup
 
 
-def lower_words(text_col="text") -> F.Column:
+def lower_words() -> F.Column:
     """text -> array of non-empty lowercase whitespace tokens."""
     return F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: F.length(w) > 0
+        F.split(F.lower(F.col("text")), r"\s+"), lambda w: F.length(w) > 0
     )
 
 
@@ -60,7 +60,7 @@ def word_ngrams(words: F.Column, n: int) -> F.Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _tokens(df: DataFrame, id_col: str = "doc_id", ngram: int = 1) -> DataFrame:
+def _tokens(df: DataFrame, ngram: int = 1) -> DataFrame:
     """doc -> distinct lowercase shingles (exploded), all JVM-side.
 
     ngram=1: word tokens; ngram>=2: word n-gram shingles (order-sensitive —
@@ -78,11 +78,11 @@ def _tokens(df: DataFrame, id_col: str = "doc_id", ngram: int = 1) -> DataFrame:
     if ngram <= 1:
         return (
             df.select(
-                id_col, F.explode(F.array_distinct(words)).alias("tok")
+                "doc_id", F.explode(F.array_distinct(words)).alias("tok")
             )
             .filter(F.length("tok") > 0)
         )
-    w = df.select(id_col, words.alias("_words"))
+    w = df.select("doc_id", words.alias("_words"))
     wc = F.col("_words")
     shingles = F.when(
         F.size(wc) >= ngram,
@@ -92,19 +92,19 @@ def _tokens(df: DataFrame, id_col: str = "doc_id", ngram: int = 1) -> DataFrame:
         ),
     ).otherwise(F.array(F.concat_ws(" ", wc)))
     return (
-        w.select(id_col, F.explode(F.array_distinct(shingles)).alias("tok"))
+        w.select("doc_id", F.explode(F.array_distinct(shingles)).alias("tok"))
         .filter(F.length("tok") > 0)
     )
 
 
-def _md5_grams(df: DataFrame, ngram: int, id_col: str = "doc_id") -> DataFrame:
+def _md5_grams(df: DataFrame, ngram: int) -> DataFrame:
     """doc -> distinct md5'd lowercase word n-grams (exploded) — the shared
     gram projection for decontamination and dup-components.  Words are
     materialized as their own projection first (see `_tokens`: an inlined
     split is re-evaluated per lambda element, O(words^2) per doc)."""
-    w = df.select(id_col, lower_words().alias("_words"))
+    w = df.select("doc_id", lower_words().alias("_words"))
     return w.select(
-        id_col,
+        "doc_id",
         F.explode(F.array_distinct(
             F.transform(word_ngrams(F.col("_words"), ngram), F.md5)
         )).alias("gram"),
@@ -535,13 +535,14 @@ def decontaminate(
 
 def connected_components(
     edges: DataFrame,
-    nodes: DataFrame | None = None,
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Distributed connected components over near-dup candidate pairs:
     (id_a, id_b) edges -> (id, component) where component = the smallest id
-    reachable from `id` (the cluster keeper).
+    reachable from `id` (the cluster keeper).  The output covers exactly
+    the edge endpoints; a caller that wants isolated nodes in it passes
+    their (id, id) self-edges.
 
     Near-dup pairs are transitive in practice (A~B, B~C) and per-pair
     "drop the larger" mishandles chains; clustering makes one keeper per
@@ -586,22 +587,7 @@ def connected_components(
     # pipeline in curate_job) would otherwise recompute per round —
     # measured 400s vs 45s for the curation job on 5k pages
     sym = _materialize(sym)
-    if nodes is None:
-        nodes = sym.select(F.col("src").alias("id")).distinct()
-    else:
-        # a missing endpoint would silently sever connectivity through it
-        # (its neighbors never learn each other's labels) — fail loudly
-        uncovered = (
-            sym.select(F.col("src").alias("id"))
-            .join(nodes.select("id"), "id", "left_anti")
-            .count()
-        )
-        if uncovered:
-            raise ValueError(
-                f"{uncovered} edge endpoint(s) missing from `nodes`: "
-                "components through them would be silently split — pass a "
-                "covering node set or omit `nodes`"
-            )
+    nodes = sym.select(F.col("src").alias("id")).distinct()
     labels = nodes.select("id", F.col("id").alias("component"))
     labels = _materialize(labels)
     for _ in range(max_iter):
@@ -671,7 +657,7 @@ def dup_components(
     connect docs sharing any `ngram`-gram (md5 fingerprints — portable, so
     the WHOLE iterative algorithm is DuckDB-oracled via a recursive CTE).
     Output: (doc_id, component) with component = min doc_id of the
-    cluster; singletons map to themselves."""
+    cluster; singletons map to themselves through their self-edge."""
     d = load(spark, sf, "documents").select("doc_id", "text").filter(
         F.col("doc_id") < max_id
     )
@@ -690,17 +676,13 @@ def dup_components(
         .select(F.col("a.doc_id").alias("id_a"),
                 F.col("b.doc_id").alias("id_b"))
         .distinct()
-    )
-    comp = connected_components(
-        edges, nodes=nodes_df.select(F.col("doc_id").alias("id"))
-    )
+    ).unionByName(nodes_df.select(F.col("doc_id").alias("id_a"),
+                                  F.col("doc_id").alias("id_b")))
+    comp = connected_components(edges)
     return comp.select(F.col("id").alias("doc_id"), "component")
 
 
-def line_dedup_docs(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    min_docs: int = 5,
-) -> DataFrame:
+def line_dedup_docs(docs: DataFrame, min_docs: int = 5) -> DataFrame:
     """Corpus-level boilerplate LINE removal (the RefinedWeb/CCNet move the
     reference's per-image pipeline has no analog for): any exact line that
     appears in >= `min_docs` DISTINCT documents is navigation/cookie/footer
@@ -717,18 +699,18 @@ def line_dedup_docs(
     the chrome vocabulary is small, which it always is relative to the
     corpus) -> groupBy doc, array_sort by position, join with newline."""
     lines = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).withColumn("lh", F.md5("line"))
     hot = (
         lines.groupBy("lh")
-        .agg(F.count_distinct(F.col(id_col)).alias("nd"))
+        .agg(F.count_distinct(F.col("doc_id")).alias("nd"))
         .filter(F.col("nd") >= min_docs)
         .select("lh")
     )
     kept = lines.join(hot, "lh", "left_anti")
     return (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.array_join(
                 F.transform(
@@ -736,7 +718,7 @@ def line_dedup_docs(
                     lambda s: s["line"],
                 ),
                 "\n",
-            ).alias(text_col)
+            ).alias("text")
         )
     )
 
@@ -858,7 +840,10 @@ def write_minhash_index(sigs: DataFrame, path: str) -> None:
     already present keeps its ORIGINAL signature — a re-crawled url
     whose content changed is not re-indexed, matching the exact index's
     one-fingerprint-per-admission semantics.  An interrupted compaction
-    swap of sigs/ is recovered (by `read_index`) before the append."""
+    swap of sigs/ is recovered (by `read_index`) before the append.
+
+    An append with no new rows writes no file: an empty one would still
+    be listed and opened by every later probe."""
     new_sigs = sigs
     existing = read_index(sigs.sparkSession, f"{path}/sigs")
     if existing is not None:
@@ -868,7 +853,8 @@ def write_minhash_index(sigs: DataFrame, path: str) -> None:
         new_sigs = sigs.join(
             existing.select("doc_id"), "doc_id", "left_anti"
         ).localCheckpoint(eager=True)
-    new_sigs.write.mode("append").parquet(f"{path}/sigs")
+    if not new_sigs.isEmpty():
+        new_sigs.write.mode("append").parquet(f"{path}/sigs")
 
 
 def incremental_near_dedup(
@@ -999,8 +985,7 @@ def incremental_near_dedup(
 
 
 def passage_dedup_docs(
-    d: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    n: int = 8, min_docs: int = 2,
+    d: DataFrame, id_col: str = "doc_id", n: int = 8, min_docs: int = 2,
 ) -> DataFrame:
     """Duplicate-PASSAGE removal (the positional generalization of
     line-level dedup, after Lee et al., "Deduplicating Training Data
@@ -1045,7 +1030,7 @@ def passage_dedup_docs(
         expanded JVM-side (flatten of n-long sequences + array_distinct,
         identical set to the old exploded collect_set)."""
     words = F.filter(
-        F.split(F.col(text_col), r"\s+"), lambda w: F.length(w) > 0
+        F.split(F.col("text"), r"\s+"), lambda w: F.length(w) > 0
     )
     w = d.select("*", words.alias("_w"))
     # the short-doc gate lives INSIDE the gram expression (empty array ->
@@ -1096,7 +1081,7 @@ def passage_dedup_docs(
         # rebuilding them through split+concat_ws would silently
         # collapse newlines/tabs/multi-spaces corpus-wide
         F.when(F.col("_cps").isNotNull(), F.concat_ws(" ", keep))
-        .otherwise(F.col(text_col)).alias("cleaned"),
+        .otherwise(F.col("text")).alias("cleaned"),
         F.coalesce(F.size("_cps"), F.lit(0)).cast("long")
         .alias("n_removed_tokens"),
     )

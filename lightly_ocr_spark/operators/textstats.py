@@ -26,13 +26,13 @@ LANG_MARKERS = [
 MIN_TOKENS = 10
 
 
-def n_tokens(text_col: str = "text") -> Column:
-    """Non-empty whitespace tokens in `text_col` — the one token count
+def n_tokens() -> Column:
+    """Non-empty whitespace tokens in `text` — the one token count
     behind the curate and crawl gates.  Empty pieces are dropped rather
     than trimmed away: `F.trim` strips only spaces, so a leading or
     trailing tab/newline would otherwise count as a phantom token."""
     return F.size(F.filter(
-        F.split(F.col(text_col), r"\s+"), lambda w: F.length(w) > 0
+        F.split(F.col("text"), r"\s+"), lambda w: F.length(w) > 0
     ))
 
 
@@ -122,17 +122,16 @@ def lang_id(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def budget_select_df(
-    d: DataFrame, budget_tokens: int, group_col: str = "source",
-    id_col: str = "doc_id", text_col: str = "text", shards: int = 8,
+    d: DataFrame, budget_tokens: int, shards: int = 8,
 ) -> DataFrame:
-    """Per-group TOKEN-BUDGET selection — the data-budget step of an LLM
-    corpus mix: admit documents per `group_col` (source/domain/language)
-    in a deterministic content-keyed order until the group's cumulative
-    whitespace-token count would exceed `budget_tokens`; the first doc
-    that crosses the budget (and everything after it) is cut.
+    """Per-source TOKEN-BUDGET selection — the data-budget step of an LLM
+    corpus mix: admit documents per group (`source`) in a deterministic
+    content-keyed order until the group's cumulative whitespace-token
+    count would exceed `budget_tokens`; the first doc that crosses the
+    budget (and everything after it) is cut.
 
-    Order is md5(group:id) — a seeded shuffle within each group, so the
-    admitted subset is an unbiased sample of the group, stable under
+    Order is md5(source:doc_id) — a seeded shuffle within each group, so
+    the admitted subset is an unbiased sample of the group, stable under
     replay / cluster size / partitioning (the same property the
     hash-mod stratified sampler relies on), and portable, so the whole
     selection is DuckDB-oracle-checkable.
@@ -160,49 +159,50 @@ def budget_select_df(
     Identity with the single-window plan is asserted in tests at shard
     counts {1, 3, 8, 64}; the DuckDB oracle stays the plain window SQL.
 
-    Output: (id, group, n_tokens, cum_tokens) for admitted docs only."""
+    Output: (doc_id, source, n_tokens, cum_tokens) for admitted docs
+    only."""
     if shards < 1:
         raise ValueError(f"shards must be >= 1, got {shards}")
-    txt = F.trim(F.col(text_col))
+    txt = F.trim(F.col("text"))
     n_tokens = (
         F.when(F.length(txt) == 0, F.lit(0))
         .otherwise(F.size(F.split(txt, r"\s+")))
         .cast("long")
     )
     order_key = F.md5(F.concat_ws(
-        ":", F.col(group_col), F.col(id_col).cast("string")
+        ":", F.col("source"), F.col("doc_id").cast("string")
     ))
     base = d.select(
-        F.col(id_col), F.col(group_col), n_tokens.alias("n_tokens"),
+        F.col("doc_id"), F.col("source"), n_tokens.alias("n_tokens"),
         order_key.alias("_ok"),
     )
-    shard = F.crc32(F.col(id_col).cast("string")) % shards
+    shard = F.crc32(F.col("doc_id").cast("string")) % shards
     w1 = (
-        Window.partitionBy(group_col, shard)
-        .orderBy(F.col("_ok"), F.col(id_col))
+        Window.partitionBy("source", shard)
+        .orderBy(F.col("_ok"), F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     p1 = base.withColumn("_scum", F.sum("n_tokens").over(w1))
-    okey = F.struct(F.col("_ok"), F.col(id_col))
+    okey = F.struct(F.col("_ok"), F.col("doc_id"))
     cuts = (
         p1.filter(F.col("_scum") > budget_tokens)
-        .groupBy(group_col)
+        .groupBy("source")
         .agg(F.min(okey).alias("_first_cut"))
     )
     survivors = p1.filter(F.col("_scum") <= budget_tokens).drop("_scum")
     w2 = (
-        Window.partitionBy(group_col)
-        .orderBy(F.col("_ok"), F.col(id_col))
+        Window.partitionBy("source")
+        .orderBy(F.col("_ok"), F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        survivors.join(cuts, group_col, "left")
+        survivors.join(cuts, "source", "left")
         .withColumn("cum_tokens", F.sum("n_tokens").over(w2))
         .filter(
             (F.col("cum_tokens") <= budget_tokens)
             & (F.col("_first_cut").isNull() | (okey < F.col("_first_cut")))
         )
-        .select(id_col, group_col, "n_tokens", "cum_tokens")
+        .select("doc_id", "source", "n_tokens", "cum_tokens")
     )
 
 
@@ -357,11 +357,11 @@ def repetition_signals(spark: SparkSession, sf: str) -> DataFrame:
     50s vs 2s on 500 synthetic docs, and it only worsens with document
     length).  One shuffle, keyed by doc_id — uniform."""
     d = spread(load(spark, sf, "documents"))
-    return repetition_signals_df(d, id_col="doc_id")
+    return repetition_signals_df(d)
 
 
-def repetition_signals_df(d: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Core of `repetition_signals` over an arbitrary (id, text) frame.
+def repetition_signals_df(d: DataFrame) -> DataFrame:
+    """Core of `repetition_signals` over any (doc_id, text) frame.
     (Curate's --max-rep gate reads `enrich_pages`' `top_bigram_frac`
     instead, computed in its one Arrow pass.)  Shingles come
     from the shared `word_ngrams` helper (one slice-bounds implementation
@@ -412,13 +412,13 @@ def repetition_signals_df(d: DataFrame, id_col: str = "doc_id") -> DataFrame:
         lambda acc: acc["best"],
     )
     return d.select(
-        id_col,
+        "doc_id",
         n_words.cast("long").alias("n_words"),
         F.size(F.array_distinct(words)).cast("long")
         .alias("n_distinct_words"),
         word_ngrams(words, 2).alias("bigrams"),
     ).select(
-        id_col,
+        "doc_id",
         "n_words",
         "n_distinct_words",
         F.round(
@@ -432,8 +432,7 @@ def repetition_signals_df(d: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def chunk_docs(
-    d: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    window: int = 64, stride: int = 48,
+    d: DataFrame, id_col: str = "doc_id", window: int = 64, stride: int = 48,
 ) -> DataFrame:
     """Token-window chunking — the standard LLM-training prep step the
     reference's per-image pipeline has no analog for: split each document
@@ -453,7 +452,7 @@ def chunk_docs(
     # materialize the token array first — an inlined split is re-evaluated
     # by every interpreted lambda element (the `_tokens` lesson)
     d = d.select(F.col(id_col), F.filter(
-        F.split(F.col(text_col), r"\s+"), lambda x: F.length(x) > 0
+        F.split(F.col("text"), r"\s+"), lambda x: F.length(x) > 0
     ).alias("_words"))
     w = F.col("_words")
     n = F.size(w)
@@ -494,7 +493,7 @@ PII_IPV4_RE = r"\b(?:\d{1,3}\.){3}\d{1,3}\b"
 PII_PHONE_RE = r"\+\d{9,15}"
 
 
-def pii_scrub_df(d: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub_df(d: DataFrame) -> DataFrame:
     """Redact emails / IPv4s / international phone numbers and count each
     (the standard pre-training privacy pass).  Pure JVM regexp chains —
     codegen'd, no Python; counts via regexp_extract_all so the DuckDB
@@ -506,7 +505,7 @@ def pii_scrub_df(d: DataFrame, text_col: str = "text") -> DataFrame:
     the token, and counting on the original would report a phone
     'redacted' whose placeholder appears nowhere.  Invariant: n_X equals
     the number of <X> placeholders in `scrubbed`."""
-    t0 = F.col(text_col)
+    t0 = F.col("text")
     n_emails = F.size(
         F.regexp_extract_all(t0, F.lit(PII_EMAIL_RE), 0)
     ).cast("long")
@@ -520,7 +519,7 @@ def pii_scrub_df(d: DataFrame, text_col: str = "text") -> DataFrame:
     ).cast("long")
     scrubbed = F.regexp_replace(t2, PII_PHONE_RE, "<PHONE>")
     return d.select(
-        *[c for c in d.columns if c != text_col],
+        *[c for c in d.columns if c != "text"],
         n_emails.alias("n_emails"),
         n_ipv4.alias("n_ipv4"),
         n_phones.alias("n_phones"),

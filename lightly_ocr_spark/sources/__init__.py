@@ -2,6 +2,28 @@
 
 from __future__ import annotations
 
+import glob
+import os
+
+# the input formats every job reads, and the files each one consists of
+FORMAT_GLOBS = {
+    "pages": "*.parquet",
+    "warc": "*.warc*",
+    "jsonl": "*.jsonl*",
+}
+
+
+def input_files(pages_path: str, input_format: str = "pages") -> list[str]:
+    """A directory's `input_format` files, sorted, or the one file named."""
+    pattern = FORMAT_GLOBS[input_format]
+    if os.path.isdir(pages_path):
+        files = sorted(glob.glob(os.path.join(pages_path, pattern)))
+    else:
+        files = [pages_path]
+    if not files:
+        raise FileNotFoundError(f"no {pattern} files under {pages_path}")
+    return files
+
 
 def read_pages(spark, path_or_files: str | list[str], input_format: str):
     """The one input-format -> reader mapping: a directory (or explicit

@@ -7,24 +7,18 @@ source handles gzip transparently and splits uncompressed files by line,
 so ingest parallelism is free; an EXPLICIT schema is mandatory at scale —
 schema inference reads the whole dataset once before the real job starts.
 
-Field mapping is config, not convention: callers name which JSON fields
-hold url/timestamp/html/text, and missing fields become typed nulls so the
-result always matches PAGES_SCHEMA.
+The JSON fields are `url`, `timestamp`, `html`, `text` and `lang`; a
+missing field reads as a typed null, so the result always matches
+PAGES_SCHEMA.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
-def read_jsonl_pages(
-    spark: SparkSession, path: str,
-    url_field: str = "url", ts_field: str = "timestamp",
-    html_field: str = "html", text_field: str = "text",
-    lang_field: str = "lang",
-) -> DataFrame:
+def read_jsonl_pages(spark: SparkSession, path: str) -> DataFrame:
     """JSONL directory/file(s) -> canonical pages(url, warc_ts, html, text,
     lang).  `html` may arrive as a plain string (JSON has no bytes) — it is
     utf-8 encoded into the binary column.  A field absent from a JSON
@@ -37,21 +31,16 @@ def read_jsonl_pages(
     plain text as one dense block and whitespace-canonicalizes it, so
     text-only rows survive `keep_empty=False` instead of every row
     extracting to '' from an empty html column."""
-    fields = {url_field: T.StringType(), ts_field: T.StringType(),
-              html_field: T.StringType(), text_field: T.StringType(),
-              lang_field: T.StringType()}
-    schema = T.StructType(
-        [T.StructField(n, t, True) for n, t in fields.items()]
-    )
-    raw = spark.read.schema(schema).json(path)
+    raw = spark.read.schema(
+        "url string, timestamp string, html string, text string, lang string"
+    ).json(path)
     return raw.select(
-        F.col(url_field).cast("string").alias("url"),
-        F.col(ts_field).try_cast("timestamp").alias("warc_ts"),
+        "url",
+        F.col("timestamp").try_cast("timestamp").alias("warc_ts"),
         F.encode(
-            F.coalesce(F.col(html_field), F.col(text_field), F.lit("")),
-            "utf-8",
+            F.coalesce(F.col("html"), F.col("text"), F.lit("")), "utf-8"
         ).alias("html"),
-        F.col(text_field).cast("string").alias("text"),
-        F.col(lang_field).cast("string").alias("lang"),
+        "text",
+        "lang",
     ).filter(F.col("url").isNotNull())
 

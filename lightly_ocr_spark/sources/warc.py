@@ -218,9 +218,9 @@ def warc_pages(spark, warc_path: str | list[str]):
     return explode_archives(spark.read.format("binaryFile").load(warc_path))
 
 
-def warc_pages_stream(spark, warc_dir: str, max_files_per_trigger: int = 1):
+def warc_pages_stream(spark, warc_dir: str):
     """Streaming twin of `warc_pages`: a binaryFile stream over the archive
-    directory, each newly-dropped archive exploded to pages rows per
+    directory, one newly-dropped archive exploded to pages rows per
     trigger.  Feeds `jobs.crawl_job.run_crawl_stream`."""
     # streaming sources require an explicit schema; binaryFile's is fixed
     files = (
@@ -228,7 +228,7 @@ def warc_pages_stream(spark, warc_dir: str, max_files_per_trigger: int = 1):
         .schema("path string, modificationTime timestamp, "
                 "length long, content binary")
         .option("pathGlobFilter", "*.warc*")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", "1")
         .load(warc_dir)
     )
     return explode_archives(files)

@@ -259,8 +259,7 @@ class TestCrawlStream:
         out = str(tmp_path / "stream_corpus")
         idx = str(tmp_path / "stream_idx")
         ckpt = str(tmp_path / "ckpt")
-        s1 = run_crawl_stream(spark, str(wdir), out, idx, ckpt,
-                              max_files_per_trigger=1)
+        s1 = run_crawl_stream(spark, str(wdir), out, idx, ckpt)
         assert s1["batches"] == 1 and s1["rows_written"] == 5
 
         # second drop: 2 dupes of drop 1 (new urls), 2 novel
@@ -276,8 +275,7 @@ class TestCrawlStream:
         ]
         (wdir / "crawl-2.warc.gz").write_bytes(
             make_warc(recs2, gzip_members=True))
-        s2 = run_crawl_stream(spark, str(wdir), out, idx, ckpt,
-                              max_files_per_trigger=1)
+        s2 = run_crawl_stream(spark, str(wdir), out, idx, ckpt)
         # per-INVOCATION summary: only the one new epoch this run
         # processed, not drop 1's committed epoch
         assert s2["batches"] == 1
@@ -362,6 +360,16 @@ class TestCrawlNearIndex:
         assert m2b["skipped"] is True
         assert spark.read.parquet(f"{nidx}/sigs").count() == n_sigs == 3
         assert spark.read.parquet(idx).count() == n_fps == 5
+
+        # the same drop under a NEW batch id: every doc is exact-known,
+        # so the near stage and its append do not run at all
+        m2c = run_crawl_batch(spark, b2, out, idx, batch_id="b2-again",
+                              near_index_path=nidx)
+        assert (m2c["n_unique"], m2c["n_near_unique"],
+                m2c["rows_written"]) == (0, 0, 0)
+        assert "near_dedup" not in m2c["legs"]
+        assert "near_index_append" not in m2c["legs"]
+        assert spark.read.parquet(f"{nidx}/sigs").count() == 3
 
     def test_crash_between_near_and_exact_append_replays_complete(
         self, spark, tmp_path, monkeypatch

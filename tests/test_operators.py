@@ -59,26 +59,23 @@ class TestMinHash:
 class TestConnectedComponents:
     def test_chains_rings_and_singletons(self, spark):
         """Min-label propagation must traverse multi-hop structure: a
-        6-node chain, a 4-node ring, one pair, and isolated nodes all
-        resolve to their component minimum."""
+        6-node chain, a 4-node ring, one pair, and isolated nodes (given
+        as self-edges) all resolve to their component minimum."""
         from lightly_ocr_spark.operators.dedup import connected_components
-        from pyspark.sql import functions as F
 
         edges = spark.createDataFrame(
             # chain 10-11-12-13-14-15, ring 20-21-22-23-20, pair 30-31
             [(10, 11), (11, 12), (12, 13), (13, 14), (14, 15),
              (20, 21), (21, 22), (22, 23), (23, 20),
-             (30, 31)],
+             (30, 31)]
+            # every node's self-edge, isolated 40 and 41 included
+            + [(i, i) for i in [10, 11, 12, 13, 14, 15, 20, 21, 22, 23,
+                                30, 31, 40, 41]],
             "id_a long, id_b long",
-        )
-        nodes = spark.createDataFrame(
-            [(i,) for i in [10, 11, 12, 13, 14, 15, 20, 21, 22, 23,
-                            30, 31, 40, 41]],
-            "id long",
         )
         got = {
             r["id"]: r["component"]
-            for r in connected_components(edges, nodes=nodes).collect()
+            for r in connected_components(edges).collect()
         }
         assert got == {
             10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 15: 10,
@@ -86,17 +83,6 @@ class TestConnectedComponents:
             30: 30, 31: 30,
             40: 40, 41: 41,   # isolated nodes: own component
         }
-
-    def test_uncovered_endpoint_raises(self, spark):
-        """A caller-supplied node set missing an edge endpoint must fail
-        loudly — the missing node would silently sever its component."""
-        from lightly_ocr_spark.operators.dedup import connected_components
-
-        edges = spark.createDataFrame([(1, 2), (2, 3)],
-                                      "id_a long, id_b long")
-        nodes = spark.createDataFrame([(1,), (3,)], "id long")
-        with pytest.raises(ValueError, match="endpoint"):
-            connected_components(edges, nodes=nodes)
 
     def test_non_convergence_raises_not_silently_wrong(self, spark):
         """Exhausting max_iter with labels still changing must raise — a
@@ -141,13 +127,12 @@ class TestConnectedComponents:
                 comp_min[r] = min(comp_min.get(r, v), v)
             want = {v: comp_min[find(v)] for v in range(n)}
 
-            e = spark.createDataFrame(edges, "id_a long, id_b long")
-            nodes = spark.createDataFrame([(v,) for v in range(n)],
-                                          "id long")
+            e = spark.createDataFrame(
+                edges + [(v, v) for v in range(n)], "id_a long, id_b long"
+            )
             got = {
                 r["id"]: r["component"]
-                for r in connected_components(e, nodes=nodes,
-                                              max_iter=80).collect()
+                for r in connected_components(e, max_iter=80).collect()
             }
             assert got == want, (trial, edges)
 
@@ -1301,9 +1286,12 @@ class TestMinhashIndexAppendIdempotence:
         n_sigs = spark.read.parquet(f"{idx}/sigs").count()
         assert n_sigs == 5
 
-        # crash-replay: identical append is a complete no-op
+        # crash-replay: identical append is a complete no-op, and writes
+        # no empty file for later probes to list and open
+        files = sorted(os.listdir(f"{idx}/sigs"))
         write_minhash_index(sigs1, idx)
         assert spark.read.parquet(f"{idx}/sigs").count() == n_sigs
+        assert sorted(os.listdir(f"{idx}/sigs")) == files
 
         # re-crawled url with CHANGED content: not re-indexed
         d2 = spark.createDataFrame(

@@ -57,7 +57,7 @@ class TestWarcStream:
             )
 
         streamed = extract_pages(
-            warc_pages_stream(spark, str(d), max_files_per_trigger=1)
+            warc_pages_stream(spark, str(d))
         ).select("url", "text", "extract_sha256")
         name = "warc_stream_" + uuid.uuid4().hex[:8]
         q = (

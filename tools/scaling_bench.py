@@ -66,8 +66,7 @@ t0 = time.time()
 # salt=True pinned: the job default is now salt-auto (narrow for parquet),
 # but this protocol deliberately measures the salted form — it has the
 # shuffle a host-keyed downstream would add, comparable with prior rounds
-summary = run_extract(spark, pages_dir, out, n_slices=4, resume=False,
-                      salt_partitions=2 * cores, salt=True)
+summary = run_extract(spark, pages_dir, out, n_slices=4, salt=True)
 wall = time.time() - t0
 st1 = steal_ticks()
 # fraction of this leg's core-seconds stolen by the hypervisor during
