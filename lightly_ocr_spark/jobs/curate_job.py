@@ -106,13 +106,15 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
                pack_budget: int | None = None) -> dict:
     """Stage counts come from `observe()` accumulators riding the actions
     the job runs anyway — never from extra `.count()` materializations or
-    re-reads of the output (round-1 judge finding: cache+count of the full
-    corpus spills/evicts at 100 TB).  Persisted frames: `uniq` (DISK_ONLY
-    — it feeds two branches: near-dup candidates and the anti-join; its
-    one materialization doubles as the harvest point for the
-    input/extracted counters), the near-dup signatures for the length of
-    that leg, and `gated` only when the NB gate reads it a second
-    time."""
+    re-reads of the output (cache+count of the full corpus spills and
+    evicts at 100 TB).  `near_verified_pairs` and `near_dup_dropped`
+    ride the near-dup clustering's own materialisations.  Persisted
+    frames: `uniq` (DISK_ONLY — it feeds two branches: near-dup
+    candidates and the anti-join; its one materialization doubles as the
+    harvest point for the input/extracted counters), and `gated` only
+    when the NB gate reads it a second time.  The near-dup signatures are
+    not persisted: their one consumer is the bucket self-join, and the
+    leg's result reads the clustering's checkpoint."""
     from pyspark.sql import Observation
 
     if chunk is not None and not 0 < chunk[1] <= chunk[0]:
@@ -167,23 +169,21 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     tl = time.time()
     legs["extract_exact_dedup"] = round(tl - t0, 3)
 
+    # the signatures have one consumer: the bucket self-join, whose two
+    # sides share one exchange, so they need no persist.
+    # checkpoint_dir: durable component checkpoints on a cluster
     sig = minhash_signatures(
         uniq.select(F.col("url").alias("doc_id"), "text"),
         k=MINHASH_K,
         ngram=NEAR_DUP_NGRAM,
-    ).persist(StorageLevel.DISK_ONLY)
-    # persist is load-bearing: the signature pipeline (measured 125s at
-    # 200k docs) feeds banding and both verification sides; unpersisted,
-    # each re-runs it (near-dedup leg 550s -> ~150s at 200k).
-    # checkpoint_dir: durable component checkpoints on a cluster
+    )
+    near: dict[str, int] = {}
     drops = near_dup_losers(
         sig, MINHASH_K, MINHASH_BANDS,
         need=int(NEAR_DUP_MIN_AGREEMENT * MINHASH_K),
         checkpoint_dir=checkpoint_dir, max_bucket=near_max_bucket,
+        counts=near,
     ).select(F.col("doc_id").alias("url"))
-    # the drops read the components' checkpoint, so the signature cache
-    # has served all its consumers — release the disk
-    sig.unpersist()
     legs["near_dup_components"] = round(time.time() - tl, 3)
     tl = time.time()
     deduped = uniq.join(drops, "url", "left_anti")
@@ -389,6 +389,8 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         "input_pages": int(obs_in.get["n"]),
         "extracted_nonempty": n_extracted,
         "after_exact_dedup": n_unique,
+        "near_verified_pairs": near["verified_pairs"],
+        "near_dup_dropped": near["dropped"],
         "after_near_dedup_and_quality": int(obs_cur.get["n"]),
         "host_cap": host_cap,
         "max_rep": max_rep,

@@ -230,34 +230,30 @@ def band_buckets(
     sig: DataFrame, k: int = MINHASH_K, bands: int = MINHASH_BANDS
 ) -> DataFrame:
     """Signature frame (doc_id, mh0..mh{k-1}) -> stacked LSH bucket rows
-    (doc_id, band, bh): rows-per-band split, per-band xxhash64, one
-    explode.  The single shared banding projection — candidate-pair
-    generation, the curation pipeline, and both sides of the near-dup
-    index probe derive buckets from here so the layout cannot drift."""
+    (doc_id, mh0..mh{k-1}, band, bh): rows-per-band split, per-band
+    xxhash64, one generator.  The single shared banding projection —
+    candidate-pair generation, the curation pipeline, and both sides of
+    the near-dup index probe derive buckets from here so the layout
+    cannot drift.  Each row carries its doc's signature, so a pair the
+    bucket self-join emits can be verified inside that join; a caller
+    that selects only (doc_id, band, bh) lets Spark prune it."""
     if k % bands:
         raise ValueError(
             f"k={k} not divisible by bands={bands}: the trailing "
             f"{k % bands} signature columns would silently never hash "
             "into any bucket, weakening recall"
         )
-    rows_per_band = k // bands
-    band_cols = [
-        F.xxhash64(
-            F.lit(b),
-            *[F.col(f"mh{b * rows_per_band + j}") for j in range(rows_per_band)],
-        ).alias(f"band{b}")
+    rows = k // bands
+    mh = [f"mh{i}" for i in range(k)]
+    buckets = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(F.lit(b), *map(F.col, mh[b * rows:(b + 1) * rows]))
+            .alias("bh"),
+        )
         for b in range(bands)
     ]
-    banded = sig.select("doc_id", *band_cols)
-    return banded.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("bh"))
-                for b in range(bands)
-            ])
-        ).alias("e"),
-    ).select("doc_id", "e.band", "e.bh")
+    return sig.select("doc_id", *mh, F.inline(F.array(*buckets)))
 
 
 def cap_buckets(stacked: DataFrame, max_bucket: int | None) -> DataFrame:
@@ -271,8 +267,9 @@ def cap_buckets(stacked: DataFrame, max_bucket: int | None) -> DataFrame:
     is what exact, line, and passage dedup already catch.  `None`
     disables the cap (exact legacy behavior).
 
-    Bucket size counts DISTINCT ids, not rows, so an id whose rows
-    repeat in `stacked` never counts twice toward the cap."""
+    Bucket size counts DISTINCT `doc_id`s, not rows, so an id whose rows
+    repeat in `stacked` never counts twice toward the cap; every other
+    column rides along untouched."""
     if max_bucket is None:
         return stacked
     if max_bucket < 1:
@@ -282,40 +279,35 @@ def cap_buckets(stacked: DataFrame, max_bucket: int | None) -> DataFrame:
             "still paying the full signature cost (pass None to disable "
             "the cap)"
         )
-    others = [c for c in stacked.columns if c not in ("band", "bh")]
-    if len(others) != 1:
-        raise ValueError(
-            f"cap_buckets expects exactly one id column besides "
-            f"(band, bh), got {stacked.columns}: project extras away "
-            "first, or the distinct count silently runs over the wrong "
-            "column"
-        )
-    id_col = others[0]
     keep = (
         stacked.groupBy("band", "bh")
-        .agg(F.count_distinct(F.col(id_col)).alias("_n"))
+        .agg(F.count_distinct("doc_id").alias("_n"))
         .filter(F.col("_n") <= max_bucket)
         .select("band", "bh")
     )
     return stacked.join(keep, ["band", "bh"])
 
 
-def _pairs_from_stacked(stacked: DataFrame) -> DataFrame:
-    """Stacked bucket rows (doc_id, band, bh) -> distinct candidate pairs
-    (id_a < id_b) sharing at least one bucket — the single join tail
-    used by both the xxhash64 fast path and the portable md5 query, so
-    the pair semantics cannot drift between them."""
-    x = stacked.alias("x")
-    y = stacked.alias("y")
+def _pairs_from_stacked(
+    stacked: DataFrame, verify: F.Column | None = None
+) -> DataFrame:
+    """Stacked bucket rows (doc_id, band, bh, ...) -> distinct candidate
+    pairs (id_a < id_b) sharing at least one bucket — the single join
+    tail used by the xxhash64 fast path, the portable md5 query and the
+    verified near-dup edges, so the pair semantics cannot drift between
+    them.  `verify`, a predicate over the two sides aliased `sa` and
+    `sb`, keeps only the pairs it holds for, inside the join."""
+    on = (
+        (F.col("sa.band") == F.col("sb.band"))
+        & (F.col("sa.bh") == F.col("sb.bh"))
+        & (F.col("sa.doc_id") < F.col("sb.doc_id"))
+    )
+    if verify is not None:
+        on = on & verify
     return (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
+        stacked.alias("sa").join(stacked.alias("sb"), on)
         .select(
-            F.col("x.doc_id").alias("id_a"), F.col("y.doc_id").alias("id_b")
+            F.col("sa.doc_id").alias("id_a"), F.col("sb.doc_id").alias("id_b")
         )
         .distinct()
     )
@@ -337,32 +329,37 @@ def band_candidate_pairs(
 def signature_agreement(k: int) -> F.Column:
     """Number of equal min-hashes between the signature frames aliased
     `sa` and `sb`."""
-    return sum(
-        (F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}")).cast("int")
-        for i in range(k)
-    )
+    # one SQL expression: built from Column objects, the 32-term sum
+    # costs ~200 driver-to-JVM calls, about 0.2 s per plan
+    return F.expr(" + ".join(f"int(sa.mh{i} = sb.mh{i})" for i in range(k)))
 
 
 def near_dup_losers(
     sig: DataFrame, k: int, bands: int, need: int,
     checkpoint_dir: str | None = None, max_bucket: int | None = None,
+    counts: dict | None = None,
 ) -> DataFrame:
     """Signature frame (doc_id, mh0..mh{k-1}) -> doc_id of every
     near-dup that is not its cluster's keeper: LSH candidate pairs,
     verified by >= `need` agreeing min-hashes, clustered by connected
     components; each cluster keeps its minimum id (per-pair "drop the
-    larger" would under-drop transitive chains A~B~C).  Callers persist
-    `sig` (banding and both verify sides read it); the result reads the
-    components' checkpoint, so `sig` may be released once it is built."""
-    verified = (
-        band_candidate_pairs(sig, k, bands, max_bucket=max_bucket)
-        .join(sig.alias("sa"), F.col("id_a") == F.col("sa.doc_id"))
-        .join(sig.alias("sb"), F.col("id_b") == F.col("sb.doc_id"))
-        .filter(signature_agreement(k) >= need)
-        .select("id_a", "id_b")
-        .distinct()
+    larger" would under-drop transitive chains A~B~C).
+
+    A pair is verified where the bucket self-join emits it: the bucket
+    rows carry the signatures, so no second join fetches them and `sig`
+    has one consumer (the two join sides share its exchange).  The
+    result reads the components' checkpoint.  When `counts` is given, it
+    receives `verified_pairs` and `dropped`, observed on materialisations
+    the clustering runs anyway."""
+    verified = _pairs_from_stacked(
+        cap_buckets(band_buckets(sig, k, bands), max_bucket),
+        signature_agreement(k) >= need,
     )
-    comp = connected_components(verified, checkpoint_dir=checkpoint_dir)
+    comp, n_edges, n_moved = _components(
+        verified, checkpoint_dir=checkpoint_dir
+    )
+    if counts is not None:
+        counts.update(verified_pairs=n_edges, dropped=n_moved)
     return comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias("doc_id")
     )
@@ -533,6 +530,80 @@ def decontaminate(
     )
 
 
+def _materialize(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
+    if checkpoint_dir is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
+def _components(
+    edges: DataFrame, max_iter: int = 25, checkpoint_dir: str | None = None,
+) -> tuple[DataFrame, int, int]:
+    """`connected_components`, plus the number of input edge rows and the
+    number of output ids whose component is not themselves, both
+    observed on materialisations the rounds run anyway."""
+    if checkpoint_dir is not None:
+        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    obs = Observation()
+    # undirected edges as (src >= dst), materialised ONCE: the first
+    # round is the only reader, but the count decides whether to run one
+    e = _materialize(
+        edges.select(F.greatest("id_a", "id_b").alias("src"),
+                     F.least("id_a", "id_b").alias("dst"))
+        .observe(obs, F.count(F.lit(1)).alias("n")),
+        checkpoint_dir,
+    )
+    n_edges = int(obs.get["n"])
+
+    def labels(stars: DataFrame) -> DataFrame:
+        return stars.select(F.col("src").alias("id"),
+                            F.col("dst").alias("component"))
+
+    if n_edges == 0:
+        return labels(e), 0, 0
+    for _ in range(max_iter):
+        obs = Observation()
+        # large-star: each node u sees its whole neighbourhood n; with
+        # m = min(n + u), it keeps (u, m) and links every larger
+        # neighbour to m.  A node is settled when it is a star centre
+        # (no smaller neighbour) or a leaf (its one neighbour smaller).
+        # SQL strings cost one driver-to-JVM call per expression; Column
+        # objects cost one per expression node, ~0.1 s more per round
+        large = (
+            e.selectExpr("inline(array(named_struct('u', src, 'v', dst), "
+                         "named_struct('u', dst, 'v', src)))")
+            .groupBy("u").agg(F.expr("collect_set(v) AS n"))
+            .selectExpr("u", "n", "least(u, array_min(n)) AS m")
+            .observe(
+                obs,
+                F.expr("count_if(m < u AND size(array_remove(n, u)) > 1)"
+                       " AS unsettled"),
+                F.expr("count_if(m < u) AS leaves"),
+            )
+            .selectExpr("explode(array_union(array(u), filter(n, v -> v > u)))"
+                        " AS src", "m AS dst")
+        )
+        # small-star: each node u, with d its smaller-or-equal
+        # neighbours and m = min(d + u), keeps (u, m) and links every
+        # other member of d to m — one row per node once all are settled
+        small = (
+            large.groupBy("src").agg(F.expr("collect_set(dst) AS d"))
+            .selectExpr("src", "d", "least(src, array_min(d)) AS m")
+            .selectExpr("explode(array_union(array(src), "
+                        "filter(d, v -> v != m))) AS src", "m AS dst")
+        )
+        e = _materialize(small, checkpoint_dir)
+        if obs.get["unsettled"] == 0:
+            return labels(e), n_edges, int(obs.get["leaves"])
+    # silent non-convergence would split a real cluster into bogus
+    # components — a wrong answer is worse than an error
+    raise RuntimeError(
+        f"connected_components did not converge within max_iter="
+        f"{max_iter} rounds ({obs.get['unsettled']} nodes not yet in a "
+        "star); raise max_iter"
+    )
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
@@ -546,107 +617,36 @@ def connected_components(
 
     Near-dup pairs are transitive in practice (A~B, B~C) and per-pair
     "drop the larger" mishandles chains; clustering makes one keeper per
-    component.  Algorithm: min-label propagation — each iteration joins
-    labels across edges and takes the min of own and neighbor labels,
-    converging in O(log diameter) rounds: each round takes the min of own
-    and neighbor labels AND pointer-jumps (label := label[label], the
-    path-doubling shortcut), so even a 10^6-node path needs ~20 rounds,
-    not 10^6.  `max_iter` is a safety bound; convergence is detected via
-    an exact count of changed labels and NON-convergence raises.  Each
-    round is two shuffles keyed by id; intermediate frames are
-    checkpointed so the plan does not grow with iterations (lineage
-    blowup is the classic failure of iterative DataFrame algorithms).
+    component.  Algorithm: large-star/small-star over the edge list
+    itself (Kiveris et al., "Connected Components in MapReduce and
+    Beyond", SoCC 2014) — no labels frame and no joins.  Each round is a
+    large-star half (every node links its larger neighbours to its
+    neighbourhood minimum) then a small-star half (every node links
+    itself and its smaller neighbours to their minimum); each half is
+    one groupBy on the node, so a round is two shuffles and ONE
+    materialisation, a few Spark jobs.  The edges shrink towards one
+    star per component, centred on its minimum; rounds grow with the
+    log of the diameter (a 40-node path takes 7, a 10^5-node path 18).
+
+    Convergence test: the large-star groupBy sees every node's whole
+    neighbourhood, so an `Observation` riding the round's one
+    materialisation counts the nodes that are neither a star centre nor
+    a leaf with a single, smaller neighbour.  Zero means the round's
+    input was already one star per component, and its output is the
+    answer, one row per node.  `max_iter` is a safety bound and
+    NON-convergence raises.  A set of zero edges runs no round.  Each
+    round is checkpointed, so the plan does not grow with iterations
+    (lineage blowup is the classic failure of iterative DataFrame
+    algorithms).  A huge component puts its whole membership in one
+    group of the centre's neighbourhood: near-dup clusters are small.
 
     Durability: with `checkpoint_dir` set, rounds use RELIABLE
     `df.checkpoint()` into that directory — on a multi-executor cluster a
     lost executor recomputes from the checkpoint files instead of killing
     the job (localCheckpoint blocks are executor-local and unrecoverable
     once lineage is truncated).  Default (None) keeps the cheaper
-    `localCheckpoint`, appropriate for local mode and tests.
-
-    Cost per round is ONE Spark action: the changed-label count rides the
-    eager checkpoint via `Observation` instead of a separate count job."""
-    spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    sym = edges.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(
-        edges.select(
-            F.col("id_b").alias("src"), F.col("id_a").alias("dst")
-        )
-    ).distinct()
-    # materialize the edge set ONCE: every iteration joins against it, and
-    # an unpersisted upstream plan (e.g. the whole MinHash-LSH candidate
-    # pipeline in curate_job) would otherwise recompute per round —
-    # measured 400s vs 45s for the curation job on 5k pages
-    sym = _materialize(sym)
-    nodes = sym.select(F.col("src").alias("id")).distinct()
-    labels = nodes.select("id", F.col("id").alias("component"))
-    labels = _materialize(labels)
-    for _ in range(max_iter):
-        # neighbor's current label, min'd with own; the previous label is
-        # threaded through as old_component so change detection needs no
-        # extra self-join
-        nbr = (
-            sym.join(labels, sym["dst"] == labels["id"])
-            .select(F.col("src").alias("id"),
-                    F.col("component").alias("nbr_comp"))
-            .groupBy("id")
-            .agg(F.min("nbr_comp").alias("nbr_comp"))
-        )
-        stepped = (
-            labels.join(nbr, "id", "left")
-            .select(
-                "id",
-                F.col("component").alias("old_component"),
-                F.least(
-                    F.col("component"),
-                    F.coalesce("nbr_comp", F.col("component")),
-                ).alias("component"),
-            )
-        )
-        # pointer jump: follow the label one hop (component := its own
-        # component's label) — path doubling gives the log-round bound
-        targets = stepped.select(
-            F.col("id").alias("component"),
-            F.col("component").alias("jumped"),
-        )
-        obs = Observation()
-        new_labels = _materialize(
-            stepped.join(targets, "component", "left")
-            .select(
-                "id",
-                F.coalesce(
-                    F.least("component", "jumped"), F.col("component")
-                ).alias("component"),
-                "old_component",
-            )
-            # exact changed-label count, collected DURING the checkpoint
-            # materialization — one action per round, not two
-            .observe(obs, F.count_if(
-                F.col("component") != F.col("old_component")
-            ).alias("changed"))
-        )
-        changed = obs.get["changed"]
-        labels = new_labels.select("id", "component")
-        if changed == 0:
-            break
-    else:
-        # silent non-convergence would split a real cluster into bogus
-        # components — a wrong answer is worse than an error
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter="
-            f"{max_iter} rounds ({changed} labels still changing); raise "
-            "max_iter above the largest component diameter"
-        )
-    return labels
+    `localCheckpoint`, appropriate for local mode and tests."""
+    return _components(edges, max_iter, checkpoint_dir)[0]
 
 
 def dup_components(
@@ -902,7 +902,6 @@ def incremental_near_dedup(
     sig_b = minhash_signatures(
         batch.select("doc_id", "text"), k=k, ngram=NEAR_DUP_NGRAM
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    sig_rem = None
     try:
         cross_drops = None
         if idx_sigs is not None:
@@ -915,7 +914,7 @@ def incremental_near_dedup(
             # the whole index would add a full-index aggregate per batch
             # that grows with the corpus.
             idx_buckets = band_buckets(idx_sigs, k, bands).select(
-                F.col("doc_id").alias("corpus_id"), "band", "bh"
+                "doc_id", "band", "bh"
             )
             bb = cap_buckets(band_buckets(sig_b, k, bands), max_bucket)
             if max_bucket is not None:
@@ -925,6 +924,7 @@ def incremental_near_dedup(
                     ),
                     max_bucket,
                 )
+            idx_buckets = idx_buckets.withColumnRenamed("doc_id", "corpus_id")
             cand = (
                 bb.join(idx_buckets, ["band", "bh"])
                 .select("doc_id", "corpus_id")
@@ -947,12 +947,14 @@ def incremental_near_dedup(
                 .select("doc_id")
                 .distinct()
             ).localCheckpoint(eager=True)
-        # sig_rem feeds five consumers (pair self-join x2, verify join
-        # x2, survivor sigs) — persist for the duration of this call
+        # sig_rem feeds two consumers, the bucket self-join (whose two
+        # sides share one exchange) and the survivor sigs; each reads
+        # sig_b's cache through one anti-join against a checkpointed
+        # frame, so sig_rem itself is not persisted
         sig_rem = (
             sig_b.join(cross_drops, "doc_id", "left_anti")
             if cross_drops is not None else sig_b
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         intra_drops = near_dup_losers(
             sig_rem, k, bands, need, max_bucket=max_bucket,
         )
@@ -979,8 +981,6 @@ def incremental_near_dedup(
         # release the caches even on failure (a raised corrupt-index read
         # must not leak a persisted corpus-scale frame)
         sig_b.unpersist()
-        if sig_rem is not None:
-            sig_rem.unpersist()
     return survivors.withColumnRenamed("doc_id", id_col), survivor_sigs
 
 

@@ -20,7 +20,6 @@ import shutil
 from contextlib import contextmanager
 from urllib.parse import urlsplit
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
 
@@ -78,14 +77,11 @@ def swap_dir(out_dir: str):
 def read_index(spark, path: str) -> DataFrame | None:
     """A persisted dedup index dataset, or None when none exists yet (the
     first batch).  An interrupted swap is recovered first, or a stranded
-    index would read as missing and re-admit every duplicate.  Only
-    PATH_NOT_FOUND means "first batch": any other read error propagates,
-    or dedup would silently degrade to intra-batch."""
+    index would read as missing and re-admit every duplicate.  Only a
+    missing path means "first batch", and it is tested on the filesystem
+    before any read, so Spark logs no failed read for it.  Every read
+    error propagates, or dedup would silently degrade to intra-batch."""
     recover_interrupted_swap(path)
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        cond = e.getCondition() or ""
-        if "PATH_NOT_FOUND" not in cond and "PATH_NOT_FOUND" not in str(e):
-            raise
+    if not os.path.exists(path):
         return None
+    return spark.read.parquet(path)

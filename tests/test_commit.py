@@ -13,6 +13,7 @@ from lightly_ocr_spark.jobs.compact_job import run_compact
 from lightly_ocr_spark.jobs.crawl_job import run_crawl_batch
 from lightly_ocr_spark.jobs.curate_job import run_curate
 from lightly_ocr_spark.jobs.extract_job import run_extract
+from lightly_ocr_spark.sources.commit import read_index
 
 REMOTE = "s3a://bucket/out"
 
@@ -67,3 +68,18 @@ def test_library_layers_do_not_import_jobs():
                        for n in names):
                     offenders.append(f"{py.relative_to(root)}:{node.lineno}")
     assert offenders == []
+
+
+def test_missing_index_is_none_without_a_read(tmp_path):
+    """A first batch finds no index: read_index says so from the
+    filesystem and never asks Spark to read the path (a failed read is
+    logged as an error).  An existing index is read."""
+    class NoRead:
+        @property
+        def read(self):
+            raise LookupError("spark.read called")
+
+    assert read_index(NoRead(), str(tmp_path / "missing")) is None
+    (tmp_path / "idx").mkdir()
+    with pytest.raises(LookupError, match="spark.read called"):
+        read_index(NoRead(), str(tmp_path / "idx"))

@@ -46,6 +46,52 @@ class TestCurateJob:
         assert n_lang >= int(0.9 * n)
 
 
+class TestNearDupManifest:
+    def test_dropped_count_equals_anti_join_removals(self, spark, tmp_path):
+        """Every page passes the quality gate, so the rows lost between
+        exact dedup and the output are exactly the urls the near-dup
+        anti-join removes: the manifest's `near_dup_dropped` must equal
+        them.  Planted: six one-word mutations of base pages and a
+        two-step chain, all under urls that lose the min(url) race."""
+        import random
+
+        from lightly_ocr_spark.jobs.curate_job import run_curate
+        from lightly_ocr_spark.schemas import PAGES_SCHEMA
+
+        rng = random.Random(7)
+
+        def page(url, words):
+            html = f"<html><body><article><p>{' '.join(words)}</p>" \
+                   "</article></body></html>"
+            return (url, None, html.encode(), None, None)
+
+        base = [[f"w{rng.randrange(10**9)}" for _ in range(60)]
+                for _ in range(30)]
+        rows = [page(f"https://a.example/{i:02d}", ws)
+                for i, ws in enumerate(base)]
+        for i in range(6):
+            rows.append(page(f"https://zz.example/near{i}",
+                             base[i][:20] + ["mutated"] + base[i][21:]))
+        step = base[10][:40] + ["stepone"] + base[10][41:]
+        rows.append(page("https://zz.example/step1", step))
+        rows.append(page("https://zz.example/step2",
+                         step[:50] + ["steptwo"] + step[51:]))
+        pages = str(tmp_path / "pages")
+        spark.createDataFrame(rows, PAGES_SCHEMA).write.parquet(pages)
+
+        out = str(tmp_path / "curated")
+        m = run_curate(spark, pages, out)
+        assert m["after_exact_dedup"] == 38
+        assert m["near_dup_dropped"] == 8
+        assert m["near_verified_pairs"] >= 8
+        assert m["near_dup_dropped"] == (
+            m["after_exact_dedup"] - m["after_near_dedup_and_quality"]
+        )
+        kept = {r["url"] for r in spark.read.parquet(
+            os.path.join(out, "data")).select("url").collect()}
+        assert not any(u.startswith("https://zz.") for u in kept)
+
+
 class TestMediaLeg:
     def test_corrupt_images_dropped_valid_features_joined(
         self, spark, pages_dir, tmp_path

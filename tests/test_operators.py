@@ -189,6 +189,120 @@ class TestConnectedComponents:
         assert len(got) == 41
 
 
+def _chain_corpus(spark):
+    """Signatures of a seeded corpus: a transitive chain a~b, b~c whose
+    ends share a bucket but not enough min-hashes; a plain pair d~e;
+    four singletons; and 25 byte-identical `h` docs, whose every bucket
+    holds 25 members."""
+    import random
+
+    from lightly_ocr_spark.operators.dedup import minhash_signatures
+
+    rng = random.Random(68)
+    a = [f"chain{i}" for i in range(60)]
+    pos = rng.sample(range(60), 8)
+    b = [f"bm{j}" if j in pos[:4] else w for j, w in enumerate(a)]
+    c = [f"cm{j}" if j in pos[4:] else w for j, w in enumerate(b)]
+    d = [f"pair{i}" for i in range(60)]
+    e = d[:30] + ["pairmut"] + d[31:]
+    rows = [("a", a), ("b", b), ("c", c), ("d", d), ("e", e)]
+    rows += [(f"s{k}", [f"single{k}x{i}" for i in range(60)])
+             for k in range(4)]
+    rows += [(f"h{k:02d}", [f"hot{i}" for i in range(60)])
+             for k in range(25)]
+    return minhash_signatures(spark.createDataFrame(
+        [(i, " ".join(ws)) for i, ws in rows], "doc_id string, text string"
+    ), ngram=3).localCheckpoint(eager=True)
+
+
+class TestNearDupLosers:
+    def test_equals_candidate_rejoin_and_union_find(self, spark):
+        """The losers equal a reference built the old way: candidate
+        pairs, both signatures re-joined for verification, then a
+        sequential union-find keeping each cluster's minimum id — with
+        and without a bucket cap that removes the hot `h` buckets."""
+        from lightly_ocr_spark.operators.dedup import (
+            MINHASH_BANDS,
+            MINHASH_K,
+            band_candidate_pairs,
+            near_dup_losers,
+            signature_agreement,
+        )
+
+        sig = _chain_corpus(spark)
+        need = MINHASH_K // 2
+
+        def reference(cap):
+            cand = band_candidate_pairs(sig, max_bucket=cap)
+            verified = {
+                (r["id_a"], r["id_b"]) for r in cand
+                .join(sig.alias("sa"), F.col("id_a") == F.col("sa.doc_id"))
+                .join(sig.alias("sb"), F.col("id_b") == F.col("sb.doc_id"))
+                .filter(signature_agreement(MINHASH_K) >= need)
+                .select("id_a", "id_b").collect()
+            }
+            parent: dict = {}
+
+            def find(x):
+                while parent.setdefault(x, x) != x:
+                    x = parent[x]
+                return x
+
+            for x, y in verified:
+                rx, ry = find(x), find(y)
+                parent[max(rx, ry)] = min(rx, ry)
+            cand_set = {(r["id_a"], r["id_b"]) for r in cand.collect()}
+            return verified, cand_set, {x for x in parent if find(x) != x}
+
+        got = {}
+        for cap in (None, 20):
+            verified, cand, want = reference(cap)
+            # the chain is transitive only: its ends collide in a bucket
+            # but fail verification
+            assert {("a", "b"), ("b", "c"), ("d", "e")} <= verified
+            assert ("a", "c") in cand and ("a", "c") not in verified
+            got[cap] = {r["doc_id"] for r in near_dup_losers(
+                sig, MINHASH_K, MINHASH_BANDS, need, max_bucket=cap,
+            ).collect()}
+            assert got[cap] == want, cap
+        assert got[20] == {"b", "c", "e"}
+        assert got[None] == got[20] | {f"h{k:02d}" for k in range(1, 25)}
+
+    def test_no_near_dups_materialise_once(self, spark):
+        """With no verified pair, the edge materialisation observes zero
+        edges and no clustering round runs."""
+        from lightly_ocr_spark.operators.dedup import (
+            MINHASH_BANDS,
+            MINHASH_K,
+            minhash_signatures,
+            near_dup_losers,
+        )
+
+        sig = minhash_signatures(spark.createDataFrame(
+            [(k, " ".join(f"solo{k}x{i}" for i in range(40)))
+             for k in range(6)], "doc_id long, text string",
+        ), ngram=3)
+        cls = type(sig)
+        orig = cls.localCheckpoint
+        calls = []
+
+        def counted(self, *a, **kw):
+            calls.append(1)
+            return orig(self, *a, **kw)
+
+        cls.localCheckpoint = counted
+        counts: dict = {}
+        try:
+            losers = near_dup_losers(
+                sig, MINHASH_K, MINHASH_BANDS, MINHASH_K // 2, counts=counts
+            )
+        finally:
+            cls.localCheckpoint = orig
+        assert len(calls) == 1
+        assert losers.count() == 0
+        assert counts == {"verified_pairs": 0, "dropped": 0}
+
+
 class TestChunking:
     def test_windows_overlap_and_cover_every_token(self, spark):
         from lightly_ocr_spark.operators.textstats import chunk_docs

@@ -82,7 +82,7 @@ def main() -> None:
 
     t0 = time.time()
     sig = minhash_signatures(corpus, ngram=3)
-    stacked = band_buckets(sig).persist()
+    stacked = band_buckets(sig).select("doc_id", "band", "bh").persist()
     stacked.count()
     sig_s = round(time.time() - t0, 1)
 
