@@ -139,10 +139,14 @@ def tokenize_blocks(canon: str) -> list[Block]:
     entity-unescaped independently (per-run unescape is the spec: a tag
     interrupts a character reference).
     """
-    # Hot loop: flat locals + pre-bound methods; the emit block is
-    # duplicated for the tail on purpose.
+    # Hot loop: flat locals + pre-bound methods.
     parts = SPLIT_RE.split(canon)
-    # stride 5: [text, token, rawname, slash, tagname] * k + [tail text]
+    # stride 5: [text, token, rawname, slash, tagname] * k + [tail text].
+    # A virtual closing block tag after the tail makes the loop emit the
+    # last block itself.  It goes on the list, not on the string: an
+    # unterminated comment, raw-text element, CDATA or PI matches to
+    # end-of-string and would swallow an appended "</p>".
+    parts += ("", None, "/", "p", "")
     blocks: list[Block] = []
     pieces: list[str] = []        # unescaped text runs of current block
     link_chars = 0
@@ -210,32 +214,6 @@ def tokenize_blocks(canon: str) -> list[Block]:
                 link_depth = max(0, link_depth - 1)
             else:
                 link_depth += 1
-    run = parts[np - 1]
-    if run:
-        first = nonws_search(run)
-        if first is None:
-            append_piece(run)
-        else:
-            unescaped = unescape(run)
-            append_piece(unescaped)
-            nonws = sum(map(len, unescaped.split()))
-            total_chars += nonws
-            if link_depth > 0:
-                link_chars += nonws
-            if b_start < 0:
-                b_start = pos + first.start()
-            b_end = pos + len(run.rstrip())  # == last-nonws+1; \S and str whitespace agree (tested), no reversed copy
-    if pieces and b_start >= 0:
-        text = _normalize_block_text("".join(pieces))
-        if text:
-            words = len(text.split())
-            if not text.isascii():
-                words += len(CJK_RE.findall(text))
-            blocks.append(Block(
-                text, words, min(1.0, words / WORD_CAP),
-                (link_chars / total_chars) if total_chars > 0 else 0.0,
-                b_start, b_end,
-            ))
     return blocks
 
 

@@ -77,10 +77,11 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from lightly_ocr_spark.operators.dedup import (
+    check_max_bucket,
     incremental_exact_dedup,
     incremental_near_dedup,
     newest_per_url,
@@ -88,7 +89,7 @@ from lightly_ocr_spark.operators.dedup import (
     write_minhash_index,
 )
 from lightly_ocr_spark.operators.extract_udf import extract_pages
-from lightly_ocr_spark.operators.textstats import MIN_TOKENS, n_tokens
+from lightly_ocr_spark.operators.textstats import MIN_TOKENS, token_gate
 from lightly_ocr_spark.sources import FORMAT_GLOBS, read_pages
 from lightly_ocr_spark.sources.commit import atomic_json, require_local
 from lightly_ocr_spark.sources.warc import warc_pages_stream
@@ -100,6 +101,18 @@ def _manifest_paths(out_dir: str, batch_id: str) -> tuple[str, str]:
     d = os.path.join(out_dir, MANIFEST_DIR)
     return (os.path.join(d, f"batch-{batch_id}.json"),
             os.path.join(d, f"batch-{batch_id}.fp.json"))
+
+
+def check_crawl_options(near_max_bucket: int | None = None,
+                        stream: bool = False,
+                        checkpoint_dir: str | None = None) -> None:
+    """Every crawl option rule, in one place: raises ValueError before
+    any Spark job.  `process_pages_batch`, `run_crawl_stream` and `main`
+    (before it starts Spark: exit code 2) call it."""
+    check_max_bucket(near_max_bucket)
+    if stream and not checkpoint_dir:
+        raise ValueError("a streaming crawl requires checkpoint_dir "
+                         "(--checkpoint-dir)")
 
 
 def process_pages_batch(
@@ -120,7 +133,8 @@ def process_pages_batch(
     replay under the same batch id with DIFFERENT input fails loudly
     instead of appending fingerprints for documents that were never
     corpus-written.  Returns the batch summary (also persisted as the
-    manifest)."""
+    manifest).  `check_crawl_options` runs first."""
+    check_crawl_options(near_max_bucket)
     require_local(out_dir, index_path, near_index_path)
     os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
     mpath, fpath = _manifest_paths(out_dir, batch_id)
@@ -198,14 +212,10 @@ def process_pages_batch(
             )
         manifest = committed
     else:
-        from pyspark.sql import Observation
-
         obs = Observation(f"crawl-{batch_id}-{int(t0)}")
-        gated = (
-            survivors.withColumn("n_tokens", n_tokens().cast("long"))
-            .filter(F.col("n_tokens") >= MIN_TOKENS)
-            .observe(obs, F.count(F.lit(1)).alias("n"),
-                     F.sum(F.length("text")).alias("chars"))
+        gated = token_gate(survivors).observe(
+            obs, F.count(F.lit(1)).alias("n"),
+            F.sum(F.length("text")).alias("chars"),
         )
         batch_out = os.path.join(out_dir, f"batch={batch_id}")
         gated.write.mode("overwrite").parquet(batch_out)
@@ -286,7 +296,10 @@ def run_crawl_stream(
     the SAME per-batch commit discipline, one epoch per trigger.  Runs to
     completion of currently-available files (a production deployment
     leaves the query running); restart-safe via the streaming checkpoint
-    plus the manifest/marker idempotence."""
+    plus the manifest/marker idempotence.  `check_crawl_options` runs
+    before the stream starts."""
+    check_crawl_options(near_max_bucket, stream=True,
+                        checkpoint_dir=checkpoint_dir)
     pages = warc_pages_stream(spark, warc_dir)
     seen: list[str] = []
 
@@ -354,17 +367,16 @@ def main() -> None:
                     "--stream)")
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args()
-    if args.near_max_bucket is not None and args.near_max_bucket < 1:
-        ap.error("--near-max-bucket must be >= 1 (omit the flag to "
-                 "disable the cap; 0 would drop every bucket and "
-                 "silently disable near-dedup)")
+    try:
+        check_crawl_options(args.near_max_bucket, args.stream,
+                            args.checkpoint_dir)
+    except ValueError as e:
+        ap.error(str(e))
 
     from lightly_ocr_spark.plans.session import build_session
 
     spark = build_session("crawl-job", cores=args.cores)
     if args.stream:
-        if not args.checkpoint_dir:
-            ap.error("--stream requires --checkpoint-dir")
         out = run_crawl_stream(
             spark, args.input, args.out, args.index, args.checkpoint_dir,
             near_index_path=args.near_index,

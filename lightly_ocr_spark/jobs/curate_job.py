@@ -30,18 +30,23 @@ themselves.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from lightly_ocr_spark.operators.dedup import (
-    MINHASH_BANDS,
-    MINHASH_K,
+from lightly_ocr_spark.operators.classify import nb_load, nb_predict
+
+# NEAR_DUP_MIN_AGREEMENT is unused here but stays importable from this
+# module: perfbench/layers.py imports it from curate_job
+from lightly_ocr_spark.operators.dedup import (  # noqa: F401
     NEAR_DUP_MIN_AGREEMENT,
     NEAR_DUP_NGRAM,
+    check_max_bucket,
     min_id_per_content,
     minhash_signatures,
     near_dup_losers,
@@ -50,7 +55,16 @@ from lightly_ocr_spark.operators.dedup import (
 )
 from lightly_ocr_spark.operators.enrich import enrich_pages
 from lightly_ocr_spark.operators.extract_udf import extract_pages
-from lightly_ocr_spark.operators.textstats import MIN_TOKENS, n_tokens
+from lightly_ocr_spark.operators.multimodal import valid_media
+from lightly_ocr_spark.operators.pack import pack_chunks
+from lightly_ocr_spark.operators.textstats import (
+    MIN_TOKENS,
+    chunk_docs,
+    host_cap_df,
+    host_expr,
+    pii_scrub_df,
+    token_gate,
+)
 from lightly_ocr_spark.sources import FORMAT_GLOBS, read_pages
 from lightly_ocr_spark.sources.commit import atomic_json, require_local
 
@@ -68,8 +82,6 @@ def media_per_url(media: DataFrame) -> DataFrame:
     count and a deterministic per-url media fingerprint (sha256 over the
     sorted item hashes).  Scalars only — the curated table stays one
     row per url."""
-    from lightly_ocr_spark.operators.multimodal import valid_media
-
     hashed = media.select(
         "url", "kind", "payload", "meta",
         F.sha2(F.coalesce("payload", F.expr("X''")), 256)
@@ -89,6 +101,39 @@ def media_per_url(media: DataFrame) -> DataFrame:
     )
 
 
+def check_curate_options(
+    nb_model_path: str | None = None, nb_drop: str | None = None,
+    chunk: tuple[int, int] | None = None, shuffle_seed: int | None = None,
+    passage_dedup: tuple[int, int] | None = None,
+    near_max_bucket: int | None = None, pack_budget: int | None = None,
+) -> None:
+    """Every curate option rule, in one place: raises ValueError before
+    any Spark job, so a bad value never costs a curation run and never
+    silently changes what it computes.  `run_curate` calls it first, and
+    `main` before it starts Spark (a ValueError becomes a usage error,
+    exit code 2)."""
+    if nb_drop is not None and nb_model_path is None:
+        # without a model the gate would never run, and say nothing
+        raise ValueError("nb_drop (--nb-drop) requires nb_model_path "
+                         "(--nb-model)")
+    if passage_dedup is not None and min(passage_dedup) < 2:
+        # MIN = 1 cuts every passage: each occurs in its own doc
+        raise ValueError("passage_dedup (--passage-dedup N,MIN) needs "
+                         f"N >= 2 and MIN >= 2, got {passage_dedup}")
+    check_max_bucket(near_max_bucket)
+    if chunk is not None and not 0 < chunk[1] <= chunk[0]:
+        raise ValueError(f"chunk (--chunk W,S) needs 0 < S <= W, got {chunk}")
+    if chunk is None and (pack_budget is not None
+                          or shuffle_seed is not None):
+        # both run over the chunks/ output: without it they would be
+        # silently ignored
+        raise ValueError("pack_budget/shuffle_seed (--pack/--shuffle-seed) "
+                         "require chunk (--chunk)")
+    if pack_budget is not None and pack_budget < 1:
+        raise ValueError(f"pack_budget (--pack) must be >= 1, got "
+                         f"{pack_budget}")
+
+
 def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
                host_cap: int | None = None,
                input_format: str = "pages",
@@ -104,7 +149,10 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
                passage_dedup: tuple[int, int] | None = None,
                near_max_bucket: int | None = None,
                pack_budget: int | None = None) -> dict:
-    """Stage counts come from `observe()` accumulators riding the actions
+    """The option rules live in `check_curate_options`, which runs
+    first: a bad value raises ValueError before any Spark job.
+
+    Stage counts come from `observe()` accumulators riding the actions
     the job runs anyway — never from extra `.count()` materializations or
     re-reads of the output (cache+count of the full corpus spills and
     evicts at 100 TB).  `near_verified_pairs` and `near_dup_dropped`
@@ -112,29 +160,15 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     frames: `uniq` (DISK_ONLY — it feeds two branches: near-dup
     candidates and the anti-join; its one materialization doubles as the
     harvest point for the input/extracted counters), and `gated` only
-    when the NB gate reads it a second time.  The near-dup signatures are
-    not persisted: their one consumer is the bucket self-join, and the
-    leg's result reads the clustering's checkpoint."""
-    from pyspark.sql import Observation
-
-    if chunk is not None and not 0 < chunk[1] <= chunk[0]:
-        # validate BEFORE the pipeline runs: chunk_docs would raise the
-        # same error, but only after hours of curation work at scale
-        raise ValueError(
-            f"need 0 < stride <= window, got {chunk[1]}/{chunk[0]}"
-        )
-    if pack_budget is not None and pack_budget < 1:
-        raise ValueError(f"pack budget must be >= 1, got {pack_budget}")
-    if chunk is None and (pack_budget is not None
-                          or shuffle_seed is not None):
-        # mirror the CLI's argparse dependency for API callers: packing
-        # and the seeded shard shuffle operate on the chunks/ output —
-        # without --chunk they would be silently ignored (no packs/, no
-        # shuffle) while the caller believes they ran
-        raise ValueError(
-            "pack_budget/shuffle_seed require chunk: packing and the "
-            "seeded shard shuffle run over the chunked output"
-        )
+    when the NB gate reads it a second time; both are released after the
+    write, also when the run raises.  The near-dup signatures are not
+    persisted: their one consumer is the bucket self-join, and the leg's
+    result reads the clustering's checkpoint."""
+    check_curate_options(
+        nb_model_path=nb_model_path, nb_drop=nb_drop, chunk=chunk,
+        shuffle_seed=shuffle_seed, passage_dedup=passage_dedup,
+        near_max_bucket=near_max_bucket, pack_budget=pack_budget,
+    )
     require_local(out_dir)
     os.makedirs(out_dir, exist_ok=True)
     t0 = time.time()
@@ -149,8 +183,6 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         "url", "warc_ts", "text", "n_blocks", "extract_sha256"
     ).observe(obs_ex, F.count(F.lit(1)).alias("n"))
 
-    from pyspark import StorageLevel
-
     # url-revisit dedup FIRST: downstream stages assume url is a key —
     # duplicate urls would merge minhash tokens into one bogus signature
     # and multiply rows through the NB and media url joins
@@ -159,160 +191,150 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     uniq = min_id_per_content(one_per_url, "url").persist(
         StorageLevel.DISK_ONLY
     )
-    # one materialization: fills the DISK_ONLY cache for both downstream
-    # branches, is itself the after-exact-dedup counter, and fires the
-    # input/extracted observations exactly once (branches below hit the
-    # cache, never the upstream plan)
-    n_unique = uniq.count()
-    n_extracted = int(obs_ex.get["n"])
-    legs: dict[str, float] = {}
-    tl = time.time()
-    legs["extract_exact_dedup"] = round(tl - t0, 3)
+    cached = [uniq]
+    try:
+        # one materialization: fills the DISK_ONLY cache for both downstream
+        # branches, is itself the after-exact-dedup counter, and fires the
+        # input/extracted observations exactly once (branches below hit the
+        # cache, never the upstream plan)
+        n_unique = uniq.count()
+        n_extracted = int(obs_ex.get["n"])
+        legs: dict[str, float] = {}
+        tl = time.time()
+        legs["extract_exact_dedup"] = round(tl - t0, 3)
 
-    # the signatures have one consumer: the bucket self-join, whose two
-    # sides share one exchange, so they need no persist.
-    # checkpoint_dir: durable component checkpoints on a cluster
-    sig = minhash_signatures(
-        uniq.select(F.col("url").alias("doc_id"), "text"),
-        k=MINHASH_K,
-        ngram=NEAR_DUP_NGRAM,
-    )
-    near: dict[str, int] = {}
-    drops = near_dup_losers(
-        sig, MINHASH_K, MINHASH_BANDS,
-        need=int(NEAR_DUP_MIN_AGREEMENT * MINHASH_K),
-        checkpoint_dir=checkpoint_dir, max_bucket=near_max_bucket,
-        counts=near,
-    ).select(F.col("doc_id").alias("url"))
-    legs["near_dup_components"] = round(time.time() - tl, 3)
-    tl = time.time()
-    deduped = uniq.join(drops, "url", "left_anti")
-
-    if passage_dedup is not None:
-        # duplicate-PASSAGE removal after whole-doc dedup: shared
-        # boilerplate sentences surviving near-dedup (different docs,
-        # same license block / nav sentence) are cut at every position.
-        # The operator keeps every row and column, so the text swap is
-        # one projection in the original column order.
-        pn, pmin = passage_dedup
-        deduped = passage_dedup_docs(
-            deduped, id_col="url", n=pn, min_docs=pmin
-        ).select(
-            *[c for c in deduped.columns if c != "text"],
-            F.col("cleaned").alias("text"),
-            F.col("n_removed_tokens").alias("n_passage_tokens_cut"),
+        # the signatures have one consumer: the bucket self-join, whose two
+        # sides share one exchange, so they need no persist.
+        # checkpoint_dir: durable component checkpoints on a cluster
+        sig = minhash_signatures(
+            uniq.select(F.col("url").alias("doc_id"), "text"),
+            ngram=NEAR_DUP_NGRAM,
         )
+        near: dict[str, int] = {}
+        drops = near_dup_losers(
+            sig, checkpoint_dir=checkpoint_dir, max_bucket=near_max_bucket,
+            counts=near,
+        ).select(F.col("doc_id").alias("url"))
+        legs["near_dup_components"] = round(time.time() - tl, 3)
+        tl = time.time()
+        deduped = uniq.join(drops, "url", "left_anti")
 
-    if host_cap is not None:
-        # per-host flood guard: keep the first `host_cap` docs per host
-        # (deterministic by url), via the sharded two-phase cap so a
-        # zipf-hot host never serializes into one window-sort task
-        from lightly_ocr_spark.operators.textstats import (
-            host_cap_df,
-            host_expr,
-        )
-
-        # host_expr falls back to the parent path for authority-less URIs
-        # ('file:/...' paths), so a corpus keyed by local file URIs buckets
-        # by directory instead of collapsing into one empty-host bucket
-        host = host_expr("url")
-        deduped = host_cap_df(
-            deduped.withColumn("host", host), order_col="url", cap=host_cap
-        ).drop("host", "host_rank")
-
-    # quality gate BEFORE enrichment: no Arrow crossing is spent on rows
-    # the token filter drops
-    gated = (
-        deduped.withColumn("n_tokens", n_tokens().cast("long"))
-        .filter(F.col("n_tokens") >= MIN_TOKENS)
-    )
-    # langid + fluency + top-bigram repetition, ONE Arrow crossing of the
-    # text column, appended to the gated rows in place: the repetition
-    # fraction is ~free inside the enrichment pass (Counter per doc), vs
-    # ~110 s per 200 k docs as its own JVM pass — same tokenization
-    # contract as textstats.repetition_signals_df
-    curated = enrich_pages(gated)
-    if max_rep is not None:
-        # Gopher-style repetition gate: drop docs whose single hottest
-        # word-bigram takes more than `max_rep` of all bigrams (boilerplate
-        # and keyword-stuffing spam); opt-in
-        curated = curated.filter(
-            F.coalesce(F.col("top_bigram_frac"), F.lit(0.0)) <= max_rep
-        )
-    if min_fluency is not None:
-        # char-bigram LM gate on the enrichment column the pipeline
-        # already computed (one Arrow crossing, no extra pass).  The
-        # frozen profile models ENGLISH bigrams, so the threshold applies
-        # only to docs language-ID'd as 'en' — or 'und', which is exactly
-        # the junk target: text we can neither identify as a language nor
-        # score as fluent (keyboard mash, mojibake, binary spew).
-        # Recognized non-English text passes ungated rather than being
-        # judged against a foreign bigram table.  NULLs gate (un-scorable
-        # = un-vouchable).  English prose measures ≥ -6.2 on this
-        # profile; gibberish ≈ -9; -7 is the documented starting point.
-        lang = F.coalesce(F.col("lang_pred"), F.lit("und"))
-        curated = curated.filter(
-            (~lang.isin("en", "und"))
-            | (F.coalesce(F.col("bigram_logp"), F.lit(-999.0))
-               >= min_fluency)
-        )
-    obs_nb = None
-    if nb_model_path is not None:
-        # model-based quality gate (the fastText slot of a curation
-        # stack): score every surviving doc with the saved NB model —
-        # broadcast model join, one doc-keyed aggregate — keep the
-        # prediction as a column, and (opt-in) drop a predicted class.
-        # Runs BEFORE the PII scrub so the model sees the same raw text
-        # distribution it was trained on.
-        from lightly_ocr_spark.operators.classify import nb_load, nb_predict
-
-        wm, lm = nb_load(spark, nb_model_path)
-        # score from `gated`, not `curated`: the latter would re-run the
-        # enrichment Arrow crossing for the prediction branch (the
-        # round-3 multi-consumer-subtree lesson).  `gated` is then read
-        # twice (enrichment and scoring), so persist it or each branch
-        # recomputes the anti-join/host-cap subtree.  Scoring a few rows
-        # the repetition gate later drops is free; the left join discards
-        # them.
-        gated.persist(StorageLevel.DISK_ONLY)
-        preds = nb_predict(
-            gated.select("url", "text"), wm, lm, id_col="url"
-        ).select("url", F.col("pred_label").alias("nb_label"))
-        curated = curated.join(preds, "url", "left")
-        if nb_drop is not None:
-            obs_nb = Observation("curate-nb-dropped")
-            curated = curated.observe(
-                obs_nb,
-                F.sum(
-                    (F.coalesce(F.col("nb_label"), F.lit("")) == nb_drop)
-                    .cast("long")
-                ).alias("dropped"),
-            ).filter(
-                F.coalesce(F.col("nb_label"), F.lit("")) != nb_drop
+        if passage_dedup is not None:
+            # duplicate-PASSAGE removal after whole-doc dedup: shared
+            # boilerplate sentences surviving near-dedup (different docs,
+            # same license block / nav sentence) are cut at every position.
+            # The operator keeps every row and column, so the text swap is
+            # one projection in the original column order.
+            pn, pmin = passage_dedup
+            deduped = passage_dedup_docs(
+                deduped, id_col="url", n=pn, min_docs=pmin
+            ).select(
+                *[c for c in deduped.columns if c != "text"],
+                F.col("cleaned").alias("text"),
+                F.col("n_removed_tokens").alias("n_passage_tokens_cut"),
             )
-    if pii:
-        # redact emails / IPs / phone numbers in the final text (counts
-        # kept per doc); pure codegen'd regexp chains — no extra pass,
-        # the expressions ride the existing write plan
-        from lightly_ocr_spark.operators.textstats import pii_scrub_df
 
-        curated = pii_scrub_df(curated).withColumnRenamed(
-            "scrubbed", "text"
-        )
-    out_counts = [F.count(F.lit(1)).alias("n")]
-    if media_path is not None:
-        # left join: pages without media keep flowing.  The media counts
-        # are taken after the join, over the curated rows only, and ride
-        # the write action's observation — no extra materialization
-        curated = curated.join(
-            media_per_url(spark.read.parquet(media_path)), "url", "left"
-        )
-        out_counts += [F.sum("n_valid_media").alias("media_items"),
-                       F.count("n_valid_media").alias("media_urls")]
-    curated = curated.observe(obs_cur, *out_counts)
-    curated.write.mode("overwrite").parquet(os.path.join(out_dir, "data"))
-    if nb_model_path is not None:
-        gated.unpersist()
+        if host_cap is not None:
+            # per-host flood guard: keep the first `host_cap` docs per host
+            # (deterministic by url), via the sharded two-phase cap so a
+            # zipf-hot host never serializes into one window-sort task.
+            # host_expr falls back to the parent path for authority-less URIs
+            # ('file:/...' paths), so a corpus keyed by local file URIs buckets
+            # by directory instead of collapsing into one empty-host bucket
+            host = host_expr("url")
+            deduped = host_cap_df(
+                deduped.withColumn("host", host), order_col="url", cap=host_cap
+            ).drop("host", "host_rank")
+
+        # quality gate BEFORE enrichment: no Arrow crossing is spent on
+        # rows the token filter drops
+        gated = token_gate(deduped)
+        # langid + fluency + top-bigram repetition, ONE Arrow crossing of the
+        # text column, appended to the gated rows in place: the repetition
+        # fraction is ~free inside the enrichment pass (Counter per doc), vs
+        # ~110 s per 200 k docs as its own JVM pass — same tokenization
+        # contract as textstats.repetition_signals_df
+        curated = enrich_pages(gated)
+        if max_rep is not None:
+            # Gopher-style repetition gate: drop docs whose single hottest
+            # word-bigram takes more than `max_rep` of all bigrams (boilerplate
+            # and keyword-stuffing spam); opt-in
+            curated = curated.filter(
+                F.coalesce(F.col("top_bigram_frac"), F.lit(0.0)) <= max_rep
+            )
+        if min_fluency is not None:
+            # char-bigram LM gate on the enrichment column the pipeline
+            # already computed (one Arrow crossing, no extra pass).  The
+            # frozen profile models ENGLISH bigrams, so the threshold applies
+            # only to docs language-ID'd as 'en' — or 'und', which is exactly
+            # the junk target: text we can neither identify as a language nor
+            # score as fluent (keyboard mash, mojibake, binary spew).
+            # Recognized non-English text passes ungated rather than being
+            # judged against a foreign bigram table.  NULLs gate (un-scorable
+            # = un-vouchable).  English prose measures ≥ -6.2 on this
+            # profile; gibberish ≈ -9; -7 is the documented starting point.
+            lang = F.coalesce(F.col("lang_pred"), F.lit("und"))
+            curated = curated.filter(
+                (~lang.isin("en", "und"))
+                | (F.coalesce(F.col("bigram_logp"), F.lit(-999.0))
+                   >= min_fluency)
+            )
+        obs_nb = None
+        if nb_model_path is not None:
+            # model-based quality gate (the fastText slot of a curation
+            # stack): score every surviving doc with the saved NB model —
+            # broadcast model join, one doc-keyed aggregate — keep the
+            # prediction as a column, and (opt-in) drop a predicted class.
+            # Runs BEFORE the PII scrub so the model sees the same raw text
+            # distribution it was trained on.
+            wm, lm = nb_load(spark, nb_model_path)
+            # score from `gated`, not `curated`: the latter would re-run the
+            # enrichment Arrow crossing for the prediction branch (the
+            # round-3 multi-consumer-subtree lesson).  `gated` is then read
+            # twice (enrichment and scoring), so persist it or each branch
+            # recomputes the anti-join/host-cap subtree.  Scoring a few rows
+            # the repetition gate later drops is free; the left join discards
+            # them.
+            cached.append(gated.persist(StorageLevel.DISK_ONLY))
+            preds = nb_predict(
+                gated.select("url", "text"), wm, lm, id_col="url"
+            ).select("url", F.col("pred_label").alias("nb_label"))
+            curated = curated.join(preds, "url", "left")
+            if nb_drop is not None:
+                obs_nb = Observation("curate-nb-dropped")
+                curated = curated.observe(
+                    obs_nb,
+                    F.sum(
+                        (F.coalesce(F.col("nb_label"), F.lit("")) == nb_drop)
+                        .cast("long")
+                    ).alias("dropped"),
+                ).filter(
+                    F.coalesce(F.col("nb_label"), F.lit("")) != nb_drop
+                )
+        if pii:
+            # redact emails / IPs / phone numbers in the final text (counts
+            # kept per doc); pure codegen'd regexp chains — no extra pass,
+            # the expressions ride the existing write plan
+            curated = pii_scrub_df(curated).withColumnRenamed(
+                "scrubbed", "text"
+            )
+        out_counts = [F.count(F.lit(1)).alias("n")]
+        if media_path is not None:
+            # left join: pages without media keep flowing.  The media counts
+            # are taken after the join, over the curated rows only, and ride
+            # the write action's observation — no extra materialization
+            curated = curated.join(
+                media_per_url(spark.read.parquet(media_path)), "url", "left"
+            )
+            out_counts += [F.sum("n_valid_media").alias("media_items"),
+                           F.count("n_valid_media").alias("media_urls")]
+        curated = curated.observe(obs_cur, *out_counts)
+        curated.write.mode("overwrite").parquet(os.path.join(out_dir, "data"))
+    finally:
+        # also when the run raises: a reused session must not keep
+        # corpus-scale DISK_ONLY blocks
+        for df in cached:
+            df.unpersist()
     # passage dedup / host cap / gates / enrichment / NB / PII all ride
     # this one fused write action — the leg wall covers them jointly
     legs["gates_enrich_write"] = round(time.time() - tl, 3)
@@ -324,8 +346,6 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         # rows — reads the just-written table back (local re-scan of the
         # final, small artifact) rather than re-running the whole curation
         # plan for the explode
-        from lightly_ocr_spark.operators.textstats import chunk_docs
-
         cw, cs = chunk
         obs_chunks = Observation("curate-chunks")
         chunks = chunk_docs(
@@ -360,8 +380,6 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
             # fixed-budget training sequences (packs/ holds the
             # assignment table; the trainer joins it back on
             # (url, chunk_idx))
-            from lightly_ocr_spark.operators.pack import pack_chunks
-
             obs_packs = Observation("curate-packs")
             # size the packing partitions to the data: ~50k chunks per
             # partition bounds both the per-partition tail waste on small
@@ -422,13 +440,22 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
             manifest["pack_budget"] = pack_budget
             manifest["n_packs"] = n_packs
     atomic_json(os.path.join(out_dir, "manifest.json"), manifest)
-    uniq.unpersist()
     return manifest
 
 
-def main() -> None:
-    import argparse
+def _int_pair(text: str) -> tuple[int, int]:
+    """argparse type of the "A,B" flags (--chunk W,S, --passage-dedup
+    N,MIN): two integers; `check_curate_options` holds their rules."""
+    try:
+        a, b = (int(x) for x in text.split(","))
+    except ValueError:
+        raise argparse.ArgumentTypeError(
+            f"expected two comma-separated integers, got {text!r}"
+        ) from None
+    return a, b
 
+
+def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--pages", required=True)
     ap.add_argument("--out", required=True)
@@ -459,7 +486,7 @@ def main() -> None:
     ap.add_argument("--pii", action="store_true",
                     help="redact emails/IPs/phone numbers in the final "
                     "text (per-doc counts kept)")
-    ap.add_argument("--chunk", default=None, metavar="W,S",
+    ap.add_argument("--chunk", type=_int_pair, default=None, metavar="W,S",
                     help="also write chunks/: token windows of size W "
                     "with stride S over the curated text")
     ap.add_argument("--min-fluency", type=float, default=None,
@@ -476,46 +503,21 @@ def main() -> None:
                     help="skip LSH buckets holding more than this many "
                     "members during near-dedup (hot-bucket quadratic "
                     "guard; recall degrades gracefully via other bands)")
-    ap.add_argument("--passage-dedup", default=None, metavar="N,MIN",
+    ap.add_argument("--passage-dedup", type=_int_pair, default=None,
+                    metavar="N,MIN",
                     help="cut every N-token passage occurring in >= MIN "
                     "distinct docs (cross-doc boilerplate sentences) and "
                     "rewrite the text column")
     args = ap.parse_args()
-    if args.near_max_bucket is not None and args.near_max_bucket < 1:
-        ap.error("--near-max-bucket must be >= 1 (omit the flag to "
-                 "disable the cap; 0 would drop every bucket and "
-                 "silently disable near-dedup)")
-    if args.nb_drop and not args.nb_model:
-        ap.error("--nb-drop requires --nb-model")
-    # thin CLI mirrors of run_curate's shared validation (one copy of
-    # each RULE lives there for API callers; re-checking here turns a
-    # bad flag combination into a clean argparse exit-code-2 usage error
-    # instead of a ValueError traceback)
-    if args.chunk is None and (args.pack is not None
-                               or args.shuffle_seed is not None):
-        ap.error("--pack/--shuffle-seed require --chunk: packing and the "
-                 "seeded shard shuffle run over the chunked output")
-    if args.pack is not None and args.pack < 1:
-        ap.error(f"--pack budget must be >= 1, got {args.pack}")
-    pdd = None
-    if args.passage_dedup:
-        try:
-            pn, pmin = (int(x) for x in args.passage_dedup.split(","))
-        except ValueError:
-            ap.error("--passage-dedup expects N,MIN (two integers)")
-        if pn < 2 or pmin < 2:
-            ap.error(f"--passage-dedup needs N >= 2 and MIN >= 2, "
-                     f"got {args.passage_dedup}")
-        pdd = (pn, pmin)
-    chunk = None
-    if args.chunk:
-        try:
-            cw, cs = (int(x) for x in args.chunk.split(","))
-        except ValueError:
-            ap.error("--chunk expects W,S (two integers)")
-        if not 0 < cs <= cw:
-            ap.error(f"--chunk needs 0 < S <= W, got {args.chunk}")
-        chunk = (cw, cs)
+    checked = dict(
+        nb_model_path=args.nb_model, nb_drop=args.nb_drop, chunk=args.chunk,
+        shuffle_seed=args.shuffle_seed, passage_dedup=args.passage_dedup,
+        near_max_bucket=args.near_max_bucket, pack_budget=args.pack,
+    )
+    try:
+        check_curate_options(**checked)
+    except ValueError as e:
+        ap.error(str(e))
 
     from lightly_ocr_spark.plans.session import build_session
 
@@ -524,13 +526,8 @@ def main() -> None:
         run_curate(spark, args.pages, args.out, host_cap=args.host_cap,
                    input_format=args.format, max_rep=args.max_rep,
                    checkpoint_dir=args.checkpoint_dir,
-                   media_path=args.media,
-                   nb_model_path=args.nb_model, nb_drop=args.nb_drop,
-                   pii=args.pii, chunk=chunk,
-                   min_fluency=args.min_fluency,
-                   shuffle_seed=args.shuffle_seed,
-                   near_max_bucket=args.near_max_bucket,
-                   passage_dedup=pdd, pack_budget=args.pack)
+                   media_path=args.media, pii=args.pii,
+                   min_fluency=args.min_fluency, **checked)
     ))
 
 

@@ -22,6 +22,7 @@ signatures with the same `band_buckets` projection the batch side uses.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -47,9 +48,9 @@ def lower_words() -> F.Column:
 def word_ngrams(words: F.Column, n: int) -> F.Column:
     """Word n-gram shingles (space-joined), EMPTY array when the doc has
     fewer than n words — the single shared shingle expression used by the
-    decontamination, components, and repetition operators (and their
-    DuckDB oracles), so the slice bounds cannot drift between copies.
-    (`_tokens` keeps its separate whole-doc fallback for minhash: a short
+    minhash, decontamination, components, and repetition operators (and
+    their DuckDB oracles), so the slice bounds cannot drift between
+    copies.  (`_tokens` adds a whole-doc fallback for minhash: a short
     doc must still hash to SOMETHING there.)"""
     return F.when(
         F.size(words) >= n,
@@ -85,11 +86,7 @@ def _tokens(df: DataFrame, ngram: int = 1) -> DataFrame:
     w = df.select("doc_id", words.alias("_words"))
     wc = F.col("_words")
     shingles = F.when(
-        F.size(wc) >= ngram,
-        F.transform(
-            F.sequence(F.lit(1), F.size(wc) - ngram + 1),
-            lambda i: F.concat_ws(" ", F.slice(wc, i, ngram)),
-        ),
+        F.size(wc) >= ngram, word_ngrams(wc, ngram)
     ).otherwise(F.array(F.concat_ws(" ", wc)))
     return (
         w.select("doc_id", F.explode(F.array_distinct(shingles)).alias("tok"))
@@ -217,13 +214,13 @@ def jaccard_pairs_df(d: DataFrame, threshold: float = 0.8,
 def minhash_signatures(
     df: DataFrame, k: int = MINHASH_K, ngram: int = 1
 ) -> DataFrame:
-    """doc_id -> k-column minhash signature (one shuffle: groupBy doc_id)."""
-    toks = _tokens(df, ngram=ngram)
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("tok"))).alias(f"mh{i}")
-        for i in range(k)
-    ]
-    return toks.groupBy("doc_id").agg(*aggs)
+    """doc_id -> k-column minhash signature (one shuffle: groupBy doc_id).
+    The aggregates are SQL strings: built from Column objects, the k
+    `min(xxhash64(...))` terms cost four Python-to-JVM calls each, 0.1-0.2
+    s per plan build."""
+    return _tokens(df, ngram=ngram).groupBy("doc_id").agg(*(
+        F.expr(f"min(xxhash64({i}, tok)) AS mh{i}") for i in range(k)
+    ))
 
 
 def band_buckets(
@@ -256,6 +253,17 @@ def band_buckets(
     return sig.select("doc_id", *mh, F.inline(F.array(*buckets)))
 
 
+def check_max_bucket(max_bucket: int | None) -> None:
+    """The one rule for an LSH bucket cap, shared by `cap_buckets` and
+    the curate and crawl option checks: `None` (no cap) or >= 1."""
+    if max_bucket is not None and max_bucket < 1:
+        raise ValueError(
+            f"max_bucket (--near-max-bucket) must be >= 1, got {max_bucket}"
+            ": a non-positive cap drops every bucket, silently disabling "
+            "near-dedup (omit the cap to disable it)"
+        )
+
+
 def cap_buckets(stacked: DataFrame, max_bucket: int | None) -> DataFrame:
     """Drop LSH buckets holding more than `max_bucket` members before any
     pair/candidate join.  A mega-bucket means a DEGENERATE band hash
@@ -270,15 +278,9 @@ def cap_buckets(stacked: DataFrame, max_bucket: int | None) -> DataFrame:
     Bucket size counts DISTINCT `doc_id`s, not rows, so an id whose rows
     repeat in `stacked` never counts twice toward the cap; every other
     column rides along untouched."""
+    check_max_bucket(max_bucket)
     if max_bucket is None:
         return stacked
-    if max_bucket < 1:
-        raise ValueError(
-            f"max_bucket must be >= 1, got {max_bucket}: a non-positive "
-            "cap drops every bucket, silently disabling near-dedup while "
-            "still paying the full signature cost (pass None to disable "
-            "the cap)"
-        )
     keep = (
         stacked.groupBy("band", "bh")
         .agg(F.count_distinct("doc_id").alias("_n"))
@@ -334,16 +336,24 @@ def signature_agreement(k: int) -> F.Column:
     return F.expr(" + ".join(f"int(sa.mh{i} = sb.mh{i})" for i in range(k)))
 
 
+def _near_dup_verified() -> F.Column:
+    """`signature_agreement` reaches `NEAR_DUP_MIN_AGREEMENT`."""
+    return (signature_agreement(MINHASH_K)
+            >= int(NEAR_DUP_MIN_AGREEMENT * MINHASH_K))
+
+
 def near_dup_losers(
-    sig: DataFrame, k: int, bands: int, need: int,
-    checkpoint_dir: str | None = None, max_bucket: int | None = None,
-    counts: dict | None = None,
+    sig: DataFrame, checkpoint_dir: str | None = None,
+    max_bucket: int | None = None, counts: dict | None = None,
 ) -> DataFrame:
-    """Signature frame (doc_id, mh0..mh{k-1}) -> doc_id of every
-    near-dup that is not its cluster's keeper: LSH candidate pairs,
-    verified by >= `need` agreeing min-hashes, clustered by connected
-    components; each cluster keeps its minimum id (per-pair "drop the
-    larger" would under-drop transitive chains A~B~C).
+    """Signature frame (doc_id, mh0..mh{MINHASH_K-1}) -> doc_id of every
+    near-dup that is not its cluster's keeper: candidate pairs from the
+    `MINHASH_BANDS` LSH bands, verified when at least
+    `NEAR_DUP_MIN_AGREEMENT` of the min-hashes agree, clustered by
+    connected components; each cluster keeps its minimum id (per-pair
+    "drop the larger" would under-drop transitive chains A~B~C).  The
+    signature length, banding and threshold are this module's near-dup
+    policy, the same for every caller, so none of them is a parameter.
 
     A pair is verified where the bucket self-join emits it: the bucket
     rows carry the signatures, so no second join fetches them and `sig`
@@ -352,8 +362,7 @@ def near_dup_losers(
     receives `verified_pairs` and `dropped`, observed on materialisations
     the clustering runs anyway."""
     verified = _pairs_from_stacked(
-        cap_buckets(band_buckets(sig, k, bands), max_bucket),
-        signature_agreement(k) >= need,
+        cap_buckets(band_buckets(sig), max_bucket), _near_dup_verified()
     )
     comp, n_edges, n_moved = _components(
         verified, checkpoint_dir=checkpoint_dir
@@ -893,14 +902,10 @@ def incremental_near_dedup(
     its append drops nothing twice: `write_minhash_index` anti-joins
     already-indexed doc_ids (self-match in step 3 cannot be relied on,
     because a bucket cap legally suppresses it for capped docs)."""
-    from pyspark import StorageLevel
-
-    k, bands = MINHASH_K, MINHASH_BANDS
-    need = int(NEAR_DUP_MIN_AGREEMENT * k)
     idx_sigs = read_index(spark, f"{index_path}/sigs")
     batch = new_batch.withColumnRenamed(id_col, "doc_id")
     sig_b = minhash_signatures(
-        batch.select("doc_id", "text"), k=k, ngram=NEAR_DUP_NGRAM
+        batch.select("doc_id", "text"), ngram=NEAR_DUP_NGRAM
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         cross_drops = None
@@ -913,10 +918,10 @@ def incremental_near_dedup(
             # bucket's full membership, so the test is exact) — capping
             # the whole index would add a full-index aggregate per batch
             # that grows with the corpus.
-            idx_buckets = band_buckets(idx_sigs, k, bands).select(
+            idx_buckets = band_buckets(idx_sigs).select(
                 "doc_id", "band", "bh"
             )
-            bb = cap_buckets(band_buckets(sig_b, k, bands), max_bucket)
+            bb = cap_buckets(band_buckets(sig_b), max_bucket)
             if max_bucket is not None:
                 idx_buckets = cap_buckets(
                     idx_buckets.join(
@@ -941,9 +946,9 @@ def incremental_near_dedup(
                 cand.join(sig_b.alias("sa"), "doc_id")
                 .join(idx_sigs.select(
                     F.col("doc_id").alias("corpus_id"),
-                    *[F.col(f"mh{i}") for i in range(k)],
+                    *[F.col(f"mh{i}") for i in range(MINHASH_K)],
                 ).alias("sb"), "corpus_id")
-                .filter(signature_agreement(k) >= need)
+                .filter(_near_dup_verified())
                 .select("doc_id")
                 .distinct()
             ).localCheckpoint(eager=True)
@@ -955,9 +960,7 @@ def incremental_near_dedup(
             sig_b.join(cross_drops, "doc_id", "left_anti")
             if cross_drops is not None else sig_b
         )
-        intra_drops = near_dup_losers(
-            sig_rem, k, bands, need, max_bucket=max_bucket,
-        )
+        intra_drops = near_dup_losers(sig_rem, max_bucket=max_bucket)
         # anti-joins, not a semi-join against sig_rem: a doc with no
         # tokens has no signature at all — it cannot near-dup anything
         # and must SURVIVE, not silently vanish with the dropped set

@@ -22,18 +22,26 @@ LANG_MARKERS = [
 ]
 
 
-# the curate and crawl quality gate: minimum whitespace tokens per doc
+# `token_gate`'s threshold: minimum whitespace tokens per doc
 MIN_TOKENS = 10
 
 
 def n_tokens() -> Column:
     """Non-empty whitespace tokens in `text` — the one token count
-    behind the curate and crawl gates.  Empty pieces are dropped rather
-    than trimmed away: `F.trim` strips only spaces, so a leading or
-    trailing tab/newline would otherwise count as a phantom token."""
+    behind `token_gate`.  Empty pieces are dropped rather than trimmed
+    away: `F.trim` strips only spaces, so a leading or trailing
+    tab/newline would otherwise count as a phantom token."""
     return F.size(F.filter(
         F.split(F.col("text"), r"\s+"), lambda w: F.length(w) > 0
     ))
+
+
+def token_gate(df: DataFrame) -> DataFrame:
+    """The curate and crawl quality gate: adds `n_tokens` and keeps the
+    rows with at least `MIN_TOKENS`."""
+    return df.withColumn("n_tokens", n_tokens().cast("long")).filter(
+        F.col("n_tokens") >= MIN_TOKENS
+    )
 
 
 def _occurrences(col: Column, needle: str) -> Column:
@@ -286,8 +294,6 @@ def host_expr(url) -> "F.Column":
 def host_cap_df(d: DataFrame, order_col: str, cap: int,
                 shards: int = 8) -> DataFrame:
     """Core two-phase per-host cap over (host, <order_col>, ...) rows."""
-    from pyspark.sql import Window
-
     shard = F.crc32(F.col(order_col).cast("string")) % shards
     w1 = Window.partitionBy("host", shard).orderBy(F.col(order_col))
     survivors = (

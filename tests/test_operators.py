@@ -222,7 +222,6 @@ class TestNearDupLosers:
         sequential union-find keeping each cluster's minimum id — with
         and without a bucket cap that removes the hot `h` buckets."""
         from lightly_ocr_spark.operators.dedup import (
-            MINHASH_BANDS,
             MINHASH_K,
             band_candidate_pairs,
             near_dup_losers,
@@ -262,7 +261,7 @@ class TestNearDupLosers:
             assert {("a", "b"), ("b", "c"), ("d", "e")} <= verified
             assert ("a", "c") in cand and ("a", "c") not in verified
             got[cap] = {r["doc_id"] for r in near_dup_losers(
-                sig, MINHASH_K, MINHASH_BANDS, need, max_bucket=cap,
+                sig, max_bucket=cap,
             ).collect()}
             assert got[cap] == want, cap
         assert got[20] == {"b", "c", "e"}
@@ -272,8 +271,6 @@ class TestNearDupLosers:
         """With no verified pair, the edge materialisation observes zero
         edges and no clustering round runs."""
         from lightly_ocr_spark.operators.dedup import (
-            MINHASH_BANDS,
-            MINHASH_K,
             minhash_signatures,
             near_dup_losers,
         )
@@ -293,9 +290,7 @@ class TestNearDupLosers:
         cls.localCheckpoint = counted
         counts: dict = {}
         try:
-            losers = near_dup_losers(
-                sig, MINHASH_K, MINHASH_BANDS, MINHASH_K // 2, counts=counts
-            )
+            losers = near_dup_losers(sig, counts=counts)
         finally:
             cls.localCheckpoint = orig
         assert len(calls) == 1

@@ -118,6 +118,34 @@ fuzz_doc = st.lists(
 ).map("".join)
 
 
+TAIL_P = " ".join(f"lead{i} words" for i in range(30))
+TAIL_Q = " ".join(f"tail{i} words" for i in range(30))
+TAIL_CASES = {
+    "text_after_last_tag": f"<p>{TAIL_P}</p>{TAIL_Q}",
+    "text_only": TAIL_P,
+    "unterminated_comment": f"<p>{TAIL_P}</p><!-- open {TAIL_P}",
+    "unterminated_script": f"<p>{TAIL_P}</p><script>x = '{TAIL_P}",
+    "unterminated_cdata": f"<p>{TAIL_P}</p><![CDATA[{TAIL_P}",
+    "trailing_close_a": f"<p>{TAIL_P} <a href=x>{TAIL_P}</a>",
+    "trailing_text_in_link": f"<p>{TAIL_P}</p><a href=x>{TAIL_P}",
+    "whitespace_tail": f"<p>{TAIL_P}</p> \n\t ",
+    "empty": "",
+}
+
+
+class TestTailIdentity:
+    """The last block of a document, emitted after the final tag, is
+    identical to the oracle's in every way a document can end."""
+
+    @pytest.mark.parametrize("case", sorted(TAIL_CASES))
+    def test_tail_matches_oracle(self, case):
+        assert_identical(TAIL_CASES[case].encode())
+
+    def test_tail_text_is_a_block(self):
+        eng = extract_text(TAIL_CASES["text_after_last_tag"].encode())
+        assert eng.n_blocks == 2 and eng.text.endswith(TAIL_Q)
+
+
 class TestFuzzIdentity:
     @settings(max_examples=300, deadline=None)
     @given(fuzz_doc)
