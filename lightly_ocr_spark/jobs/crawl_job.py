@@ -84,11 +84,10 @@ from lightly_ocr_spark.operators.dedup import (
     check_max_bucket,
     incremental_exact_dedup,
     incremental_near_dedup,
-    newest_per_url,
     write_fingerprint_index,
     write_minhash_index,
 )
-from lightly_ocr_spark.operators.extract_udf import extract_pages
+from lightly_ocr_spark.operators.extract_udf import newest_extracted
 from lightly_ocr_spark.operators.textstats import MIN_TOKENS, token_gate
 from lightly_ocr_spark.sources import FORMAT_GLOBS, read_pages
 from lightly_ocr_spark.sources.commit import atomic_json, require_local
@@ -151,10 +150,7 @@ def process_pages_batch(
         legs[name] = round(time.time() - since, 3)
         return time.time()
 
-    extracted = extract_pages(pages, keep_empty=False).select(
-        "url", "warc_ts", "text", "n_blocks", "extract_sha256"
-    )
-    one_per_url = newest_per_url(extracted)
+    one_per_url = newest_extracted(pages)
     # intra-batch + cross-batch exact dedup.  The rows come back
     # materialised, so both the corpus write and the later index append
     # read them, never a plan that still references the index path.

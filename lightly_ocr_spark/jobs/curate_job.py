@@ -50,15 +50,15 @@ from lightly_ocr_spark.operators.dedup import (  # noqa: F401
     min_id_per_content,
     minhash_signatures,
     near_dup_losers,
-    newest_per_url,
     passage_dedup_docs,
 )
 from lightly_ocr_spark.operators.enrich import enrich_pages
-from lightly_ocr_spark.operators.extract_udf import extract_pages
+from lightly_ocr_spark.operators.extract_udf import newest_extracted
 from lightly_ocr_spark.operators.multimodal import valid_media
-from lightly_ocr_spark.operators.pack import pack_chunks
+from lightly_ocr_spark.operators.pack import check_pack_budget, pack_chunks
 from lightly_ocr_spark.operators.textstats import (
     MIN_TOKENS,
+    check_chunk,
     chunk_docs,
     host_cap_df,
     host_expr,
@@ -121,17 +121,16 @@ def check_curate_options(
         raise ValueError("passage_dedup (--passage-dedup N,MIN) needs "
                          f"N >= 2 and MIN >= 2, got {passage_dedup}")
     check_max_bucket(near_max_bucket)
-    if chunk is not None and not 0 < chunk[1] <= chunk[0]:
-        raise ValueError(f"chunk (--chunk W,S) needs 0 < S <= W, got {chunk}")
+    if chunk is not None:
+        check_chunk(*chunk)
     if chunk is None and (pack_budget is not None
                           or shuffle_seed is not None):
         # both run over the chunks/ output: without it they would be
         # silently ignored
         raise ValueError("pack_budget/shuffle_seed (--pack/--shuffle-seed) "
                          "require chunk (--chunk)")
-    if pack_budget is not None and pack_budget < 1:
-        raise ValueError(f"pack_budget (--pack) must be >= 1, got "
-                         f"{pack_budget}")
+    if pack_budget is not None:
+        check_pack_budget(pack_budget)
 
 
 def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
@@ -162,8 +161,8 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     harvest point for the input/extracted counters), and `gated` only
     when the NB gate reads it a second time; both are released after the
     write, also when the run raises.  The near-dup signatures are not
-    persisted: their one consumer is the bucket self-join, and the leg's
-    result reads the clustering's checkpoint."""
+    persisted: their one consumer is the bucket grouping, which reads
+    them once, and the leg's result reads the clustering's checkpoint."""
     check_curate_options(
         nb_model_path=nb_model_path, nb_drop=nb_drop, chunk=chunk,
         shuffle_seed=shuffle_seed, passage_dedup=passage_dedup,
@@ -179,14 +178,11 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         obs_in, F.count(F.lit(1)).alias("n")
     )
 
-    extracted = extract_pages(pages, keep_empty=False).select(
-        "url", "warc_ts", "text", "n_blocks", "extract_sha256"
-    ).observe(obs_ex, F.count(F.lit(1)).alias("n"))
-
     # url-revisit dedup FIRST: downstream stages assume url is a key —
     # duplicate urls would merge minhash tokens into one bogus signature
-    # and multiply rows through the NB and media url joins
-    one_per_url = newest_per_url(extracted)
+    # and multiply rows through the NB and media url joins.  obs_ex
+    # counts the non-empty docs before the revisit collapse
+    one_per_url = newest_extracted(pages, counter=obs_ex)
 
     uniq = min_id_per_content(one_per_url, "url").persist(
         StorageLevel.DISK_ONLY
@@ -203,8 +199,8 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         tl = time.time()
         legs["extract_exact_dedup"] = round(tl - t0, 3)
 
-        # the signatures have one consumer: the bucket self-join, whose two
-        # sides share one exchange, so they need no persist.
+        # the signatures have one consumer, the bucket grouping, which
+        # reads them once, so they need no persist.
         # checkpoint_dir: durable component checkpoints on a cluster
         sig = minhash_signatures(
             uniq.select(F.col("url").alias("doc_id"), "text"),

@@ -232,7 +232,7 @@ def band_buckets(
     candidate-pair generation, the curation pipeline, and both sides of
     the near-dup index probe derive buckets from here so the layout
     cannot drift.  Each row carries its doc's signature, so a pair the
-    bucket self-join emits can be verified inside that join; a caller
+    bucket grouping emits can be verified where it is emitted; a caller
     that selects only (doc_id, band, bh) lets Spark prune it."""
     if k % bands:
         raise ValueError(
@@ -290,26 +290,34 @@ def cap_buckets(stacked: DataFrame, max_bucket: int | None) -> DataFrame:
     return stacked.join(keep, ["band", "bh"])
 
 
-def _pairs_from_stacked(
-    stacked: DataFrame, verify: F.Column | None = None
-) -> DataFrame:
+def _pairs_from_stacked(stacked: DataFrame, verify: bool = False) -> DataFrame:
     """Stacked bucket rows (doc_id, band, bh, ...) -> distinct candidate
-    pairs (id_a < id_b) sharing at least one bucket — the single join
+    pairs (id_a < id_b) sharing at least one bucket — the single pair
     tail used by the xxhash64 fast path, the portable md5 query and the
     verified near-dup edges, so the pair semantics cannot drift between
-    them.  `verify`, a predicate over the two sides aliased `sa` and
-    `sb`, keeps only the pairs it holds for, inside the join."""
-    on = (
-        (F.col("sa.band") == F.col("sb.band"))
-        & (F.col("sa.bh") == F.col("sb.bh"))
-        & (F.col("sa.doc_id") < F.col("sb.doc_id"))
-    )
-    if verify is not None:
-        on = on & verify
+    them.  One groupBy(band, bh) collects each bucket's members sorted by
+    doc_id, and one array expression emits its pairs i < j.  A grouping,
+    not a self-join: under AQE, the two sides of a self-join are planned
+    apart, each with its own copy of everything upstream (the shingle
+    explode and the signature aggregation), with no reused exchange.
+    With `verify`, only pairs whose signatures, the mh columns each
+    bucket row carries, reach `NEAR_DUP_MIN_AGREEMENT` are kept.  A
+    bucket's kept pairs form one array, so a hot bucket costs memory
+    quadratic in its size: `cap_buckets` is the guard."""
+    members = ["doc_id"]
+    keep = "m[i].doc_id < m[j].doc_id"
+    if verify:
+        members += [f"mh{i}" for i in range(MINHASH_K)]
+        keep += f" AND {_near_dup_test('m[i]', 'm[j]')}"
     return (
-        stacked.alias("sa").join(stacked.alias("sb"), on)
-        .select(
-            F.col("sa.doc_id").alias("id_a"), F.col("sb.doc_id").alias("id_b")
+        stacked.groupBy("band", "bh")
+        .agg(F.expr(f"array_sort(collect_list(struct({', '.join(members)})))"
+                    " AS m"))
+        .filter("size(m) > 1")
+        .selectExpr(
+            "inline(flatten(transform(sequence(0, size(m) - 2), i -> "
+            f"transform(filter(sequence(i + 1, size(m) - 1), j -> {keep}), "
+            "j -> named_struct('id_a', m[i].doc_id, 'id_b', m[j].doc_id)))))"
         )
         .distinct()
     )
@@ -321,25 +329,30 @@ def band_candidate_pairs(
 ) -> DataFrame:
     """Signature frame (doc_id, mh0..mh{k-1}) -> distinct candidate pairs
     (id_a < id_b) sharing at least one LSH band hash, via the shared
-    `band_buckets` projection and a self-equi-join on (band, hash).
+    `band_buckets` projection and one grouping on (band, hash).
     `max_bucket` skips degenerate hot buckets (see `cap_buckets`)."""
     return _pairs_from_stacked(
         cap_buckets(band_buckets(sig, k, bands), max_bucket)
     )
 
 
+def _agreement(a: str, b: str, k: int = MINHASH_K) -> str:
+    """SQL: the number of equal min-hashes between signatures `a` and
+    `b`.  One SQL expression: built from Column objects, the 32-term sum
+    costs ~200 driver-to-JVM calls, about 0.2 s per plan."""
+    return " + ".join(f"int({a}.mh{i} = {b}.mh{i})" for i in range(k))
+
+
 def signature_agreement(k: int) -> F.Column:
     """Number of equal min-hashes between the signature frames aliased
     `sa` and `sb`."""
-    # one SQL expression: built from Column objects, the 32-term sum
-    # costs ~200 driver-to-JVM calls, about 0.2 s per plan
-    return F.expr(" + ".join(f"int(sa.mh{i} = sb.mh{i})" for i in range(k)))
+    return F.expr(_agreement("sa", "sb", k))
 
 
-def _near_dup_verified() -> F.Column:
-    """`signature_agreement` reaches `NEAR_DUP_MIN_AGREEMENT`."""
-    return (signature_agreement(MINHASH_K)
-            >= int(NEAR_DUP_MIN_AGREEMENT * MINHASH_K))
+def _near_dup_test(a: str, b: str) -> str:
+    """SQL: signatures `a` and `b` agree on at least
+    `NEAR_DUP_MIN_AGREEMENT` of their min-hashes."""
+    return f"{_agreement(a, b)} >= {int(NEAR_DUP_MIN_AGREEMENT * MINHASH_K)}"
 
 
 def near_dup_losers(
@@ -355,14 +368,14 @@ def near_dup_losers(
     signature length, banding and threshold are this module's near-dup
     policy, the same for every caller, so none of them is a parameter.
 
-    A pair is verified where the bucket self-join emits it: the bucket
-    rows carry the signatures, so no second join fetches them and `sig`
-    has one consumer (the two join sides share its exchange).  The
-    result reads the components' checkpoint.  When `counts` is given, it
-    receives `verified_pairs` and `dropped`, observed on materialisations
-    the clustering runs anyway."""
+    A pair is verified where the bucket grouping emits it: the bucket
+    rows carry the signatures, so no join fetches them, and `sig` has
+    one consumer, read once.  The result reads the components'
+    checkpoint.  When `counts` is given, it receives `verified_pairs`
+    and `dropped`, observed on materialisations the clustering runs
+    anyway."""
     verified = _pairs_from_stacked(
-        cap_buckets(band_buckets(sig), max_bucket), _near_dup_verified()
+        cap_buckets(band_buckets(sig), max_bucket), verify=True
     )
     comp, n_edges, n_moved = _components(
         verified, checkpoint_dir=checkpoint_dir
@@ -948,14 +961,13 @@ def incremental_near_dedup(
                     F.col("doc_id").alias("corpus_id"),
                     *[F.col(f"mh{i}") for i in range(MINHASH_K)],
                 ).alias("sb"), "corpus_id")
-                .filter(_near_dup_verified())
+                .filter(_near_dup_test("sa", "sb"))
                 .select("doc_id")
                 .distinct()
             ).localCheckpoint(eager=True)
-        # sig_rem feeds two consumers, the bucket self-join (whose two
-        # sides share one exchange) and the survivor sigs; each reads
-        # sig_b's cache through one anti-join against a checkpointed
-        # frame, so sig_rem itself is not persisted
+        # sig_rem feeds two consumers, the bucket grouping and the
+        # survivor sigs; each reads sig_b's cache through one anti-join
+        # against a checkpointed frame, so sig_rem itself is not persisted
         sig_rem = (
             sig_b.join(cross_drops, "doc_id", "left_anti")
             if cross_drops is not None else sig_b

@@ -18,10 +18,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from lightly_ocr_spark.functions.extract import extract_batch
+from lightly_ocr_spark.operators.dedup import newest_per_url
 from lightly_ocr_spark.schemas import EXTRACT_RAW_SCHEMA
 
 
@@ -58,6 +59,22 @@ def extract_pages(pages: DataFrame, keep_empty: bool = True) -> DataFrame:
     if not keep_empty:
         out = out.filter(F.length("text") > 0)
     return out
+
+
+def newest_extracted(
+    pages: DataFrame, counter: Observation | None = None
+) -> DataFrame:
+    """The prefix of the curate job and of each crawl batch: extract,
+    drop empty docs, keep the five columns the jobs read (url, warc_ts,
+    text, n_blocks, extract_sha256), then collapse url revisits to the
+    newest fetch (`newest_per_url`) — downstream, url is a key.
+    `counter` observes the non-empty rows before the collapse as `n`."""
+    extracted = extract_pages(pages, keep_empty=False).select(
+        "url", "warc_ts", "text", "n_blocks", "extract_sha256"
+    )
+    if counter is not None:
+        extracted = extracted.observe(counter, F.count(F.lit(1)).alias("n"))
+    return newest_per_url(extracted)
 
 
 def _dense_ascii_docs(spark, sf_dir: str) -> DataFrame:

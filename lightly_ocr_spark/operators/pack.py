@@ -37,6 +37,13 @@ PACK_SCHEMA = ("pack_id string, url string, chunk_idx int, "
                "n_tokens int, pack_seq int")
 
 
+def check_pack_budget(budget: int) -> None:
+    """The one rule for a packing budget, shared by `pack_chunks` and the
+    curate option check: at least one token."""
+    if budget < 1:
+        raise ValueError(f"pack budget (--pack) must be >= 1, got {budget}")
+
+
 def pack_chunks(
     chunks: DataFrame, budget: int = 1024, partitions: int = 200,
 ) -> DataFrame:
@@ -49,8 +56,7 @@ def pack_chunks(
     pack of its own (the caller's chunker controls max chunk size, so
     this is the never-drop-data fallback, not a normal path).
     `pack_seq` is the chunk's position within its pack."""
-    if budget < 1:
-        raise ValueError(f"budget must be >= 1, got {budget}")
+    check_pack_budget(budget)
 
     def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cur_id: str | None = None

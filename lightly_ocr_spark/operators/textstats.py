@@ -437,6 +437,14 @@ def repetition_signals_df(d: DataFrame) -> DataFrame:
     )
 
 
+def check_chunk(window: int, stride: int) -> None:
+    """The one rule for token-window chunking, shared by `chunk_docs`
+    and the curate option check: 0 < stride <= window."""
+    if not 0 < stride <= window:
+        raise ValueError(f"chunk (--chunk W,S) needs 0 < stride <= window, "
+                         f"got window={window}, stride={stride}")
+
+
 def chunk_docs(
     d: DataFrame, id_col: str = "doc_id", window: int = 64, stride: int = 48,
 ) -> DataFrame:
@@ -453,8 +461,7 @@ def chunk_docs(
     the final chunk may be short, every earlier chunk is exactly `window`
     tokens.  Empty/whitespace-only and null documents contribute NO rows
     (a zero-token empty-string training example is never emitted)."""
-    if not 0 < stride <= window:
-        raise ValueError(f"need 0 < stride <= window, got {stride}/{window}")
+    check_chunk(window, stride)
     # materialize the token array first — an inlined split is re-evaluated
     # by every interpreted lambda element (the `_tokens` lesson)
     d = d.select(F.col(id_col), F.filter(

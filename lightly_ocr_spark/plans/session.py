@@ -10,7 +10,19 @@ choices.  All settings are plain public Spark configuration:
   (`dataset.py:68-101`, batch 64);
 * shuffle partitions sized to cores for local runs — on a real cluster pass
   ``spark.sql.shuffle.partitions`` ≈ 2-3× total executor cores via
-  ``spark-submit --conf``.
+  ``spark-submit --conf``;
+* a generated-class cache that holds every job's working set — the analog
+  of the reference preparing its model once and serving every call from
+  it (`pipeline.py:106-112`).  Spark keys each Janino-compiled class by
+  its generated source and keeps at most
+  ``spark.sql.codegen.cache.maxEntries`` of them, LRU; the default is 100.
+  One curate call on the perfbench corpus generates over 100 classes
+  (the first call of a session 125-135), so at 100 every warm call
+  evicted what the next one needed: it recompiled 104 classes, and each
+  warm crawl batch 58-63.  Sized to the largest measured working set
+  (CODEGEN_CACHE_ENTRIES), a warm repeat compiles none.  A static conf:
+  it applies only when the builder creates the session, so a session
+  that already exists in the JVM keeps its own value.
 """
 
 from __future__ import annotations
@@ -29,6 +41,16 @@ ARROW_BATCH_ROWS = 512
 # handful of scan partitions and strands cores.  16 MB keeps local[N] busy;
 # on a real cluster with ~1 GB files the default is fine (override per job).
 MAX_PARTITION_BYTES = "16m"
+
+# Generated classes kept per JVM (spark.sql.codegen.cache.maxEntries).
+# Distinct classes one session compiles, counted with a cache too large
+# to evict (JVM counter CodegenMetrics.METRIC_COMPILATION_TIME, 4 cores):
+# the tier-1 suite 1,686; the 54 driver queries at sf0.1 597; a session
+# running extract, curate (perfbench options, then every leg on) and three
+# crawl batches with a compaction, twice, 252; perfbench --trace 1 curate
+# 335 and extract 319.  4,000 is 2.4x the largest.  Each retained class
+# costs metaspace (tens of KB), not heap.
+CODEGEN_CACHE_ENTRIES = 4000
 
 
 def build_session(
@@ -76,6 +98,8 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

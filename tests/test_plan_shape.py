@@ -234,3 +234,46 @@ class TestIncrementalNearDedupPlanShape:
         for plan in plans:
             assert "CartesianProduct" not in plan
             assert "BroadcastNestedLoopJoin" not in plan
+
+
+class TestNearDupSignaturesOnce:
+    def test_one_signature_aggregate_over_the_input(self, spark, monkeypatch):
+        """Curate's near-dup leg reads a persisted frame.  Under AQE, a
+        bucket self-join planned one signature branch per join side (two
+        shingle explodes, two 32-min-hash aggregates, no reused
+        exchange); the bucket grouping reads the signatures once.  Each
+        frame `near_dup_losers` materialises is checked in its final
+        adaptive plan, taken after its action."""
+        from pyspark import StorageLevel
+
+        from lightly_ocr_spark.operators.dedup import (
+            minhash_signatures,
+            near_dup_losers,
+        )
+
+        base = [" ".join(f"s{i}w{j}" for j in range(40)) for i in range(10)]
+        docs = spark.createDataFrame(
+            [(f"d{i:03d}", f"{base[i % 10]} tail{i}") for i in range(60)],
+            "doc_id string, text string",
+        ).persist(StorageLevel.DISK_ONLY)
+        plans = []
+        frame_cls = type(docs)
+        checkpoint = frame_cls.localCheckpoint
+
+        def recording(df, *args, **kwargs):
+            out = checkpoint(df, *args, **kwargs)
+            plans.append(df._jdf.queryExecution().executedPlan()
+                         .executedPlan().toString())
+            return out
+
+        monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+        try:
+            losers = near_dup_losers(minhash_signatures(docs, ngram=3))
+            assert losers.count() == 50
+        finally:
+            docs.unpersist()
+        lines = [ln for p in plans for ln in p.splitlines()]
+        assert sum("partial_min(xxhash64" in ln for ln in lines) == 1, plans
+        assert sum("Generate explode(array_distinct" in ln
+                   for ln in lines) == 1, plans
+        assert sum("InMemoryTableScan" in ln for ln in lines) == 1, plans
