@@ -296,29 +296,28 @@ def _pairs_from_stacked(stacked: DataFrame, verify: bool = False) -> DataFrame:
     tail used by the xxhash64 fast path, the portable md5 query and the
     verified near-dup edges, so the pair semantics cannot drift between
     them.  One groupBy(band, bh) collects each bucket's members sorted by
-    doc_id, and one array expression emits its pairs i < j.  A grouping,
-    not a self-join: under AQE, the two sides of a self-join are planned
-    apart, each with its own copy of everything upstream (the shingle
-    explode and the signature aggregation), with no reused exchange.
-    With `verify`, only pairs whose signatures, the mh columns each
-    bucket row carries, reach `NEAR_DUP_MIN_AGREEMENT` are kept.  A
-    bucket's kept pairs form one array, so a hot bucket costs memory
-    quadratic in its size: `cap_buckets` is the guard."""
+    doc_id; each member then pairs with the members after it, one member
+    per row, so a row holds one bucket's members and never its pairs, and
+    the pair test is a compiled filter.  A grouping, not a self-join:
+    under AQE, the two sides of a self-join are planned apart, each with
+    its own copy of everything upstream (the shingle explode and the
+    signature aggregation), with no reused exchange.  With `verify`,
+    only pairs whose signatures, the mh columns each bucket row carries,
+    reach `NEAR_DUP_MIN_AGREEMENT` are kept."""
     members = ["doc_id"]
-    keep = "m[i].doc_id < m[j].doc_id"
+    keep = "a.doc_id < b.doc_id"
     if verify:
         members += [f"mh{i}" for i in range(MINHASH_K)]
-        keep += f" AND {_near_dup_test('m[i]', 'm[j]')}"
+        keep += f" AND {_near_dup_test('a', 'b')}"
     return (
         stacked.groupBy("band", "bh")
         .agg(F.expr(f"array_sort(collect_list(struct({', '.join(members)})))"
                     " AS m"))
         .filter("size(m) > 1")
-        .selectExpr(
-            "inline(flatten(transform(sequence(0, size(m) - 2), i -> "
-            f"transform(filter(sequence(i + 1, size(m) - 1), j -> {keep}), "
-            "j -> named_struct('id_a', m[i].doc_id, 'id_b', m[j].doc_id)))))"
-        )
+        .selectExpr("posexplode(m) AS (i, a)", "m")
+        .selectExpr("a", "explode(slice(m, i + 2, size(m))) AS b")
+        .filter(keep)
+        .selectExpr("a.doc_id AS id_a", "b.doc_id AS id_b")
         .distinct()
     )
 

@@ -297,6 +297,41 @@ class TestNearDupLosers:
         assert losers.count() == 0
         assert counts == {"verified_pairs": 0, "dropped": 0}
 
+    def test_hot_bucket_without_cap(self, spark):
+        """Thousands of identical signatures share one bucket per band
+        and no cap removes them: every pair is emitted and verified, and
+        the pair tail keeps one member's partners per row, never a
+        bucket's pairs in one row."""
+        from lightly_ocr_spark.operators.dedup import (
+            MINHASH_K,
+            _pairs_from_stacked,
+            band_buckets,
+            near_dup_losers,
+        )
+
+        def same_sig(n):
+            return spark.range(n).select(
+                F.col("id").alias("doc_id"),
+                *[F.lit(7 * i).cast("long").alias(f"mh{i}")
+                  for i in range(MINHASH_K)],
+            )
+
+        n = 3000
+        pairs = _pairs_from_stacked(
+            band_buckets(same_sig(n)).filter("band = 0"), verify=True
+        )
+        got = pairs.agg(F.count("*").alias("c"), F.min("id_a").alias("lo"),
+                        F.max("id_b").alias("hi")).first()
+        assert (got["c"], got["lo"], got["hi"]) == (n * (n - 1) // 2, 0, n - 1)
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        assert "flatten(" not in plan and "transform(" not in plan, plan
+
+        n = 500
+        counts: dict = {}
+        losers = near_dup_losers(same_sig(n), counts=counts)
+        assert losers.count() == n - 1
+        assert counts == {"verified_pairs": n * (n - 1) // 2, "dropped": n - 1}
+
 
 class TestChunking:
     def test_windows_overlap_and_cover_every_token(self, spark):
